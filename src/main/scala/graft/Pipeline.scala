@@ -35,45 +35,64 @@ object Pipeline {
     * engine-created caches, never the caller's. */
   def clearIntermediateCaches(spark: SparkSession): Unit = IntermediateCaches.clear(spark)
 
+  /** The dedup stages, wired once. Each stage is built lazily, on first
+    * use, and handed to `at(name, stage)` — the entry point's
+    * materialization policy — which returns the frame every downstream
+    * stage consumes: the plan itself, a tracked cache of it, or a
+    * committed snapshot read back. Stages in pipeline order: survivors,
+    * holdouts, signatures, candidates, scored, edges, assignments. */
+  private final class StageGraph(spark: SparkSession, input: DataFrame, cfg: EngineConfig,
+                                 at: (String, => DataFrame) => DataFrame) {
+    GraftFunctions.register(spark)
+    // ONE split feeds both survivors and holdouts: building it twice would
+    // run the full-corpus exact-dedup shuffle twice — the widest stage in
+    // the pipeline. The persist flags keep the second consumer on the
+    // materialized intermediate instead of a rebuilt plan. lazy: a fully
+    // resumed run never builds it.
+    private lazy val split =
+      if (cfg.exactDedupByHash) ExactDedup.splitByHash(input, persistHoldouts = true)
+      else ExactDedup.split(input, persistRanked = true)
+    lazy val survivors: DataFrame = at("survivors", split._1)
+    lazy val holdouts: DataFrame = at("holdouts", split._2)
+    lazy val signatures: DataFrame = at("signatures",
+      Signatures.withSignatures(survivors, cfg).select("id", "minhash", "simhash"))
+    lazy val candidates: DataFrame = at("candidates", Blocking.candidatePairs(signatures, cfg))
+    lazy val scored: DataFrame = at("scored", {
+      val raw = Scoring.score(candidates, signatures, cfg)
+      if (cfg.exactVerify) Scoring.exactVerify(raw, survivors, cfg) else raw
+    })
+    /** Winnowing substring edges (src, dst, shared_fps) — no boundary of
+      * their own: they enter `edges`, and [[run]]'s lineage reads them. */
+    lazy val substringEdges: DataFrame = Substring.edges(survivors, cfg)
+    lazy val edges: DataFrame = at("edges",
+      Scoring.edges(scored).unionByName(substringEdges.select("src", "dst")))
+    // cluster survivors; holdouts re-attach via master (J4 semantics:
+    // cluster of master, falling back to own master id,
+    // person_1/link_model_per.py:950-953)
+    lazy val assignments: DataFrame = at("assignments", ExactDedup.reattach(
+      ConnectedComponents.assign(spark, survivors.select("id"), edges, cfg.maxCcIterations,
+        cfg.reliableCheckpoints, cfg.ccFastPathMaxEdges),
+      holdouts))
+  }
+
+  /** Boundary policy: cache (engine-tracked) the named stages, pass the
+    * rest through as plans. */
+  private def persistAt(names: String*): (String, => DataFrame) => DataFrame =
+    (name, stage) => if (names.contains(name)) IntermediateCaches.persistTracked(stage) else stage
+
   /** Run over a doc table with columns (id:long, text:string, url, warc_ts,
     * lang). Use [[fromPages]] first if starting from raw html.
     *
     * Cache contract: internal intermediates are persisted and tracked;
     * call [[clearIntermediateCaches]] once the Result frames are consumed. */
-  def run(spark: SparkSession, docs: DataFrame, cfg: EngineConfig = EngineConfig.default,
-          substringPass: Boolean = true): Result = {
-    GraftFunctions.register(spark)
+  def run(spark: SparkSession, docs: DataFrame, cfg: EngineConfig = EngineConfig.default): Result = {
     // persistTracked is a no-op on an already-persisted plan, so a
     // CALLER-persisted input is reused untouched (and never tracked —
     // clearIntermediateCaches must not evict the caller's cache)
     val input = IntermediateCaches.persistTracked(docs)
-
-    val (survivors, holdouts) =
-      if (cfg.exactDedupByHash) ExactDedup.splitByHash(input, persistHoldouts = true)
-      else ExactDedup.split(input, persistRanked = true)
-    val sigs = IntermediateCaches.persistTracked(
-      Signatures.withSignatures(survivors, cfg).select("id", "minhash", "simhash"))
-
-    val candidates = IntermediateCaches.persistTracked(Blocking.candidatePairs(sigs, cfg))
-    val rawScored = Scoring.score(candidates, sigs, cfg)
-    val scored = IntermediateCaches.persistTracked(
-      if (cfg.exactVerify) Scoring.exactVerify(rawScored, survivors, cfg) else rawScored)
-    val simEdges = Scoring.edges(scored)
-    val subEdges =
-      if (substringPass) Substring.edges(survivors, cfg)
-      else spark.emptyDataFrame
-        .withColumn("src", lit(0L)).withColumn("dst", lit(0L))
-        .withColumn("shared_fps", lit(0L)).limit(0)
-    val allEdges = IntermediateCaches.persistTracked(
-      simEdges.unionByName(subEdges.select("src", "dst")))
-
-    // cluster survivors; holdouts re-attach via master (J4 semantics:
-    // cluster of master, falling back to own master id,
-    // person_1/link_model_per.py:950-953)
-    val survivorAssign = ConnectedComponents.assign(
-      spark, survivors.select("id"), allEdges, cfg.maxCcIterations,
-      cfg.reliableCheckpoints, cfg.ccFastPathMaxEdges)
-    val assignments = ExactDedup.reattach(survivorAssign, holdouts)
+    val g = new StageGraph(spark, input, cfg,
+      persistAt("signatures", "candidates", "scored", "edges"))
+    val assignments = g.assignments
 
     // cluster-row lineage (the reference's main human-facing table,
     // person_1/link_model_per.py:1064-1129 + :1219-1262): gammas of the
@@ -81,37 +100,38 @@ object Pipeline {
     // label. Substring edges lacking signature gammas join as
     // reason="substring" (anti-joined so a pair found by both passes keeps
     // its scored gammas).
-    val scoredDirect = scored.filter(col("level") >= 1)
+    val scoredDirect = g.scored.filter(col("level") >= 1)
       .select("id_l", "id_r", "jaccard_est", "hamming", "level", "reason")
-    val subDirect = subEdges.select(col("src").as("id_l"), col("dst").as("id_r"))
+    val subDirect = g.substringEdges.select(col("src").as("id_l"), col("dst").as("id_r"))
       .join(scoredDirect.select("id_l", "id_r"), Seq("id_l", "id_r"), "left_anti")
       .select(col("id_l"), col("id_r"),
         lit(null).cast("double").as("jaccard_est"), lit(null).cast("int").as("hamming"),
         lit(1).as("level"), lit("substring").as("reason"))
     val lineage = Lineage.clusterRows(
-      assignments, scoredDirect.unionByName(subDirect), holdouts.select("id"))
+      assignments, scoredDirect.unionByName(subDirect), g.holdouts.select("id"))
 
-    val counters = pipelineCounters(input, holdouts, candidates, allEdges, assignments)
+    val counters = pipelineCounters(input, g.holdouts, g.candidates, g.edges, assignments)
     // telemetry AFTER the action (the bounded collects fire while the
     // metrics job materializes CC + PairGen): observed headroom of every
     // driver-side bound rides the same table an operator already watches
     val metrics = stageMetrics(spark, counters ++ ScaleStats.snapshot())
 
-    Result(assignments, scored.filter(col("level") >= 1), lineage, metrics)
+    Result(assignments, g.scored.filter(col("level") >= 1), lineage, metrics)
   }
 
   /** Pipeline without the metrics actions — returns lazy assignments only
     * (used by the driver-facing queries where the caller counts). */
-  def runLite(spark: SparkSession, docs: DataFrame, cfg: EngineConfig = EngineConfig.default,
-              substringPass: Boolean = true): DataFrame = {
-    GraftFunctions.register(spark)
-    // only (id, text) are consumed downstream — dropping url/warc_ts/lang
-    // up front keeps them out of every downstream exchange and cache
-    val projected = docs.select("id", "text")
-    val (survivors0, holdouts) =
-      if (cfg.exactDedupByHash) ExactDedup.splitByHash(projected, persistHoldouts = true)
-      else ExactDedup.split(projected, persistRanked = true)
-    // survivors feed several downstream jobs (signatures, exact verify,
+  def runLite(spark: SparkSession, docs: DataFrame,
+              cfg: EngineConfig = EngineConfig.default): DataFrame = {
+    // signatures feed bucket explosion AND both sides of the scoring join —
+    // 128-perm MinHash is the most expensive narrow transform in the
+    // pipeline, computed once, cached. Candidates persist (as in run()):
+    // exactVerify's plan references the scoring subtree from the id
+    // semi-join, the exact join, and the below-threshold union — composed
+    // repeated subtrees that exchange reuse cannot be relied on to
+    // collapse; the pair-dedup shuffle would re-execute per reference at
+    // full candidate volume.
+    // Survivors feed several downstream jobs (signatures, exact verify,
     // substring). When the CALLER's doc table is uncached, cache the
     // compact (id, text) form once; when the caller already persisted the
     // input (the bench corpus, any warehouse-cached table), survivors
@@ -120,34 +140,17 @@ object Pipeline {
     // cache of ~the same bytes bought nothing but the storage write
     // (guide §5: cache only when recompute beats the memory pressure;
     // same shape run() has always used over its persisted input).
-    val survivors =
-      if (docs.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        IntermediateCaches.persistTracked(survivors0)
-      else survivors0
-    // signatures feed bucket explosion AND both sides of the scoring join —
-    // 128-perm MinHash is the most expensive narrow transform in the
-    // pipeline, computed once, cached
-    val sigs = IntermediateCaches.persistTracked(
-      Signatures.withSignatures(survivors, cfg).select("id", "minhash", "simhash"))
-    // candidates persist (as in run()): exactVerify's plan references the
-    // scoring subtree from the id semi-join, the exact join, and the
-    // below-threshold union — composed repeated subtrees that exchange
-    // reuse cannot be relied on to collapse; the pair-dedup shuffle would
-    // re-execute per reference at full candidate volume
-    val candidates = IntermediateCaches.persistTracked(Blocking.candidatePairs(sigs, cfg))
-    val rawScored = Scoring.score(candidates, sigs, cfg)
-    val scored = if (cfg.exactVerify) Scoring.exactVerify(rawScored, survivors, cfg)
-      else rawScored
-    val simEdges = Scoring.edges(scored)
-    val allEdges =
-      if (substringPass)
-        simEdges.unionByName(Substring.edges(survivors, cfg).select("src", "dst"))
-      else simEdges
-    val survivorAssign = ConnectedComponents.assign(
-      spark, survivors.select("id"), allEdges, cfg.maxCcIterations,
-      cfg.reliableCheckpoints, cfg.ccFastPathMaxEdges)
-    ExactDedup.reattach(survivorAssign, holdouts)
+    val cached = Seq("signatures", "candidates") ++
+      (if (docs.storageLevel == org.apache.spark.storage.StorageLevel.NONE) Seq("survivors")
+       else Nil)
+    // only (id, text) are consumed downstream — dropping url/warc_ts/lang
+    // up front keeps them out of every downstream exchange and cache
+    new StageGraph(spark, docs.select("id", "text"), cfg, persistAt(cached: _*)).assignments
   }
+
+  /** Snapshot stages of [[runResumable]], in commit order. */
+  private[graft] val SnapshotStages =
+    Seq("survivors", "holdouts", "signatures", "edges", "assignments")
 
   /** Resumable pipeline: every stage boundary is an Iceberg-style snapshot
     * commit ([[graft.io.SnapshotStore]]). A killed run restarts from the
@@ -158,48 +161,24 @@ object Pipeline {
     * committed alongside (`lineage_*` snapshots). */
   def runResumable(spark: SparkSession, docs: DataFrame, storeRoot: String,
                    cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    GraftFunctions.register(spark)
     val store = new graft.io.SnapshotStore(storeRoot)
     val fp = Integer.toHexString(configJson(cfg).hashCode)
-
-    def withLineage(name: String)(compute: => DataFrame): DataFrame = {
-      val committed = store.stage(spark, name, fp)(compute)
-      if (store.currentId(s"lineage_$name").isEmpty) {
-        store.commit(s"lineage_$name",
-          committed.groupBy(spark_partition_id().as("partition_id"))
-            .count().withColumn("stage", lit(name)), fp)
+    val g = new StageGraph(spark, docs, cfg, (name, stage) =>
+      if (SnapshotStages.contains(name)) {
+        val committed = store.stage(spark, name, fp)(stage)
+        if (store.currentId(s"lineage_$name").isEmpty) {
+          store.commit(s"lineage_$name",
+            committed.groupBy(spark_partition_id().as("partition_id"))
+              .count().withColumn("stage", lit(name)), fp)
+        }
+        committed
       }
-      committed
-    }
-
-    // ONE split shared by both commits: building it twice would run the
-    // full-corpus exact-dedup shuffle twice on a fresh run — the widest
-    // stage in the pipeline, doubled. The persist flag keeps the second
-    // commit on the materialized intermediate instead of a rebuilt plan.
-    // lazy: a fully-resumed run (both snapshots present) never builds it.
-    lazy val split =
-      if (cfg.exactDedupByHash)
-        ExactDedup.splitByHash(docs, "id", "text", persistHoldouts = true)
-      else ExactDedup.split(docs, "id", "text", persistRanked = true)
-    val survivors = withLineage("survivors") { split._1 }
-    val holdouts = withLineage("holdouts") { split._2 }
-    val sigs = withLineage("signatures") {
-      Signatures.withSignatures(survivors, cfg).select("id", "minhash", "simhash")
-    }
-    val edges = withLineage("edges") {
-      // persisted for the same multi-reference reason as run()/runLite
-      val cand = IntermediateCaches.persistTracked(Blocking.candidatePairs(sigs, cfg))
-      val rawScored = Scoring.score(cand, sigs, cfg)
-      val sc = if (cfg.exactVerify) Scoring.exactVerify(rawScored, survivors, cfg)
-        else rawScored
-      Scoring.edges(sc)
-        .unionByName(Substring.edges(survivors, cfg).select("src", "dst"))
-    }
-    withLineage("assignments") {
-      val sa = ConnectedComponents.assign(spark, survivors.select("id"), edges,
-        cfg.maxCcIterations, cfg.reliableCheckpoints, cfg.ccFastPathMaxEdges)
-      ExactDedup.reattach(sa, holdouts)
-    }
+      // candidates persist for the same multi-reference reason as runLite
+      else if (name == "candidates") IntermediateCaches.persistTracked(stage)
+      else stage)
+    // force every snapshot stage in commit order: a fresh run commits each
+    // one, a resumed run reads it back (or recomputes a missing one)
+    Seq(g.survivors, g.holdouts, g.signatures, g.edges, g.assignments).last
   }
 
   /** Ingest raw pages: extract text (pinned extractor) + assign stable ids.

@@ -257,79 +257,6 @@ final case class DocFingerprintExpr(child: Expression)
   override def prettyName: String = "doc_fingerprint"
 }
 
-/** Size-capped long collect: per group, keep at most `cap` input values
-  * (sorted ascending on output). A group whose true cardinality exceeds
-  * `cap` returns exactly `cap` values — callers detect "big" groups by
-  * `size(out) == cap` having set cap = threshold + 1.
-  *
-  * Purpose (PairGen single-shuffle plan): plain `collect_list` on LSH/
-  * fingerprint buckets is an OOM grenade — one boilerplate bucket at
-  * 10^12 docs holds 10^7+ members in a single aggregation buffer. The
-  * previous defense was a separate count pass (a full extra shuffle of the
-  * widest table in the pipeline) to exclude big keys before collecting.
-  * This aggregate bounds every buffer at `cap` longs, so ONE hash-agg
-  * shuffle yields both the complete member list of every small bucket AND
-  * the big-key flag.
-  *
-  * Determinism: which `cap` values survive a truncated group depends on
-  * merge order, but callers only use truncated groups as a key SET; groups
-  * under the cap are complete and sorted. */
-final case class CollectCappedLong(
-    child: Expression, cap: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-    extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[
-      scala.collection.mutable.ArrayBuffer[Long]] {
-  require(cap >= 1, "cap must be >= 1")
-  override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): scala.collection.mutable.ArrayBuffer[Long] =
-    new scala.collection.mutable.ArrayBuffer[Long](8)
-  override def update(b: scala.collection.mutable.ArrayBuffer[Long], input: InternalRow)
-      : scala.collection.mutable.ArrayBuffer[Long] = {
-    if (b.length < cap) {
-      val v = child.eval(input)
-      if (v != null) b += v.asInstanceOf[Long]
-    }
-    b
-  }
-  override def merge(b: scala.collection.mutable.ArrayBuffer[Long],
-                     o: scala.collection.mutable.ArrayBuffer[Long])
-      : scala.collection.mutable.ArrayBuffer[Long] = {
-    var i = 0
-    while (b.length < cap && i < o.length) { b += o(i); i += 1 }
-    b
-  }
-  override def eval(b: scala.collection.mutable.ArrayBuffer[Long]): Any = {
-    val arr = b.toArray
-    java.util.Arrays.sort(arr)
-    new GenericArrayData(arr)
-  }
-  override def serialize(b: scala.collection.mutable.ArrayBuffer[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + b.length * 8)
-    bb.putInt(b.length)
-    var i = 0
-    while (i < b.length) { bb.putLong(b(i)); i += 1 }
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): scala.collection.mutable.ArrayBuffer[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val b = new scala.collection.mutable.ArrayBuffer[Long](math.max(n, 8))
-    var i = 0
-    while (i < n) { b += bb.getLong; i += 1 }
-    b
-  }
-  override def withNewMutableAggBufferOffset(o: Int): CollectCappedLong =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CollectCappedLong =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): CollectCappedLong =
-    copy(child = cs.head)
-  override def prettyName: String = "collect_capped"
-}
-
 /** Session registration + Column-API helpers. Idempotent. */
 object GraftFunctions {
   import graft.model.EngineConfig
@@ -389,8 +316,6 @@ object GraftFunctions {
     reg.createOrReplaceTempFunction("doc_fingerprint",
       es => DocFingerprintExpr(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("sim_fp", es => SimFpExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("collect_capped",
-      es => CollectCappedLong(es.head, litInt(es(1))), "scala_udf")
   }
 
   import org.apache.spark.sql.functions.lit
@@ -416,6 +341,4 @@ object GraftFunctions {
   def cosineSim(l: Column, r: Column): Column = call_function("cosine_sim", l, r)
   def docFingerprint(c: Column): Column = call_function("doc_fingerprint", c)
   def simFp(c: Column): Column = call_function("sim_fp", c)
-  def collectCapped(c: Column, cap: Int): Column =
-    call_function("collect_capped", c, lit(cap))
 }

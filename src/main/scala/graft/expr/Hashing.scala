@@ -168,14 +168,30 @@ object Hashing {
     shingleHashesOf(tokenHashes(toks), k)
   }
 
+  /** Largest open-addressing probe table: 2^30 slots, the biggest power of
+    * two a JVM array can hold. */
+  private val MaxProbeCapacity: Long = 1L << 30
+
+  /** Probe-table capacity for `n` entries: next power of two ≥ 2n (≤ 50%
+    * load), computed in Long so 2n cannot overflow. Past 2^29 entries (a
+    * ~1 GiB text) the table would not fit a JVM array, so this fails with a
+    * clear error instead of allocating a negative size. */
+  private[expr] def probeCapacity(n: Int): Int = {
+    var cap = 16L
+    while (cap < 2L * n) cap <<= 1
+    require(cap <= MaxProbeCapacity,
+      s"$n hash-set entries need a $cap-slot probe table; the limit is " +
+        s"${MaxProbeCapacity / 2} entries per text")
+    cap.toInt
+  }
+
   private def shingleHashesOf(th: Array[Long], k: Int): Array[Long] = {
     // primitive open-addressing dedup set (first-occurrence order kept, as
     // the HashSet form before it): the boxed java.util.HashSet[Long]
     // allocated a Long + node per shingle in the hottest narrow kernel of
     // the pipeline — pure GC pressure for a fixed-size probe table's job
     val nSh = th.length - k + 1
-    var cap = 16
-    while (cap < nSh * 2) cap <<= 1
+    val cap = probeCapacity(nSh)
     val used = new Array[Boolean](cap)
     val vals = new Array[Long](cap)
     val mask = cap - 1
@@ -471,7 +487,9 @@ object Hashing {
       }
   }
   private object WinnowScratch {
-    /** Max grams retained per thread (64 Ki grams ≈ 1.8 MB of buffers). */
+    /** Max grams retained per thread (64 Ki grams ≈ 2.75 MB of buffers:
+      * gram/out 512 KiB each, deque 256 KiB, and the 128 Ki-slot probe
+      * table's stamp 512 KiB + vals 1 MiB). */
     val RetainMax: Int = 1 << 16
     val tl: ThreadLocal[WinnowScratch] = new ThreadLocal[WinnowScratch] {
       override def initialValue(): WinnowScratch = new WinnowScratch
@@ -485,14 +503,12 @@ object Hashing {
   def winnow(text: String, k: Int, w: Int): Array[Long] = {
     if (text == null || text.length < k) return Array.empty
     val n = text.length - k + 1
-    // probe-table capacity: next pow2 ≥ 2n (≤ 50% load). The set's OUTPUT
-    // (first-occurrence order, membership) is capacity-independent, so
-    // reusing a LARGER table from scratch is bit-identical.
-    var cap = 16
-    while (cap < n * 2) cap <<= 1
     val s = WinnowScratch.tl.get()
-    s.ensure(n, cap)
-    cap = s.vals.length // reuse the (possibly larger) retained table
+    s.ensure(n, probeCapacity(n))
+    // reuse the (possibly larger) retained table: the set's OUTPUT
+    // (first-occurrence order, membership) is capacity-independent, so a
+    // LARGER table from scratch is bit-identical
+    val cap = s.vals.length
     val gram = s.gram
     // Rabin–Karp rolling polynomial hash, mod 2^64: O(text) total instead
     // of O(text·k) — the gram hashing was the single hottest loop in the

@@ -101,8 +101,9 @@ object ExactDedup {
     * reached assignment (defensive: ids outside `survivorAssign`) in its
     * own master-rooted cluster instead of dropping it.
     *
-    * ONE definition for the five call sites (run/runLite/runResumable,
-    * q37, q39) — the re-attach semantics must not drift per path.
+    * ONE definition for the three call sites (the pipeline's stage graph
+    * behind run/runLite/runResumable, q37, q39) — the re-attach semantics
+    * must not drift per path.
     *
     * @param survivorAssign (id, cluster_id) for every survivor
     * @param holdouts frame with (`idCol`, master_id)
@@ -177,14 +178,14 @@ object PairGen {
     * @return pairs (id_l, id_r, key) with id_l < id_r, deduplicated.
     *
     * Plan shape (scale-reasoned): the vast majority of bucket keys are
-    * unique or tiny, so the main path is ONE hash-aggregate shuffle
-    * (groupBy key + collect_list, lists bounded by allPairsCap) — no
+    * unique or tiny, so the main path is ONE raw-row shuffle on the key
+    * plus a partition sort, streamed into pairs ([[streamedTagged]]) — no
     * global sort. Hot keys are rare by construction (each holds > cap
     * members), so their key set is collected-small and broadcast; only hot
     * rows pay the per-key sort for O(n) chain pairing. At 10^12 docs the
     * hot-key set is the boilerplate band/fingerprint population — bounded
     * by rows/cap; if it ever exceeded broadcast size the fallback is the
-    * window form (kept in git history). */
+    * window form ([[pairsWindowed]]). */
   /** Hot-key sets beyond this row count don't broadcast — fall back to the
     * window-per-key plan (sorts everything, but never OOMs the driver). */
   val BroadcastKeyLimit = 2000000L
@@ -193,7 +194,6 @@ object PairGen {
             dropHotAbove: Option[Int] = None): DataFrame = {
     val spark = buckets0.sparkSession
     import spark.implicits._
-    GraftFunctions.register(spark) // collect_capped (idempotent)
     // Any key NOT taking the all-pairs path: cnt > allPairsCap (chain or
     // dropped) OR cnt > dropHotAbove (dropped). Using the MIN of the two
     // caps keeps this plan's key partition identical to pairsWindowed's
@@ -214,17 +214,10 @@ object PairGen {
     // Output is identical (StagesSpec pins main-vs-windowed parity for
     // dropHotAbove < allPairsCap).
     if (dropHotAbove.exists(_ <= allPairsCap)) {
-      // STREAMED small-pairs plan (not groupBy + collect_capped): hash
-      // repartition by key, sort within partitions, one pass emitting all
-      // i<j pairs per contiguous group of 2..bigThreshold members (groups
-      // above the threshold are df-cap-dropped). Equivalent output to the
-      // aggregate formulation — collect_capped sorts each bucket's ids and
-      // explodes i<j pairs; here the partition sort delivers the same
-      // ascending order — but the exchange carries RAW 16-byte rows and
-      // one reduce-side sort replaces ObjectHashAggregate's per-key array
-      // buffers serialized through both shuffle sides (its sort-based
-      // fallback re-sorts anyway at these key cardinalities: ~1 distinct
-      // key per 2 rows). Bounded memory: at most bigThreshold+1 buffered
+      // STREAMED small-pairs plan: hash repartition by key, sort within
+      // partitions, one pass emitting all i<j pairs per contiguous group of
+      // 2..bigThreshold members (groups above the threshold are
+      // df-cap-dropped). Bounded memory: at most bigThreshold+1 buffered
       // ids per group.
       return streamedTagged(buckets0, bigThreshold, emitMarkers = false)
         .select(col("a").as("id_l"), col("b").as("id_r"), col("key"))
@@ -233,17 +226,12 @@ object PairGen {
     // ONE raw-row shuffle over the bucket table (the widest intermediate in
     // the pipeline), then a streamed per-partition pass ([[streamedTagged]])
     // emitting every small bucket's i<j pairs PLUS one exact-count marker
-    // per big bucket. This replaced the groupBy + collect_capped plan:
-    // ObjectHashAggregate's sort-based fallback serialized a per-key array
-    // buffer through both shuffle sides at ~1 distinct key per 2 rows
-    // (partial aggregation pure overhead) — measured 2.4× slower than the
-    // streamed form at 80M bucket rows (OPTIMIZATION_r06.md change 9/10).
-    // Memory stays bounded: at most bigThreshold+1 buffered longs per
-    // group, exactly collect_capped's bound. The exact counts on markers
+    // per big bucket. Memory stays bounded: at most bigThreshold+1
+    // buffered longs per group. The exact counts on markers
     // also make the chain band (allPairsCap, dropHotAbove] decidable with
     // NO separate semi-joined count job. Cached: materialized once by the
     // big-key collect below; the small-pairs branch then reads blocks
-    // (pair rows + markers — far smaller than the old per-key array cache).
+    // (pair rows + markers).
     val tagged = IntermediateCaches.persistTracked(
       streamedTagged(buckets0, bigThreshold, emitMarkers = true))
     // Bounded collect: big keys each hold > bigThreshold members, so there
@@ -289,14 +277,13 @@ object PairGen {
     *
     *  - kind 0 rows — all i<j pairs (a = id_l, b = id_r) of every
     *    contiguous group with 2..cap members (ids ascending from the
-    *    partition sort, matching the sorted order the collect_capped
-    *    aggregate it replaced produced), and
+    *    partition sort), and
     *  - kind 1 rows (when `emitMarkers`) — one marker per group whose size
     *    exceeds `cap`, carrying the group's EXACT member count in `a`.
     *
     * Bounded memory: at most cap+1 ids buffered per group (members beyond
-    * that are counted, not stored) — the same bound the capped aggregation
-    * buffer had, with no per-key array serialization through the shuffle. */
+    * that are counted, not stored), with no per-key array serialization
+    * through the shuffle. */
   private def streamedTagged(buckets0: DataFrame, cap: Int,
                              emitMarkers: Boolean): DataFrame = {
     val spark = buckets0.sparkSession

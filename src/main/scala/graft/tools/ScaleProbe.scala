@@ -59,7 +59,7 @@ object ScaleProbe {
       // trade goes firmly to compression
       .config("spark.rdd.compress", "true")
     // the probe with the LARGEST shuffles honors the same scratch-dir
-    // override as Bench/Profile/ScalingBench (SPARK_GRAFT_LOCAL_DIR)
+    // override as Bench/ScalingBench (SPARK_GRAFT_LOCAL_DIR)
     val spark = graft.Bench.localDir
       .fold(builder0)(d => builder0.config("spark.local.dir", d))
       .getOrCreate()

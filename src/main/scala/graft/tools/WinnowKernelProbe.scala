@@ -70,29 +70,33 @@ object WinnowKernelProbe {
       Array.fill(180 + rnd.nextInt(120))("w" + rnd.nextInt(10000)).mkString(" "))
     println(s"[winnowk] $docs docs x $reps reps, k=$k w=$w, ${threads} threads for MT legs")
 
-    def sumOf(f: String => Array[Long], slice: Array[String]): Long = {
+    // ONE fixed slicing for both legs: each slice folds its fingerprints
+    // order-sensitively (s = mix64(s ^ fp)), so a reordered or swapped
+    // fingerprint changes the checksum; the per-slice hashes are then
+    // summed, which keeps the 1-thread and N-thread legs comparable
+    val slices = texts.grouped((texts.length + threads - 1) / threads).toArray
+    def sliceHash(f: String => Array[Long], slice: Array[String]): Long = {
       var s = 0L
       var i = 0
       while (i < slice.length) {
         val fp = f(slice(i))
         var j = 0
-        while (j < fp.length) { s += fp(j); j += 1 }
+        while (j < fp.length) { s = Hashing.mix64(s ^ fp(j)); j += 1 }
         i += 1
       }
       s
     }
     def timedST(f: String => Array[Long]): (Long, Double) = {
       val t0 = System.nanoTime()
-      val s = sumOf(f, texts)
+      var s = 0L
+      slices.foreach(sl => s += sliceHash(f, sl))
       (s, (System.nanoTime() - t0) / 1e9)
     }
     def timedMT(f: String => Array[Long]): (Long, Double) = {
-      val per = (texts.length + threads - 1) / threads
-      val slices = texts.grouped(per).toArray
       val acc = new java.util.concurrent.atomic.AtomicLong(0)
       val t0 = System.nanoTime()
       val ts = slices.map { sl =>
-        val t = new Thread(() => { acc.addAndGet(sumOf(f, sl)); () })
+        val t = new Thread(() => { acc.addAndGet(sliceHash(f, sl)); () })
         t.start(); t
       }
       ts.foreach(_.join())

@@ -22,10 +22,10 @@ class MultiEntitySpec extends SparkSpec {
   // forThreshold, the analog of per-model threshold_match_weight
   private def models = Seq(
     (MultiEntity.EntityModel("person", 1000000L,
-      d => Pipeline.runLite(spark, d, EngineConfig.forThreshold(0.7), substringPass = false)),
+      d => Pipeline.runLite(spark, d, EngineConfig.forThreshold(0.7))),
       corpus.filter(col("id") % 2 === 0)),
     (MultiEntity.EntityModel("child", 2000000L,
-      d => Pipeline.runLite(spark, d, EngineConfig.forThreshold(0.8), substringPass = false)),
+      d => Pipeline.runLite(spark, d, EngineConfig.forThreshold(0.8))),
       corpus.filter(col("id") % 2 === 1)))
 
   private lazy val lookup = {

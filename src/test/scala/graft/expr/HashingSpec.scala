@@ -162,6 +162,20 @@ class HashingSpec extends AnyFunSuite {
     }
   }
 
+  test("probe-table capacity: next pow2 >= 2n in Long; > 2^29 entries rejected") {
+    // checked by arithmetic alone — no 1 GiB text is built; 2n must not
+    // wrap an Int, and a table past 2^30 slots fits no JVM array
+    assert(Hashing.probeCapacity(0) == 16)
+    assert(Hashing.probeCapacity(8) == 16)
+    assert(Hashing.probeCapacity(9) == 32)
+    assert(Hashing.probeCapacity(1 << 16) == (1 << 17))
+    assert(Hashing.probeCapacity(1 << 29) == (1 << 30))
+    for (n <- Seq((1 << 29) + 1, 1 << 30, Int.MaxValue)) {
+      val e = intercept[IllegalArgumentException](Hashing.probeCapacity(n))
+      assert(e.getMessage.contains(s"$n hash-set entries"), e.getMessage)
+    }
+  }
+
   test("exactJaccard basics") {
     assert(Hashing.exactJaccard(Array(1L, 2L), Array(1L, 2L)) == 1.0)
     assert(Hashing.exactJaccard(Array(1L, 2L), Array(3L, 4L)) == 0.0)

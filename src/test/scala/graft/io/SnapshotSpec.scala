@@ -59,19 +59,30 @@ class SnapshotSpec extends SparkSpec {
     val full = Pipeline.runResumable(spark, docs, root)
       .as[(Long, Long)].collect().sortBy(_._1)
 
-    // simulate a kill AFTER the edges snapshot: delete only the downstream
-    // assignment snapshot, keep upstream commits
-    val manifests = Files.list(Paths.get(root, "manifests")).iterator().asScala.toList
-    manifests.filter(_.getFileName.toString.startsWith("assignments"))
-      .foreach(Files.delete)
-    val resumed = Pipeline.runResumable(spark, docs, root)
-      .as[(Long, Long)].collect().sortBy(_._1)
-    assert(resumed.sameElements(full))
+    // simulate a kill at every stage boundary in turn: the killed stage
+    // and every later one never committed (data + lineage manifests gone),
+    // the earlier commits survive. The resume must recompute exactly the
+    // missing stages from the surviving snapshots and reproduce the output.
+    val store = new SnapshotStore(root)
+    val stages = Pipeline.SnapshotStages
+    for ((killed, i) <- stages.zipWithIndex) {
+      val kept = stages.take(i).map(st => st -> store.currentId(st))
+      val lost = stages.drop(i).flatMap(st => Seq(st, s"lineage_$st"))
+      lost.foreach(name => Files.delete(Paths.get(root, "manifests", s"$name.json")))
+      val resumed = Pipeline.runResumable(spark, docs, root)
+        .as[(Long, Long)].collect().sortBy(_._1)
+      assert(resumed.sameElements(full), s"killed at $killed")
+      for ((st, id) <- kept)
+        assert(store.currentId(st) == id, s"$st recomputed (killed at $killed)")
+      for (name <- lost)
+        assert(store.currentId(name).isDefined, s"$name not recommitted (killed at $killed)")
+    }
 
     // restart from scratch in a different store: identical again
     val fresh = Pipeline.runResumable(spark, docs, tmpDir())
       .as[(Long, Long)].collect().sortBy(_._1)
     assert(fresh.sameElements(full))
+    docs.unpersist()
   }
 
   test("expireSnapshots removes superseded data dirs; resume stays byte-identical") {

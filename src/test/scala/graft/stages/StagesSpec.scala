@@ -72,41 +72,6 @@ class StagesSpec extends SparkSpec {
     assert(chain(ex).contains("unknown minhash kernel"), chain(ex))
   }
 
-  test("collect_capped: complete+sorted under cap, exactly cap when truncated") {
-    graft.expr.GraftFunctions.register(spark)
-    val rows = ((1L to 100L).map(i => (1L, i)) ++ Seq((2L, 7L), (2L, 3L), (2L, 5L)))
-      .toDF("key", "id").repartition(8)
-    val got = rows.groupBy("key")
-      .agg(graft.expr.GraftFunctions.collectCapped(col("id"), 11).as("ids"))
-      .as[(Long, Seq[Long])].collect().toMap
-    assert(got(2L) == Seq(3L, 5L, 7L)) // complete and sorted
-    assert(got(1L).length == 11)        // truncated at cap = big-key flag
-    assert(got(1L).toSet.subsetOf((1L to 100L).toSet))
-  }
-
-  test("collect_capped: identical results on the sort-based fallback path") {
-    // ObjectHashAggregate falls back to sort-based merging beyond
-    // spark.sql.objectHashAggregate.sortBased.fallbackThreshold in-memory
-    // keys — the plan every big corpus runs. Force it at threshold=2 and
-    // pin equality with the hash path (exercises serialize/deserialize).
-    graft.expr.GraftFunctions.register(spark)
-    val rows = (1L to 2000L).map(i => (i % 97, i)).toDF("key", "id").repartition(8)
-    def agg() = rows.groupBy("key")
-      .agg(graft.expr.GraftFunctions.collectCapped(col("id"), 64).as("ids"))
-      .as[(Long, Seq[Long])].collect().toMap
-    val hashPath = agg()
-    val prev = spark.conf.getOption("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-    spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2")
-    try {
-      val sortPath = agg()
-      assert(sortPath == hashPath)
-      assert(sortPath(0L).length == 20 && sortPath(0L) == sortPath(0L).sorted)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", v)
-      case None => spark.conf.unset("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-    }
-  }
-
   test("PairGen: chain band when dropHotAbove > allPairsCap (exact counts via sliver job)") {
     // key A: 10 members (all-pairs), key B: 30 (chain band: > cap 16,
     // <= dropHot 50), key C: 60 (dropped: > 50)
