@@ -111,9 +111,10 @@ object Pipeline {
       assignments, scoredDirect.unionByName(subDirect), g.holdouts.select("id"))
 
     val counters = pipelineCounters(input, g.holdouts, g.candidates, g.edges, assignments)
-    // telemetry AFTER the action (the bounded collects fire while the
-    // metrics job materializes CC + PairGen): observed headroom of every
-    // driver-side bound rides the same table an operator already watches
+    // telemetry AFTER the action (CC's bounded collect and PairGen's
+    // chained-bucket count fill while the metrics job materializes them):
+    // observed headroom of every driver-side bound rides the same table an
+    // operator already watches
     val metrics = stageMetrics(spark, counters ++ ScaleStats.snapshot())
 
     Result(assignments, g.scored.filter(col("level") >= 1), lineage, metrics)
@@ -124,7 +125,7 @@ object Pipeline {
   def runLite(spark: SparkSession, docs: DataFrame,
               cfg: EngineConfig = EngineConfig.default): DataFrame = {
     // signatures feed bucket explosion AND both sides of the scoring join —
-    // 128-perm MinHash is the most expensive narrow transform in the
+    // 128-slot MinHash is the most expensive narrow transform in the
     // pipeline, computed once, cached. Candidates persist (as in run()):
     // exactVerify's plan references the scoring subtree from the id
     // semi-join, the exact join, and the below-threshold union — composed
@@ -260,7 +261,7 @@ object Pipeline {
     * assert it matches (model JSON analog, person_1/link_model_per.py:745). */
   def configJson(cfg: EngineConfig): String =
     s"""{"shingleK":${cfg.shingleK},"numPerms":${cfg.numPerms},""" +
-      s""""minhashKernel":"${cfg.minhashKernel}","bands":${cfg.bands},""" +
+      s""""minhashKernel":"oph","bands":${cfg.bands},""" +
       s""""rowsPerBand":${cfg.rowsPerBand},"seed":${cfg.seed},""" +
       s""""jaccardThreshold":${cfg.jaccardThreshold},"hammingThreshold":${cfg.hammingThreshold},""" +
       s""""exactVerify":${cfg.exactVerify},"tfWeighting":${cfg.tfWeighting},""" +
@@ -273,5 +274,7 @@ object Pipeline {
       // execution plan, never the output (spec-pinned), so flipping them
       // must still reuse snapshots. The hashing-kernel version IS included
       // (like the extractor version): kernel output changes must invalidate
-      // old signature snapshots, not silently mix with them.
+      // old signature snapshots, not silently mix with them. "minhashKernel"
+      // is a literal: OPH is the only MinHash kernel, and the key stays so
+      // stores committed while a second kernel existed still resume.
 }

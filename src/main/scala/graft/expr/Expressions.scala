@@ -20,24 +20,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * Registered into the session FunctionRegistry by [[GraftFunctions]] —
   * usable from both the Column API (via `call_function`) and `spark.sql`.
   */
-final case class MinHashSigExpr(child: Expression, k: Int, numPerms: Int, seed: Long,
-                                kernel: String = "perm")
+final case class MinHashSigExpr(child: Expression, k: Int, numPerms: Int, seed: Long)
     extends UnaryExpression with CodegenFallback {
-  // validate at construction (= SQL analysis time for spark.sql callers):
-  // a typo'd kernel silently computing perm signatures would disagree
-  // bit-for-bit with every oph-signed table — recall collapses with no
-  // error anywhere downstream
-  require(kernel == "perm" || kernel == "oph",
-    s"unknown minhash kernel '$kernel' (expected 'perm' or 'oph')")
-  private lazy val (pa, pb) = Hashing.permConstants(numPerms, seed)
-  private val oph = kernel == "oph"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(v: Any): Any = {
     val sh = Hashing.shingleHashes(v.asInstanceOf[UTF8String].toString, k)
-    val sig = if (oph) Hashing.minhashOph(sh, numPerms, seed)
-      else Hashing.minhash(sh, pa, pb)
+    val sig = Hashing.minhashOph(sh, numPerms, seed)
     if (sig == null) null else new GenericArrayData(sig)
   }
   override protected def withNewChildInternal(c: Expression): MinHashSigExpr = copy(child = c)
@@ -55,21 +45,15 @@ final case class MinHashSigExpr(child: Expression, k: Int, numPerms: Int, seed: 
   * CollapseProject declines to merge a multi-referenced non-cheap alias, so
   * the expression evaluates once per row (PlanQualitySpec asserts one
   * doc_sigs call survives in the optimized plan). */
-final case class DocSigsExpr(child: Expression, k: Int, numPerms: Int, seed: Long,
-                             kernel: String)
+final case class DocSigsExpr(child: Expression, k: Int, numPerms: Int, seed: Long)
     extends UnaryExpression with CodegenFallback {
-  require(kernel == "perm" || kernel == "oph",
-    s"unknown minhash kernel '$kernel' (expected 'perm' or 'oph')")
-  private lazy val (pa, pb) = Hashing.permConstants(numPerms, seed)
-  private val oph = kernel == "oph"
   override def dataType: DataType = StructType(Seq(
     StructField("minhash", ArrayType(LongType, containsNull = false), nullable = true),
     StructField("simhash", LongType, nullable = false)))
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(v: Any): Any = {
-    val (mh, sim) = Hashing.docSigPair(
-      v.asInstanceOf[UTF8String].toString, k, numPerms, seed, oph, pa, pb)
+    val (mh, sim) = Hashing.docSigPair(v.asInstanceOf[UTF8String].toString, k, numPerms, seed)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](if (mh == null) null else new GenericArrayData(mh), sim))
   }
@@ -285,17 +269,10 @@ object GraftFunctions {
     if (!registered.add(spark)) return
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("minhash_sig",
-      es => MinHashSigExpr(es.head, litInt(es(1)), litInt(es(2)), litLong(es(3)),
-        // 4-arg SQL calls default to the ENGINE default kernel so a
-        // spark.sql caller stays in lockstep with the Column API and the
-        // snapshot config fingerprint (both follow EngineConfig.default)
-        if (es.length > 4) es(4).asInstanceOf[Literal].value.toString
-        else EngineConfig.default.minhashKernel), "scala_udf")
+      es => MinHashSigExpr(es.head, litInt(es(1)), litInt(es(2)), litLong(es(3))), "scala_udf")
     reg.createOrReplaceTempFunction("simhash64", es => SimHash64Expr(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("doc_sigs",
-      es => DocSigsExpr(es.head, litInt(es(1)), litInt(es(2)), litLong(es(3)),
-        if (es.length > 4) es(4).asInstanceOf[Literal].value.toString
-        else EngineConfig.default.minhashKernel), "scala_udf")
+      es => DocSigsExpr(es.head, litInt(es(1)), litInt(es(2)), litLong(es(3))), "scala_udf")
     reg.createOrReplaceTempFunction("band_hashes",
       es => BandHashesExpr(es.head, litInt(es(1)), litInt(es(2))), "scala_udf")
     reg.createOrReplaceTempFunction("shingle_hashes",
@@ -320,12 +297,10 @@ object GraftFunctions {
 
   import org.apache.spark.sql.functions.lit
   def minhashSig(text: Column, cfg: EngineConfig): Column =
-    call_function("minhash_sig", text, lit(cfg.shingleK), lit(cfg.numPerms), lit(cfg.seed),
-      lit(cfg.minhashKernel))
+    call_function("minhash_sig", text, lit(cfg.shingleK), lit(cfg.numPerms), lit(cfg.seed))
   def simhash64(text: Column): Column = call_function("simhash64", text)
   def docSigs(text: Column, cfg: EngineConfig): Column =
-    call_function("doc_sigs", text, lit(cfg.shingleK), lit(cfg.numPerms), lit(cfg.seed),
-      lit(cfg.minhashKernel))
+    call_function("doc_sigs", text, lit(cfg.shingleK), lit(cfg.numPerms), lit(cfg.seed))
   def bandHashes(sig: Column, cfg: EngineConfig): Column =
     call_function("band_hashes", sig, lit(cfg.bands), lit(cfg.rowsPerBand))
   def shingleHashes(text: Column, k: Int): Column =

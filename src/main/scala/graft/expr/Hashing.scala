@@ -1,13 +1,11 @@
 package graft.expr
 
-import graft.model.EngineConfig
-
 /** Deterministic 64-bit hashing + MinHash/SimHash kernels.
   *
   * These are the engine's replacement for Splink's blocking-rule keys
   * (reference `person_1/link_model_per.py:501-507`): instead of
   * `block_on("surname", "substr(gn1,1,1)")` we block on LSH band hashes of
-  * 128-perm MinHash signatures (SURVEY §4 "Blocking").
+  * 128-slot MinHash signatures (SURVEY §4 "Blocking").
   *
   * All functions are pure, null-free, and seed-deterministic so that reruns
   * are byte-identical (reference invariant `person_1/person.py:752-756`).
@@ -24,9 +22,6 @@ object Hashing {
     * `TextExtract.version`. "h2" = rolling-hash winnow + per-token
     * shingle combine (2026-08-17); "h1" = the round-1 direct-hash forms. */
   val kernelVersion: String = "h2"
-
-  /** Mersenne prime 2^61 - 1 for the universal-hash permutation family. */
-  val MersennePrime: Long = (1L << 61) - 1
 
   /** splitmix64 finalizer — public-domain mixing constants (Steele et al.,
     * "Fast Splittable Pseudorandom Number Generators"). */
@@ -56,34 +51,6 @@ object Hashing {
 
   /** Hash two longs into one (order-sensitive). */
   @inline def hash64(a: Long, b: Long): Long = mix64(mix64(a) ^ (b * 0xc2b2ae3d27d4eb4fL))
-
-  /** (a*x + b) mod (2^61-1) with 128-bit intermediate via multiplyHigh.
-    * Inputs are first masked into [0, 2^61). */
-  @inline def permHash(x: Long, a: Long, b: Long): Long = {
-    val xm = x & MersennePrime
-    val hi = Math.multiplyHigh(a, xm)
-    val lo = a * xm
-    // 2^64 ≡ 8 (mod 2^61-1): fold hi into low 61 bits.
-    var r = (hi << 3) + (lo & MersennePrime) + (lo >>> 61) + b
-    if (r >= MersennePrime) r -= MersennePrime
-    if (r >= MersennePrime) r -= MersennePrime
-    r
-  }
-
-  /** Deterministic permutation constants for `numPerms` hash functions.
-    * a_i in [1, p), b_i in [0, p). */
-  def permConstants(numPerms: Int, seed: Long): (Array[Long], Array[Long]) = {
-    val a = new Array[Long](numPerms)
-    val b = new Array[Long](numPerms)
-    var s = mix64(seed)
-    var i = 0
-    while (i < numPerms) {
-      s = mix64(s); a(i) = (s & MersennePrime) | 1L
-      s = mix64(s); b(i) = s & MersennePrime
-      i += 1
-    }
-    (a, b)
-  }
 
   /** The pinned whitespace class: exactly Java regex `\s` = [ \t\n\x0B\f\r]
     * (ASCII-only). The manual scanner below must not silently widen the
@@ -217,34 +184,14 @@ object Hashing {
     if (m == nSh) out else java.util.Arrays.copyOf(out, m)
   }
 
-  /** 128-perm (config) MinHash signature over the shingle-hash set.
-    * Empty shingle set → null (unlinkable doc). */
-  def minhash(shingles: Array[Long], a: Array[Long], b: Array[Long]): Array[Long] = {
-    if (shingles.isEmpty) return null
-    val n = a.length
-    val sig = Array.fill(n)(Long.MaxValue)
-    var s = 0
-    while (s < shingles.length) {
-      val x = shingles(s)
-      var i = 0
-      while (i < n) {
-        val h = permHash(x, a(i), b(i))
-        if (h < sig(i)) sig(i) = h
-        i += 1
-      }
-      s += 1
-    }
-    sig
-  }
-
   /** One-permutation-hashing (OPH) MinHash signature with optimal
     * densification — public literature: Li, Owen, Zhang, "One Permutation
     * Hashing" (NIPS 2012); Shrivastava, "Optimal Densification for Fast and
     * Accurate Minwise Hashing" (ICML 2017).
     *
-    * The classic kernel ([[minhash]]) evaluates numPerms=128 universal-hash
-    * permutations PER SHINGLE — the dominant signature cost in the whole
-    * pipeline. OPH hashes each shingle ONCE, routes it to bucket
+    * The classic kernel evaluates numPerms=128 universal-hash permutations
+    * PER SHINGLE — the dominant signature cost in the whole pipeline. OPH
+    * hashes each shingle ONCE, routes it to bucket
     * h mod numPerms, and keeps the minimum hash per bucket: all 128 slots
     * in one pass, ~128× less hashing, same estimator family
     * (P[slot agreement] ≈ Jaccard). Empty buckets (short docs or collision
@@ -255,9 +202,7 @@ object Hashing {
     * Deterministic: a pure function of the shingle SET and seed (min per
     * bucket is order-independent; densification depends only on the bucket
     * minima). Identical sets ⇒ identical signatures, so LSH banding
-    * semantics are unchanged. Selected via EngineConfig.minhashKernel
-    * ("oph" vs "perm"), which participates in the snapshot config
-    * fingerprint — resumed runs never mix kernels. */
+    * semantics are unchanged. */
   def minhashOph(shingles: Array[Long], numPerms: Int, seed: Long): Array[Long] = {
     if (shingles.isEmpty) return null
     val sig = Array.fill(numPerms)(Long.MaxValue)
@@ -415,22 +360,17 @@ object Hashing {
 
   /** Fused per-document signature kernel: ONE text scan yields the token
     * FNV hashes, from which both the MinHash signature (shingle combine →
-    * OPH/perm kernel) and the SimHash (mix64 per token → packed votes)
+    * OPH kernel) and the SimHash (mix64 per token → packed votes)
     * derive. The split expressions each re-tokenized (and re-FNV-hashed)
     * the full text — two scans plus ~2n String allocations per document in
     * the single most expensive narrow stage of the pipeline. Output is
-    * bit-identical to (minhash via [[shingleHashes]], [[simhashReference]])
+    * bit-identical to ([[minhashOph]] of [[shingleHashes]], [[simhashReference]])
     * — pinned by HashingSpec. */
-  def docSigPair(text: String, k: Int, numPerms: Int, seed: Long, oph: Boolean,
-                 pa: Array[Long], pb: Array[Long]): (Array[Long], Long) = {
+  def docSigPair(text: String, k: Int, numPerms: Int, seed: Long): (Array[Long], Long) = {
     val th = tokenFnvHashes(text)
     val sim = simhashFromFnv(th)
     if (th.length < k) return (null, sim)
-    val sh = shingleHashesOf(th, k)
-    val mh = if (sh.isEmpty) null
-      else if (oph) minhashOph(sh, numPerms, seed)
-      else minhash(sh, pa, pb)
-    (mh, sim)
+    (minhashOph(shingleHashesOf(th, k), numPerms, seed), sim)
   }
 
   @inline def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
@@ -594,13 +534,5 @@ object Hashing {
     var i = 0
     while (i < th.length) { h = hash64(h, mix64(th(i))); i += 1 }
     (sim, h)
-  }
-
-  /** Build the whole signature bundle in one pass per document. */
-  def docSignature(text: String, cfg: EngineConfig, a: Array[Long], b: Array[Long])
-      : (Array[Long], Long, Int) = {
-    val sh = shingleHashes(text, cfg.shingleK)
-    val mh = minhash(sh, a, b)
-    (mh, simhash(text), sh.length)
   }
 }

@@ -29,7 +29,7 @@ final case class DocRow(
     text: String,
     lang: String)
 
-/** Per-document signature: 128-perm MinHash + 64-bit SimHash.
+/** Per-document signature: 128-slot MinHash + 64-bit SimHash.
   * nShingles==0 marks unlinkable docs (too short — reference analog:
   * unlinkable records, person_1/link_model_per.py:754-762). */
 final case class DocSig(
@@ -66,14 +66,6 @@ final case class ClusterAssignment(id: Long, clusterId: Long)
 final case class EngineConfig(
     shingleK: Int = 3,            // tokens per shingle
     numPerms: Int = 128,
-    // MinHash kernel: "oph" = one-permutation hashing with optimal
-    // densification (one hash per shingle — ~numPerms× less hashing per
-    // doc, same estimator family; Li et al. NIPS'12, Shrivastava ICML'17),
-    // "perm" = the classic numPerms-universal-hash kernel. Both produce
-    // numPerms-slot signatures with P[slot agreement] ≈ Jaccard, so
-    // banding/scoring are kernel-agnostic; signatures differ bit-for-bit,
-    // so the choice participates in the snapshot config fingerprint.
-    minhashKernel: String = "oph",
     bands: Int = 16,
     rowsPerBand: Int = 8,
     simhashBits: Int = 64,
@@ -118,8 +110,6 @@ final case class EngineConfig(
     // hash-free reference plan). Identical output either way (spec-pinned).
     exactDedupByHash: Boolean = true) {
   require(bands * rowsPerBand == numPerms, "bands*rowsPerBand must equal numPerms")
-  require(minhashKernel == "oph" || minhashKernel == "perm",
-    s"unknown minhashKernel '$minhashKernel' (expected 'oph' or 'perm')")
 }
 
 object EngineConfig {

@@ -618,7 +618,7 @@ object Queries {
     // cached (engine-tracked): sizes, hotGrams, and both self-join sides
     // consume `grams` — without the cache the explode+distinct shuffle
     // re-executes per consumer (exchange reuse across composed references
-    // is not guaranteed, same rationale as PairGen's big-key probe)
+    // is not guaranteed)
     val grams = graft.stages.IntermediateCaches.persistTracked(docs
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 3)

@@ -89,11 +89,9 @@ object Knn {
     * near vectors get near projections, so true neighbours sort adjacently)
     * and each member compares only with the next chainWidth members:
     * O(n·chainWidth) pairs per hot bucket, nothing dropped from coverage.
-    * The chain runs over deterministic GLOBAL ranks computed by range
-    * partitioning + two-phase offsets
-    * ([[graft.stages.PairGen.rankedWidthPairs]]) — no per-bucket window
-    * task, so even a 10^7-member boilerplate bucket spreads across the
-    * cluster. */
+    * The chain is [[graft.stages.PairGen.pairs]] with allPairsCap = 0: one
+    * key-partitioned sorted pass, streaming each hot bucket's chain with
+    * `chainWidth` ids held, no per-bucket window. */
   def lshTop1(spark: SparkSession, embeddings: DataFrame, cfg: EngineConfig,
               bits: Int = 8, bucketCap: Int = 256, chainWidth: Int = 4): DataFrame = {
     GraftFunctions.register(spark)
@@ -177,14 +175,12 @@ object Knn {
         Seq("bucket"))
       .select("vec_id", "embedding", "nid", "emb_b")
 
-    // width-k chain over the global (bucket, projection, id) order via
-    // PairGen.rankedWidthPairs — NO per-bucket window task, so one hot
-    // bucket of 10^7 members spreads across the cluster (same range-
-    // partition discipline as the text path's chainPairsRanged)
+    // width-k chain over each hot bucket's (projection, id) order: PairGen
+    // with allPairsCap = 0 chains every bucket it sees
     val hotRows = bucketed.join(broadcast(hotBuckets), Seq("bucket"), "left_semi")
       .select(col("bucket").as("key"), col("vec_id").as("id"),
         projUdf(col("embedding")).as("sort"))
-    val hotIdPairs = graft.stages.PairGen.rankedWidthPairs(hotRows, chainWidth)
+    val hotIdPairs = graft.stages.PairGen.pairs(hotRows, allPairsCap = 0, chainWidth = chainWidth)
     val e = embeddings.select(col("vec_id"), col("embedding"))
     val hotChain = hotIdPairs
       .join(e.select(col("vec_id").as("id_l"), col("embedding").as("__el")), "id_l")
@@ -403,14 +399,11 @@ object Knn {
       while (j < v.length) { dot += p(j) * v(j); j += 1 }
       (dot * (1L << 32).toDouble).toLong // monotone long for PairGen's sort
     })
-    // cache the bucket frame: PairGen's grouped aggregate AND its
-    // hot-bucket chain branch both consume it, and the keysUdf explode
-    // (tables×bits dot products per vector) is the most expensive narrow
-    // op in the vector path — without the cache it would run per consumer
-    val buckets = graft.stages.IntermediateCaches.persistTracked(embeddings.select(
+    // one consumer (PairGen's single pass), so no cache
+    val buckets = embeddings.select(
       explode(keysUdf(col("embedding"))).as("key"),
       col("vec_id").as("id"),
-      projUdf(col("embedding")).as("sort")))
+      projUdf(col("embedding")).as("sort"))
     val cand = graft.stages.PairGen.pairs(buckets, allPairsCap)
       .select("id_l", "id_r").distinct() // same pair found by several tables
     val e = embeddings.select(col("vec_id"), col("embedding"))

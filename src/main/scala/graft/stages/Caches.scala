@@ -14,9 +14,9 @@ import org.apache.spark.storage.StorageLevel
   * per session so [[clear]] can drop them and nothing else.
   *
   * Contract for library callers: after fully consuming the result of
-  * `Pipeline.run`/`runLite`, `Substring.edges`, `PairGen.pairs`,
-  * `Knn.embedDedup` (an action has run and the output is materialized or
-  * persisted by the caller), call `Pipeline.clearIntermediateCaches(spark)`
+  * `Pipeline.run`/`runLite`, `Substring.edges`, `Knn.embedDedup` (an
+  * action has run and the output is materialized or persisted by the
+  * caller), call `Pipeline.clearIntermediateCaches(spark)`
   * to release the engine's internal blocks. Clearing earlier is safe but
   * forces recomputation if the lazy result is re-evaluated.
   */

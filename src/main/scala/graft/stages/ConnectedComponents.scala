@@ -102,8 +102,6 @@ object ConnectedComponents {
     var iter = 0
     var prevSig: (Long, Long, Long) = (-1L, -1L, -1L)
 
-    val debugTiming = sys.env.contains("GRAFT_CC_DEBUG")
-    val matT0 = System.nanoTime()
     if (fastPathMaxEdges > 0) {
       // ONE action decides the plan AND feeds the fast path: collect up to
       // bound+1 canonical edges. Small graph (the common case at bench
@@ -140,8 +138,6 @@ object ConnectedComponents {
         // the gauge must pair the max with the gate it actually ran under.
         ScaleStats.recordCcDriverRun(arr.length.toLong, bound.toLong)
         val assigned = driverUnionFind(arr)
-        if (debugTiming)
-          println(f"[cc] driver fast path (${arr.length} edges): ${(System.nanoTime() - matT0) / 1e9}%.2f s")
         // parallelize, NOT createDataset: a LocalRelation of up to 2×bound
         // rows would bloat every downstream plan and invite a broadcast of
         // the whole assignment table
@@ -154,10 +150,7 @@ object ConnectedComponents {
     val edgeCount = e.count()
     ScaleStats.ccDistributedRuns.incrementAndGet()
     ScaleStats.recordMax(ScaleStats.maxCcDistributedEdges, edgeCount)
-    if (debugTiming)
-      println(f"[cc] input materialize ($edgeCount edges): ${(System.nanoTime() - matT0) / 1e9}%.2f s")
     while (!converged && iter < maxIterations) {
-      val iterT0 = System.nanoTime()
       // TWO star rounds per convergence action: each action is one serial
       // job submission (driver scheduling + plan compile — the
       // size-independent Amdahl term that caps N→4N efficiency), and a
@@ -189,8 +182,6 @@ object ConnectedComponents {
       e.unpersist()
       e = small
       iter += 2 // two star rounds ran — count both against maxIterations
-      if (debugTiming)
-        println(f"[cc] rounds $iter: ${(System.nanoTime() - iterT0) / 1e9}%.2f s, sig=$sig")
     }
     if (!converged)
       throw new IllegalStateException(

@@ -151,359 +151,154 @@ object Signatures {
       .drop("__sig")
 }
 
-/** Skew-aware candidate-pair generation from (key, id) bucket rows.
+/** Skew-aware candidate-pair generation from (key, id, sort) bucket rows.
   *
-  * Shared by LSH blocking and the winnowing substring pass. This is the
-  * engine's answer to the reference's skew problem ("michael b" block =
-  * 793,881 comparisons, `person_1/link_model_per.py:526-529`) — required
-  * explicitly by the north_rule ("hot LSH buckets").
+  * Shared by LSH blocking, the winnowing substring pass and the ANN paths.
+  * This is the engine's answer to the reference's skew problem ("michael
+  * b" block = 793,881 comparisons, `person_1/link_model_per.py:526-529`) —
+  * required explicitly by the north_rule ("hot LSH buckets").
   *
   * - buckets with ≤ allPairsCap members → all pairs (exactly Splink's
   *   blocking self-join J3 semantics);
-  * - hot buckets → O(n) chain pairing: members sorted by (sortKey, id) and
-  *   linked consecutively, via RANGE partitioning so a mega-bucket spreads
-  *   over many tasks ([[PairGen.chainPairsRanged]]). Connectivity within
-  *   the bucket is preserved (clustering is over the transitive closure),
+  * - hot buckets → O(n) chain pairing: members sorted by (sort, id), each
+  *   linked to the next `chainWidth` members. Connectivity within the
+  *   bucket is preserved (clustering is over the transitive closure),
   *   nothing is silently dropped; near-identical docs sort adjacently when
-  *   sortKey = simhash.
+  *   sort = simhash;
+  * - with `dropHotAbove`, buckets larger than it emit nothing.
+  *
+  * A bucket's pairs depend only on its own members (cf. *Implementing
+  * Distributed Similarity Joins using LSH*, EDBT 2022), so ONE pass over
+  * key-partitioned, sorted rows decides and emits every bucket.
   */
 object PairGen {
   val AllPairsCap = 64
 
-  /** @param buckets columns: key:long, id:long, sort:long
+  /** @param buckets columns: key:long, id:long, sort:long (non-null)
     * @param dropHotAbove if set, buckets larger than this are excluded
     *        entirely (document-frequency pruning — used by the substring
     *        pass where a high-df fingerprint is boilerplate, not evidence;
     *        the LSH path never drops)
-    * @return pairs (id_l, id_r, key) with id_l < id_r, deduplicated.
+    * @param chainWidth how many following members each member of a hot
+    *        bucket pairs with (1 = the consecutive chain)
+    * @return pairs (id_l, id_r, key) with id_l < id_r.
     *
-    * Plan shape (scale-reasoned): the vast majority of bucket keys are
-    * unique or tiny, so the main path is ONE raw-row shuffle on the key
-    * plus a partition sort, streamed into pairs ([[streamedTagged]]) — no
-    * global sort. Hot keys are rare by construction (each holds > cap
-    * members), so their key set is collected-small and broadcast; only hot
-    * rows pay the per-key sort for O(n) chain pairing. At 10^12 docs the
-    * hot-key set is the boilerplate band/fingerprint population — bounded
-    * by rows/cap; if it ever exceeded broadcast size the fallback is the
-    * window form ([[pairsWindowed]]). */
-  /** Hot-key sets beyond this row count don't broadcast — fall back to the
-    * window-per-key plan (sorts everything, but never OOMs the driver). */
-  val BroadcastKeyLimit = 2000000L
-
-  def pairs(buckets0: DataFrame, allPairsCap: Int = AllPairsCap,
-            dropHotAbove: Option[Int] = None): DataFrame = {
-    val spark = buckets0.sparkSession
+    * Plan: one hash exchange on the key, a sort within partitions by
+    * (key, sort, id), and one `mapPartitions` pass — no driver action, no
+    * cache, no window. A bucket of m members gets all pairs if
+    * m ≤ min(allPairsCap, dropHotAbove), nothing if m > dropHotAbove, and
+    * the width-`chainWidth` chain otherwise. At most
+    * `dropHotAbove.getOrElse(allPairsCap)` + 1 ids are buffered per bucket:
+    * that many members decide its fate, and without `dropHotAbove` the
+    * chain then streams. A mega-bucket is one task's sorted run either
+    * way — the key exchange already puts all its rows in one partition.
+    * Each chained bucket adds 1 to a LongAccumulator that feeds
+    * [[ScaleStats.maxBigKeysCollected]] as the pass's tasks finish. */
+  def pairs(buckets: DataFrame, allPairsCap: Int = AllPairsCap,
+            dropHotAbove: Option[Int] = None, chainWidth: Int = 1): DataFrame = {
+    require(allPairsCap >= 0 && dropHotAbove.forall(_ >= 0) && chainWidth >= 1,
+      s"bad PairGen bounds: allPairsCap=$allPairsCap dropHotAbove=$dropHotAbove chainWidth=$chainWidth")
+    val spark = buckets.sparkSession
     import spark.implicits._
-    // Any key NOT taking the all-pairs path: cnt > allPairsCap (chain or
-    // dropped) OR cnt > dropHotAbove (dropped). Using the MIN of the two
-    // caps keeps this plan's key partition identical to pairsWindowed's
-    // (kept = cnt <= dropHotAbove; small = cnt <= allPairsCap) — the two
-    // plans must produce the same edge set for the same input (determinism
-    // guarantee), including when dropHotAbove < allPairsCap.
-    val bigThreshold = math.min(allPairsCap, dropHotAbove.getOrElse(Int.MaxValue - 1))
-    // dropHotAbove ≤ allPairsCap (the substring pass's default shape:
-    // substringDfCap 50 < allPairsCap 64): every key above bigThreshold is
-    // DROPPED and the chain band is empty by construction — so the big-key
-    // collect exists only to feed an empty chain branch and a fallback
-    // decision that cannot matter (nothing is collected to the driver at
-    // all on this path). Short-circuit to the pure small-pairs plan:
-    // no driver action at plan-construction time, no cache of the grouped
-    // table (it has exactly one consumer now), and no second full scan of
-    // the bucket table through the empty chain's semi-join — measured as a
-    // large slice of the substring stage, the pipeline's dominant cost.
-    // Output is identical (StagesSpec pins main-vs-windowed parity for
-    // dropHotAbove < allPairsCap).
-    if (dropHotAbove.exists(_ <= allPairsCap)) {
-      // STREAMED small-pairs plan: hash repartition by key, sort within
-      // partitions, one pass emitting all i<j pairs per contiguous group of
-      // 2..bigThreshold members (groups above the threshold are
-      // df-cap-dropped). Bounded memory: at most bigThreshold+1 buffered
-      // ids per group.
-      return streamedTagged(buckets0, bigThreshold, emitMarkers = false)
-        .select(col("a").as("id_l"), col("b").as("id_r"), col("key"))
-        .filter(col("id_l") =!= col("id_r"))
-    }
-    // ONE raw-row shuffle over the bucket table (the widest intermediate in
-    // the pipeline), then a streamed per-partition pass ([[streamedTagged]])
-    // emitting every small bucket's i<j pairs PLUS one exact-count marker
-    // per big bucket. Memory stays bounded: at most bigThreshold+1
-    // buffered longs per group. The exact counts on markers
-    // also make the chain band (allPairsCap, dropHotAbove] decidable with
-    // NO separate semi-joined count job. Cached: materialized once by the
-    // big-key collect below; the small-pairs branch then reads blocks
-    // (pair rows + markers).
-    val tagged = IntermediateCaches.persistTracked(
-      streamedTagged(buckets0, bigThreshold, emitMarkers = true))
-    // Bounded collect: big keys each hold > bigThreshold members, so there
-    // are at most rows/bigThreshold of them; if even that exceeds the
-    // broadcast limit, fall back to the window plan. Single job wave
-    // (ExecHints): the limit is an overflow guard sized to not be hit.
-    val bigRows = ExecHints.singleWaveTake(spark) {
-      tagged.filter(col("kind") === 1)
-        .select(col("key"), col("a"))
-        .limit(BroadcastKeyLimit.toInt + 1)
-        .as[(Long, Long)].collect()
-    }
-    ScaleStats.recordMax(ScaleStats.maxBigKeysCollected, bigRows.length.toLong)
-    if (bigRows.length > BroadcastKeyLimit) {
-      ScaleStats.windowedFallbacks.incrementAndGet()
-      tagged.unpersist()
-      return pairsWindowed(buckets0, allPairsCap, dropHotAbove)
-    }
-    // Chain band = keys with allPairsCap < cnt <= dropHotAbove (empty by
-    // construction unless dropHotAbove > allPairsCap — that shape returned
-    // early above). Marker counts are exact, so the band is a driver-side
-    // filter — the old plan ran a semi-joined count job over the bucket
-    // table for it.
-    val hotArr: Array[Long] = dropHotAbove match {
-      case Some(cap) => bigRows.filter(_._2 <= cap).map(_._1)
-      case None => bigRows.map(_._1)
-    }
-    val hotKeys = spark.createDataset(hotArr.toSeq).toDF("key")
-
-    val smallPairs = tagged.filter(col("kind") === 0)
-      .select(col("a").as("id_l"), col("b").as("id_r"), col("key"))
-
-    // hot rows re-derive from the (narrow, upstream-cached) bucket source —
-    // a broadcast semi-join sliver, not a second full-table shuffle
-    val chainPairs = chainPairsRanged(
-      buckets0.join(broadcast(hotKeys), Seq("key"), "left_semi"))
-
-    smallPairs.unionByName(chainPairs).filter(col("id_l") =!= col("id_r"))
-  }
-
-  /** Streamed bucket-pairing pass: hash-repartition the (key, id) bucket
-    * rows, sort within partitions, and in ONE forward pass emit
-    *
-    *  - kind 0 rows — all i<j pairs (a = id_l, b = id_r) of every
-    *    contiguous group with 2..cap members (ids ascending from the
-    *    partition sort), and
-    *  - kind 1 rows (when `emitMarkers`) — one marker per group whose size
-    *    exceeds `cap`, carrying the group's EXACT member count in `a`.
-    *
-    * Bounded memory: at most cap+1 ids buffered per group (members beyond
-    * that are counted, not stored), with no per-key array serialization
-    * through the shuffle. */
-  private def streamedTagged(buckets0: DataFrame, cap: Int,
-                             emitMarkers: Boolean): DataFrame = {
-    val spark = buckets0.sparkSession
-    import spark.implicits._
-    val parts = spark.sessionState.conf.numShufflePartitions
-    buckets0
-      .select(col("key").cast("long"), col("id").cast("long"))
-      .repartition(parts, col("key"))
-      .sortWithinPartitions("key", "id")
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        new Iterator[(Int, Long, Long, Long)] {
-          // current group being read: up to cap+1 ids stored, full size in m
-          private val cur = new Array[Long](cap + 1)
-          private var n = 0
-          private var m = 0L
-          private var curKey = 0L
-          private var haveGroup = false
-          // pending emission: a STABLE copy of the closed group's ids
-          // (advance() may begin filling `cur` with the next group while
-          // this group's pairs are still being emitted); pending marker
-          // uses emitIds = null
-          private var emitIds: Array[Long] = null
-          private var emitKey = 0L
-          private var emitCount = 0L
-          private var marker = false
-          private var ei = 0
-          private var ej = 1
-          private def emitting: Boolean =
-            marker || (emitIds != null && ei < emitIds.length - 1)
-          private def closeGroup(): Unit = {
-            if (m >= 2 && m <= cap) {
-              emitIds = java.util.Arrays.copyOf(cur, n)
-              emitKey = curKey
-              ei = 0; ej = 1
-            } else if (m > cap && emitMarkers) {
-              marker = true; emitKey = curKey; emitCount = m
-            }
-            n = 0; m = 0L
-          }
-          private def advance(): Unit = {
-            while (!emitting && (it.hasNext || haveGroup)) {
-              if (!it.hasNext) { closeGroup(); haveGroup = false }
-              else {
-                val (k, id) = it.next()
-                if (haveGroup && k != curKey) closeGroup()
-                curKey = k; haveGroup = true
-                if (n <= cap) { cur(n) = id; n += 1 }
-                m += 1
-              }
-            }
-          }
-          override def hasNext: Boolean = { if (!emitting) advance(); emitting }
-          override def next(): (Int, Long, Long, Long) = {
-            if (!emitting) advance()
-            if (marker) { marker = false; (1, emitCount, 0L, emitKey) }
-            else {
-              val out = (0, emitIds(ei), emitIds(ej), emitKey)
-              ej += 1
-              if (ej >= emitIds.length) { ei += 1; ej = ei + 1 }
-              out
-            }
-          }
-        }
-      }
-      .toDF("kind", "a", "b", "key")
-  }
-
-  /** O(n) chain pairing of hot-bucket members WITHOUT a per-key window.
-    *
-    * `Window.partitionBy(key)` puts every row of a key into ONE task — for
-    * a boilerplate band bucket at 10^12-doc scale (10^7-10^8 members) that
-    * single task is the job. This is the north_rule's "explicit
-    * repartitioning for hot LSH buckets": `repartitionByRange(key, sort,
-    * id)` splits a mega-bucket across many partitions while preserving the
-    * GLOBAL sort order, consecutive members pair within each partition
-    * (mapPartitions — the one place imperative per-partition logic is the
-    * right tool), and the per-key last/first rows at partition boundaries
-    * are stitched by a lead() window over a tiny (≤ 2 rows × keys ×
-    * partitions) boundary table — linear in the key's partition span. The emitted edge set is exactly the window plan's:
-    * all consecutive (sort, id)-ordered pairs per key. Range boundaries
-    * come from sampling and are not themselves deterministic, but the
-    * output depends only on the total order, so it is. */
-  private[stages] def chainPairsRanged(hotRows: DataFrame): DataFrame = {
-    val spark = hotRows.sparkSession
-    import spark.implicits._
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val ranged = hotRows
+    // typed as the base class: tasks deserialize a plain LongAccumulator copy
+    val chained: org.apache.spark.util.LongAccumulator = new ScaleStats.ChainedKeys
+    spark.sparkContext.register(chained, "pairgen_chained_keys")
+    val allUpTo = math.min(allPairsCap, dropHotAbove.getOrElse(Int.MaxValue))
+    val decideAt = dropHotAbove.getOrElse(allPairsCap)
+    val drops = dropHotAbove.isDefined
+    buckets
       .select(col("key").cast("long"), col("sort").cast("long"), col("id").cast("long"))
-      .as[(Long, Long, Long)]
-      .repartitionByRange(parts, col("key"), col("sort"), col("id"))
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("key"))
       .sortWithinPartitions("key", "sort", "id")
-    // rows: kind 0 = chain edge (key, a, b); kind 1 = first row of a key in
-    // this partition; kind 2 = last row of a key in this partition
-    val tagged = ranged.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      new Iterator[(Int, Long, Int, Long, Long)] {
-        private var pending: List[(Int, Long, Int, Long, Long)] = Nil
-        private var prevKey = 0L
-        private var prevId = 0L
-        private var havePrev = false
-        private def refill(): Unit = {
-          while (pending.isEmpty && it.hasNext) {
-            val (k, _, id) = it.next()
-            if (!havePrev || k != prevKey) {
-              if (havePrev) pending ::= ((2, prevKey, pid, prevId, 0L))
-              pending ::= ((1, k, pid, id, 0L))
-            } else {
-              pending ::= ((0, k, pid, prevId, id))
-            }
-            prevKey = k; prevId = id; havePrev = true
-          }
-          if (pending.isEmpty && !it.hasNext && havePrev) {
-            pending ::= ((2, prevKey, pid, prevId, 0L))
-            havePrev = false
-          }
-        }
-        override def hasNext: Boolean = { refill(); pending.nonEmpty }
-        override def next(): (Int, Long, Int, Long, Long) = {
-          refill(); val h = pending.head; pending = pending.tail; h
-        }
-      }
-    }.toDF("kind", "key", "pid", "a", "b")
-    IntermediateCaches.persistTracked(tagged) // persist returns `this`
-    val within = tagged.filter(col("kind") === 0)
-      .select(least(col("a"), col("b")).as("id_l"),
-        greatest(col("a"), col("b")).as("id_r"), col("key"))
-    // stitch: last row of a key in partition p pairs with the key's first
-    // row in the NEXT partition that holds it (range partitioning keeps a
-    // key's span contiguous). Every (key, partition) holding the key emits
-    // exactly one first and one last, so ordered by (pid, kind) the
-    // boundary rows interleave f,l,f,l,… and lead(1) from each last IS the
-    // next partition's first. This is O(m) per key spanning m partitions;
-    // the previous lasts.join(firsts, "key") put all m² (last × first)
-    // combinations in the key's single reducer before pruning — at
-    // production widths (m ≈ 10^4-10^5 for a 10^7-member bucket) that is
-    // the single-task hotspot this function exists to avoid.
-    val bw = Window.partitionBy("key").orderBy(col("pid"), col("kind"))
-    val stitch = tagged.filter(col("kind") > 0)
-      .select(col("key"), col("pid"), col("kind"), col("a"))
-      .withColumn("__nxt", lead(col("a"), 1).over(bw))
-      .filter(col("kind") === 2 && col("__nxt").isNotNull)
-      .select(least(col("a"), col("__nxt")).as("id_l"),
-        greatest(col("a"), col("__nxt")).as("id_r"), col("key"))
-    within.unionByName(stitch)
+      .as[(Long, Long, Long)]
+      .mapPartitions(rows => new BucketPairs(rows, allUpTo, decideAt, drops, chainWidth, chained))
+      .toDF("id_l", "id_r", "key")
+      .filter(col("id_l") =!= col("id_r"))
   }
 
-  /** Fallback plan when the hot-key set itself is too large to broadcast:
-    * per-key window count + lead (one sort of the full bucket table).
-    * Slower, but partition-parallel and driver-safe at any skew profile. */
-  private[stages] def pairsWindowed(buckets: DataFrame, allPairsCap: Int,
-                                    dropHotAbove: Option[Int]): DataFrame = {
-    val w = Window.partitionBy("key")
-    val counted = buckets.withColumn("__cnt", count(lit(1)).over(w))
-    val kept = dropHotAbove match {
-      case Some(cap) => counted.filter(col("__cnt") <= cap)
-      case None => counted
+  /** The per-partition pass of [[pairs]] over (key, sort, id) rows sorted
+    * by that triple. Pairs come out as (least, greatest, key). */
+  private final class BucketPairs(rows: Iterator[(Long, Long, Long)], allUpTo: Int,
+                                  decideAt: Int, drops: Boolean, width: Int,
+                                  chained: org.apache.spark.util.LongAccumulator)
+      extends Iterator[(Long, Long, Long)] {
+    private val Buffering = 0
+    private val Streaming = 1
+    private val Dropping = 2
+    // current bucket: its first ≤ decideAt + 1 members in `ids`; once it
+    // streams, the last `width` members in `ring` (member p at p % width)
+    private var ids = new Array[Long](math.min(decideAt + 1L, 1024L).toInt)
+    private val ring = new Array[Long](width)
+    private var n = 0L
+    private var key = 0L
+    private var open = false
+    private var mode = Buffering
+    // pairs ready to return, flattened (id_l, id_r, key)
+    private var out = new Array[Long](3 * 64)
+    private var outN = 0
+    private var outI = 0
+
+    private def emit(a: Long, b: Long): Unit = {
+      if (outN + 3 > out.length) out = java.util.Arrays.copyOf(out, out.length * 2)
+      out(outN) = math.min(a, b); out(outN + 1) = math.max(a, b); out(outN + 2) = key
+      outN += 3
     }
-    val smallPairs = kept.filter(col("__cnt") <= allPairsCap)
-      .groupBy("key").agg(sort_array(collect_list(col("id"))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(col("key"), explode(expr(
-        """flatten(transform(ids, (x, i) ->
-          |  transform(slice(ids, i + 2, size(ids) - i - 1), y -> struct(x as l, y as r))))"""
-          .stripMargin)).as("p"))
-      .select(col("p.l").as("id_l"), col("p.r").as("id_r"), col("key"))
-    val chainW = Window.partitionBy("key").orderBy(col("sort"), col("id"))
-    val chainPairs = kept.filter(col("__cnt") > allPairsCap)
-      .withColumn("__nxt", lead(col("id"), 1).over(chainW))
-      .filter(col("__nxt").isNotNull)
-      .select(least(col("id"), col("__nxt")).as("id_l"),
-        greatest(col("id"), col("__nxt")).as("id_r"), col("key"))
-    smallPairs.unionByName(chainPairs).filter(col("id_l") =!= col("id_r"))
-  }
-
-  /** Width-k generalisation of [[chainPairsRanged]] for ANN hot buckets:
-    * every member pairs with the next `width` members in global (key,
-    * sort, id) order, with NO per-key window task. Global ranks are
-    * computed deterministically (range partition → per-partition local
-    * index + two-phase offsets, the same technique as Golden.denseIds —
-    * boundary placement cancels out of offset+localIdx), then pairs are a
-    * hash-partitioned equi-join on (key, rank ± δ), δ = 1..width — fully
-    * parallel on the high-cardinality (key, rank) composite. Exactly the
-    * window plan's pair set, deterministic, scale-safe. */
-  private[graft] def rankedWidthPairs(rows: DataFrame, width: Int): DataFrame = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val ranged = rows
-      .select(col("key").cast("long"), col("sort").cast("long"), col("id").cast("long"))
-      .as[(Long, Long, Long)]
-      .repartitionByRange(parts, col("key"), col("sort"), col("id"))
-      .sortWithinPartitions("key", "sort", "id")
-    val indexed = ranged.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var prevKey = 0L
-      var idx = -1L
-      var have = false
-      it.map { case (k, _, id) =>
-        if (!have || k != prevKey) { idx = 0L; prevKey = k; have = true } else idx += 1
-        (k, id, pid, idx)
+    /** Pairs each buffered member with its next `w` (w ≥ n - 1: all pairs). */
+    private def pairBuffered(w: Long): Unit = {
+      var i = 0
+      while (i < n) {
+        var j = i + 1
+        while (j <= i + w && j < n) { emit(ids(i), ids(j)); j += 1 }
+        i += 1
       }
-    }.toDF("key", "id", "pid", "local_idx")
-    IntermediateCaches.persistTracked(indexed) // persist returns `this`
-    // per-(pid, key) counts are tiny (≤ keys × partitions rows): cumulative
-    // offsets per key in pid order via a window over the aggregate only
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("key").orderBy("pid")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val offsets = indexed.groupBy("key", "pid").agg(count(lit(1)).as("n"))
-      .withColumn("offset", coalesce(sum("n").over(w), lit(0L)))
-      .select("key", "pid", "offset")
-    val rankedIds = indexed.join(broadcast(offsets), Seq("key", "pid"))
-      .select(col("key"), col("id"), (col("offset") + col("local_idx")).as("rank"))
-    val r = rankedIds.select(col("key"), col("id").as("id_b"), col("rank").as("rank_b"))
-    rankedIds
-      .withColumn("rank_b", explode(expr(s"sequence(rank + 1, rank + $width)")))
-      .join(r, Seq("key", "rank_b"))
-      .select(least(col("id"), col("id_b")).as("id_l"),
-        greatest(col("id"), col("id_b")).as("id_r"), col("key"))
+    }
+    private def chainBuffered(): Unit = { pairBuffered(width); chained.add(1L) }
+    private def add(id: Long): Unit = {
+      if (mode == Buffering) {
+        if (n == ids.length)
+          ids = java.util.Arrays.copyOf(ids, math.min(ids.length * 2L, decideAt + 1L).toInt)
+        ids(n.toInt) = id
+        n += 1
+        if (n > decideAt) {
+          if (drops) mode = Dropping
+          else {
+            chainBuffered()
+            var p = math.max(0L, n - width)
+            while (p < n) { ring((p % width).toInt) = ids(p.toInt); p += 1 }
+            mode = Streaming
+          }
+        }
+      } else {
+        if (mode == Streaming) {
+          var d = 1
+          while (d <= width && d <= n) { emit(ring(((n - d) % width).toInt), id); d += 1 }
+          ring((n % width).toInt) = id
+        }
+        n += 1
+      }
+    }
+    private def close(): Unit = {
+      if (mode == Buffering) { if (n <= allUpTo) pairBuffered(n) else chainBuffered() }
+      open = false
+    }
+
+    override def hasNext: Boolean = {
+      while (outI == outN && (open || rows.hasNext)) {
+        outI = 0; outN = 0
+        if (rows.hasNext) {
+          val (k, _, id) = rows.next()
+          if (open && k != key) close()
+          if (!open) { key = k; open = true; n = 0L; mode = Buffering }
+          add(id)
+        } else close()
+      }
+      outI < outN
+    }
+    override def next(): (Long, Long, Long) = {
+      if (!hasNext) throw new NoSuchElementException
+      outI += 3
+      (out(outI - 3), out(outI - 2), out(outI - 1))
+    }
   }
 
   /** Bucket-size skew report (≙ Splink n_largest_blocks,
@@ -519,8 +314,8 @@ object PairGen {
   *
   * The bucket key packs the band index into the top 8 bits of the 64-bit
   * band hash — provenance is recovered with a shift, no extra join, and
-  * the key stays a primitive long through PairGen's whole skew machinery
-  * (hash-agg buffers, range partitioning, the typed chain kernel).
+  * the key stays a primitive long through PairGen's whole pass (hash
+  * exchange, partition sort, the typed per-partition kernel).
   *
   * Collision math for the 56-bit hash space at target scale (why this is
   * safe at 10^12 docs and a struct (band_idx, hash64) key is not needed):

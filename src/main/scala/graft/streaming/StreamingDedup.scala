@@ -49,7 +49,7 @@ object StreamingDedup {
 
   /** Streaming near-duplicate candidate detector: flag likely near-dups of
     * incoming docs against the recent horizon, in-flight. LSH band hashes
-    * of the 128-perm MinHash signature key a bounded per-bucket state
+    * of the 128-slot MinHash signature key a bounded per-bucket state
     * (most-recent `bucketCap` members, evicted by event-time timeout one
     * horizon after the bucket's last arrival); each arrival is verified
     * against bucket members by SimHash Hamming distance

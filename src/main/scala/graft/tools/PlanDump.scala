@@ -9,8 +9,8 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
   * Writes <outDir>/<query>_<suffix>.txt per query. Building a query's
-  * DataFrame may run the engine's eager plan-construction actions (PairGen
-  * big-key collect, CC fast-path collect) — the dumped plan is the FINAL
+  * DataFrame may run the engine's eager plan-construction actions (the CC
+  * fast-path collect) — the dumped plan is the FINAL
   * returned frame's physical plan, the one the caller's action executes.
   */
 object PlanDump {

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * observed values of every driver-side bound the engine argues about
   * ([[graft.stages.ScaleStats]]):
   *
-  *   - PairGen hot-key collect vs BroadcastKeyLimit (2M) — and whether the
-  *     windowed fallback ever fired;
+  *   - how many hot buckets PairGen chained (no driver bound: the pass
+  *     chains them in place);
   *   - CC fast-path edge collect vs DriverFastPathMaxEdges (4M) / the
   *     distributed path's edge count;
   *

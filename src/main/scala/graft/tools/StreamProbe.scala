@@ -32,6 +32,8 @@ object StreamProbe {
       // state store shards = shuffle partitions for the stateful operator
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      // recentProgress must retain every batch of one drain (see below)
+      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.expr.GraftFunctions.register(spark)
@@ -66,17 +68,28 @@ object StreamProbe {
     // the earlier batches of a multi-micro-batch drain (e.g. an extra
     // timeout-only batch) and re-added the previous drain's counts when a
     // drain produced no new progress. recentProgress is scanned after
-    // EVERY drain, so the retention buffer (default 100) only has to hold
-    // one drain's batches — the scan is synchronous and exact, with no
-    // listener-bus delivery race.
+    // EVERY drain, so the retention buffer (raised to 10,000 above) only
+    // has to hold one drain's batches — the scan is synchronous and exact,
+    // with no listener-bus delivery race. Batch ids run 0, 1, 2, …, every
+    // drain adds at least one, and the buffer drops its oldest entries
+    // first: a gap, or a drain with no new batch, means a batch left the
+    // buffer before it was scanned and the eviction count would be short,
+    // so the probe fails instead.
     val seenBatches = scala.collection.mutable.Set.empty[Long]
-    def accountProgress(): Unit =
+    def accountProgress(): Unit = {
+      val before = seenBatches.size
       for (p <- q.recentProgress; if seenBatches.add(p.batchId);
            so <- p.stateOperators) {
         maxStateRows = math.max(maxStateRows, so.numRowsTotal)
         maxStateBytes = math.max(maxStateBytes, so.memoryUsedBytes)
         evicted += so.numRowsRemoved
       }
+      val missing = (0L until seenBatches.size.toLong).filterNot(seenBatches)
+      val lost = if (missing.isEmpty) "this drain's batches" else s"batches ${missing.take(5).mkString(",")}"
+      require(seenBatches.size > before && missing.isEmpty,
+        s"progress of $lost was evicted before it was read: " +
+          "raise spark.sql.streaming.numRecentProgressUpdates")
+    }
     val t0 = System.nanoTime()
     rows.grouped(perBatch).zipWithIndex.foreach { case (batch, b) =>
       val ts = new java.sql.Timestamp(baseMs + b * stepMs)

@@ -133,8 +133,7 @@ class PipelineSpec extends SparkSpec {
     assert(m("clusters") > 0 && m("clusters") <= N)
     // telemetry rows: observed value AND its limit, so an operator watching
     // the table sees headroom shrinking before a bound trips
-    for (k <- Seq("pairgen_max_big_keys_collected", "pairgen_broadcast_key_limit",
-        "pairgen_windowed_fallbacks", "cc_max_driver_edges",
+    for (k <- Seq("pairgen_max_big_keys_collected", "cc_max_driver_edges",
         "cc_driver_fast_path_limit", "cc_driver_runs", "cc_distributed_runs"))
       assert(m.contains(k), s"missing telemetry row $k in metrics: ${m.keys}")
     // this run resolved CC somewhere — one of the two paths must have fired

@@ -64,19 +64,41 @@ class PlanQualitySpec extends SparkSpec {
     df.collect() // force execution: the generated static calls must compile
   }
 
-  test("PairGen small-bucket path: bounded shuffles, bucket cache shared by both branches") {
+  test("PairGen is one lazy pass: no job at call time, one hash exchange, no range/window/cache") {
     import spark.implicits._
-    val buckets = (1L to 100L).map(i => (i % 10, i, i)).toDF("key", "id", "sort")
-    val p = plan(stages.PairGen.pairs(buckets))
-    // the big-key count runs as its own bounded-collect job at build time
-    // and materializes the bucket cache; the returned plan reads that cache
-    // instead of re-running the explode upstream. (With zero hot keys the
-    // chain branch is pruned away entirely — PropagateEmptyRelation — so
-    // exactly one cache scan remains.)
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
-    assert(exchanges <= 4, s"too many shuffles ($exchanges):\n$p")
-    assert(p.contains("InMemoryTableScan"),
-      s"pair branches must read the shared bucket cache:\n$p")
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // small buckets plus one hot bucket (past the all-pairs cap of 64)
+    val buckets = ((1L to 100L).map(i => (i % 10, i, i)) ++
+      (1L to 100L).map(i => (99L, 1000L + i, i))).toDF("key", "id", "sort")
+    val sc = spark.sparkContext
+    val others = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    // the listener bus delivers in order: once the marker job is seen,
+    // every job submitted before it has been seen too
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "pairgen-marker"))
+          marker.countDown()
+        else others.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val frames = try {
+      val fs = Seq(stages.PairGen.pairs(buckets),
+        stages.PairGen.pairs(buckets, 64, dropHotAbove = Some(50)),
+        stages.PairGen.pairs(buckets, 16, dropHotAbove = Some(80), chainWidth = 3))
+      sc.setJobDescription("pairgen-marker")
+      sc.parallelize(Seq(1)).count()
+      sc.setJobDescription(null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+      fs
+    } finally sc.removeSparkListener(listener)
+    assert(others.get() == 0, s"PairGen.pairs ran ${others.get()} Spark job(s) at call time")
+    for (df <- frames) {
+      val p = plan(df)
+      assert("Exchange hashpartitioning".r.findAllIn(p).length == 1, s"expected one hash exchange:\n$p")
+      for (bad <- Seq("rangepartitioning", "Window", "InMemory"))
+        assert(!p.contains(bad), s"unexpected $bad in the PairGen plan:\n$p")
+    }
   }
 
   test("q08 dense ids avoid the single-partition global window (W6 hazard)") {

@@ -5,31 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class HashingSpec extends AnyFunSuite {
   private val cfg = EngineConfig.default
-  private val (pa, pb) = Hashing.permConstants(cfg.numPerms, cfg.seed)
+  private def docMinhash(text: String): Array[Long] =
+    Hashing.docSigPair(text, cfg.shingleK, cfg.numPerms, cfg.seed)._1
 
   test("hash64 is deterministic and spread") {
     assert(Hashing.hash64("hello") == Hashing.hash64("hello"))
     assert(Hashing.hash64("hello") != Hashing.hash64("hellp"))
     assert(Hashing.hash64("") != Hashing.hash64("a"))
-  }
-
-  test("permConstants are in-range and seed-stable") {
-    assert(pa.forall(a => a >= 1 && a < Hashing.MersennePrime))
-    assert(pb.forall(b => b >= 0 && b < Hashing.MersennePrime))
-    val (pa2, _) = Hashing.permConstants(cfg.numPerms, cfg.seed)
-    assert(pa.sameElements(pa2))
-    val (pa3, _) = Hashing.permConstants(cfg.numPerms, cfg.seed + 1)
-    assert(!pa.sameElements(pa3))
-  }
-
-  test("permHash stays within [0, p)") {
-    val rnd = new java.util.SplittableRandom(3)
-    for (_ <- 0 until 10000) {
-      val x = rnd.nextLong()
-      val idx = rnd.nextInt(cfg.numPerms)
-      val h = Hashing.permHash(x, pa(idx), pb(idx))
-      assert(h >= 0 && h < Hashing.MersennePrime, s"x=$x idx=$idx h=$h")
-    }
   }
 
   test("shingleHashes: counts, determinism, short docs empty") {
@@ -43,24 +25,27 @@ class HashingSpec extends AnyFunSuite {
   }
 
   test("minhash estimate concentrates around true Jaccard") {
+    // text in, signature out — the production path (docSigPair), measured
+    // against the exact Jaccard of the two documents' shingle sets
     val rnd = new java.util.SplittableRandom(7)
-    val base = Array.fill(300)(rnd.nextLong())
-    // overlap fraction f -> true jaccard f/(2-f)
+    val words = Array.fill(300)("w" + rnd.nextInt(100000))
     for (f <- Seq(0.5, 0.8, 0.95)) {
       val keep = (300 * f).toInt
-      val other = base.take(keep) ++ Array.fill(300 - keep)(rnd.nextLong())
-      val sl = Hashing.minhash(base, pa, pb)
-      val sr = Hashing.minhash(other, pa, pb)
-      val est = Hashing.jaccardEstimate(sl, sr)
-      val truth = Hashing.exactJaccard(base, other)
+      val other = words.take(keep) ++ Array.fill(300 - keep)("v" + rnd.nextInt(100000))
+      val (a, b) = (words.mkString(" "), other.mkString(" "))
+      val est = Hashing.jaccardEstimate(docMinhash(a), docMinhash(b))
+      val truth = Hashing.exactJaccard(
+        Hashing.shingleHashes(a, cfg.shingleK), Hashing.shingleHashes(b, cfg.shingleK))
       assert(math.abs(est - truth) < 0.13, s"f=$f est=$est truth=$truth")
     }
   }
 
   test("minhash of identical sets is identical; of empty set is null") {
-    val s = Array(1L, 2L, 3L)
-    assert(Hashing.minhash(s, pa, pb).sameElements(Hashing.minhash(s.reverse, pa, pb)))
-    assert(Hashing.minhash(Array.empty[Long], pa, pb) == null)
+    // same tokens under different whitespace = same shingle set
+    assert(docMinhash("a b c d e").sameElements(docMinhash(" a\tb  c d\ne ")))
+    // fewer than shingleK tokens = empty shingle set = unlinkable
+    assert(docMinhash("a b") == null)
+    assert(docMinhash("") == null)
   }
 
   test("minhashOph estimate concentrates around true Jaccard") {
@@ -210,15 +195,12 @@ class HashingSpec extends AnyFunSuite {
   }
 
   test("docSigPair equals the split minhash/simhash expressions' kernels") {
-    for (t <- randomTexts; kernel <- Seq("oph", "perm")) {
-      val oph = kernel == "oph"
-      val (mh, sim) = Hashing.docSigPair(t, cfg.shingleK, cfg.numPerms, cfg.seed, oph, pa, pb)
-      val sh = Hashing.shingleHashes(t, cfg.shingleK)
-      val expectMh = if (oph) Hashing.minhashOph(sh, cfg.numPerms, cfg.seed)
-        else Hashing.minhash(sh, pa, pb)
+    for (t <- randomTexts) {
+      val (mh, sim) = Hashing.docSigPair(t, cfg.shingleK, cfg.numPerms, cfg.seed)
+      val expectMh = Hashing.minhashOph(Hashing.shingleHashes(t, cfg.shingleK), cfg.numPerms, cfg.seed)
       assert(sim == Hashing.simhashReference(t), s"simhash mismatch on <$t>")
       if (expectMh == null) assert(mh == null, s"minhash null mismatch on <$t>")
-      else assert(mh.sameElements(expectMh), s"minhash mismatch on <$t> kernel=$kernel")
+      else assert(mh.sameElements(expectMh), s"minhash mismatch on <$t>")
     }
   }
 

@@ -5,15 +5,25 @@ import graft.SparkSpec
 class ScaleStatsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("PairGen records the observed hot-key collect against its bound") {
+  test("PairGen counts its chained buckets when the pass runs") {
+    def chained = ScaleStats.snapshot()("pairgen_max_big_keys_collected")
     ScaleStats.reset()
     // one hot key (100 members > cap 4) + one small key
     val buckets = ((1L to 100L).map(i => (7L, i, i)) ++ Seq((9L, 1L, 201L), (9L, 2L, 202L)))
       .toDF("key", "sort", "id")
-    PairGen.pairs(buckets, allPairsCap = 4).count()
-    assert(ScaleStats.maxBigKeysCollected.get() === 1L)
-    assert(ScaleStats.windowedFallbacks.get() === 0L)
-    assert(ScaleStats.snapshot()("pairgen_broadcast_key_limit") === PairGen.BroadcastKeyLimit)
+    val pairs = PairGen.pairs(buckets, allPairsCap = 4)
+    assert(chained === 0L) // lazy: nothing has run yet
+    pairs.count()
+    assert(chained === 1L)
+    // with dropHotAbove above the cap only the chain band counts: key 7
+    // (100 members) is dropped, key 8 (30 members) chains
+    ScaleStats.reset()
+    val banded = buckets.unionByName(
+      (1L to 30L).map(i => (8L, i, 300L + i)).toDF("key", "sort", "id"))
+    PairGen.pairs(banded, allPairsCap = 4, dropHotAbove = Some(50)).count()
+    assert(chained === 1L)
+    assert(ScaleStats.snapshot().keySet.filter(_.startsWith("pairgen_")) ===
+      Set("pairgen_max_big_keys_collected"))
   }
 
   test("CC records edge counts per path: driver fast path vs distributed loop") {

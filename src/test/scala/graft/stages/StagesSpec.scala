@@ -61,17 +61,6 @@ class StagesSpec extends SparkSpec {
     } finally df.unpersist()
   }
 
-  test("minhash_sig: unknown kernel fails at analysis, not as silent perm signatures") {
-    // a typo'd kernel silently computing perm signatures would disagree
-    // bit-for-bit with every oph-signed table — recall collapse, no error
-    graft.expr.GraftFunctions.register(spark)
-    def chain(t: Throwable): String =
-      if (t == null) "" else t.toString + " | " + chain(t.getCause)
-    val ex = intercept[Throwable](
-      spark.sql("SELECT minhash_sig('abc def ghi', 3, 16, 42, 'ohp')").collect())
-    assert(chain(ex).contains("unknown minhash kernel"), chain(ex))
-  }
-
   test("PairGen: chain band when dropHotAbove > allPairsCap (exact counts via sliver job)") {
     // key A: 10 members (all-pairs), key B: 30 (chain band: > cap 16,
     // <= dropHot 50), key C: 60 (dropped: > 50)
@@ -83,10 +72,7 @@ class StagesSpec extends SparkSpec {
     assert(pairs.count(_._3 == 1L) == 45) // C(10,2)
     assert(pairs.count(_._3 == 2L) == 29) // chain n-1
     assert(!pairs.exists(_._3 == 3L))     // df-pruned
-    // windowed fallback agrees on the same input
-    val win = PairGen.pairsWindowed(rows.toDF("key", "id", "sort"), 16, Some(50))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(win == pairs.toSet)
+    assert(pairs.toSeq.sorted == PairGenOracle.pairs(rows, 16, Some(50)))
   }
 
   test("PairGen: all pairs for small buckets, chain for hot, none for singles") {
@@ -103,10 +89,10 @@ class StagesSpec extends SparkSpec {
     assert(!pairs.exists(_._3 == 200L))
   }
 
-  test("PairGen: mega-bucket chains via range partitioning across tasks, no per-key window") {
-    // one hot key with 5,000 members, scrambled sort order — must spread
-    // over multiple range partitions and still emit EXACTLY the global
-    // consecutive chain (boundary stitching included)
+  test("PairGen: mega-bucket emits exactly its (sort, id) chain, streamed past the cap") {
+    // one hot key with 5,000 members spread over 8 input partitions,
+    // scrambled sort order — the pass streams it after 65 buffered ids
+    // and must still emit EXACTLY the consecutive chain
     val rows = (1L to 5000L).map(i => (42L, i, graft.expr.Hashing.mix64(i)))
     val buckets = rows.toDF("key", "id", "sort").repartition(8)
     val got = PairGen.pairs(buckets).as[(Long, Long, Long)].collect()
@@ -115,22 +101,14 @@ class StagesSpec extends SparkSpec {
     val want = ordered.zip(ordered.tail)
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.toSet
     assert(got == want, s"chain mismatch: missing ${(want -- got).take(5)}, extra ${(got -- want).take(5)}")
-    // plan shape: range exchange present; the only Window allowed is the
-    // boundary stitch (ordered by pid/kind over ≤ 2 rows per key ×
-    // partition) — a window touching the data's `sort` column would be the
-    // full-bucket single-task hazard this path exists to avoid
-    val plan = PairGen.pairs(buckets).queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning"), s"expected range exchange:\n$plan")
-    val windowLines = plan.linesIterator.filter(_.contains("windowspecdefinition")).toList
-    assert(windowLines.forall(l => l.contains("pid#") && !l.contains("sort#")),
-      s"hot path may window only the boundary table:\n$plan")
   }
 
-  test("PairGen: rankedWidthPairs equals the per-key width-k window pair set") {
+  test("PairGen: chainWidth k pairs each member with its next k in (sort, id) order") {
     val width = 3
     val rows = ((1L to 500L).map(i => (5L, i, graft.expr.Hashing.mix64(i * 13))) ++
       (1L to 40L).map(i => (9L, 1000L + i, graft.expr.Hashing.mix64(i))))
-    val got = PairGen.rankedWidthPairs(rows.toDF("key", "id", "sort").repartition(8), width)
+    val got = PairGen.pairs(rows.toDF("key", "id", "sort").repartition(8),
+        allPairsCap = 0, chainWidth = width)
       .as[(Long, Long, Long)].collect().toSet
     val want = rows.groupBy(_._1).flatMap { case (k, members) =>
       val ordered = members.sortBy(r => (r._3, r._2)).map(_._2)
@@ -145,7 +123,7 @@ class StagesSpec extends SparkSpec {
   }
 
   test("PairGen streamed pass: many adjacent groups per partition, mixed sizes") {
-    // exercises the emit-while-buffering-next-group path of streamedTagged:
+    // exercises the emit-while-buffering-next-group path of the pass:
     // hundreds of groups land in each shuffle partition, sizes 1..6 plus a
     // dropped big group, so group closes interleave densely with emission
     val rnd = new java.util.SplittableRandom(5)
@@ -166,14 +144,12 @@ class StagesSpec extends SparkSpec {
       s"missing ${(want -- got).take(5)}, extra ${(got -- want).take(5)} (|got|=${got.size}, |want|=${want.size})")
   }
 
-  test("PairGen: windowed fallback produces the identical pair set") {
-    val buckets = ((1L to 5L).map(i => (100L, i, i)) ++
-      (1L to 80L).map(i => (300L, 1000L + i, i)) ++ Seq((200L, 9L, 9L)))
-      .toDF("key", "id", "sort")
-    val main = PairGen.pairs(buckets).as[(Long, Long, Long)].collect().toSet
-    val fallback = PairGen.pairsWindowed(buckets, PairGen.AllPairsCap, None)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(main == fallback)
+  test("PairGen: small, hot and single buckets equal the oracle pair set") {
+    val rows = (1L to 5L).map(i => (100L, i, i)) ++
+      (1L to 80L).map(i => (300L, 1000L + i, i)) ++ Seq((200L, 9L, 9L))
+    val got = PairGen.pairs(rows.toDF("key", "id", "sort"))
+      .as[(Long, Long, Long)].collect().toSeq.sorted
+    assert(got == PairGenOracle.pairs(rows))
   }
 
   test("PairGen: dropHotAbove excludes boilerplate buckets entirely") {
@@ -185,31 +161,25 @@ class StagesSpec extends SparkSpec {
     assert(pairs.length == 1)
   }
 
-  test("PairGen: main and windowed plans agree when dropHotAbove < allPairsCap") {
-    // the df band (dropHotAbove, allPairsCap] must be DROPPED by both plans:
-    // a fingerprint with df 51-64 is boilerplate under the df cap even
+  test("PairGen: pass and oracle agree when dropHotAbove < allPairsCap") {
+    // the df band (dropHotAbove, allPairsCap] must be DROPPED: a
+    // fingerprint with df 51-64 is boilerplate under the df cap even
     // though it would fit the all-pairs cap
-    val buckets = ((1L to 55L).map(i => (10L, i, i)) ++   // in the band → drop
-      (1L to 80L).map(i => (20L, 100L + i, i)) ++          // above both → drop
-      (1L to 5L).map(i => (30L, 200L + i, i)))             // small → all-pairs
-      .toDF("key", "id", "sort")
-    val main = PairGen.pairs(buckets, 64, dropHotAbove = Some(50))
-      .as[(Long, Long, Long)].collect().toSet
-    val windowed = PairGen.pairsWindowed(buckets, 64, dropHotAbove = Some(50))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(main == windowed, s"plan divergence: ${main.diff(windowed)} vs ${windowed.diff(main)}")
-    assert(main.forall(_._3 == 30L) && main.size == 10)
+    val rows = (1L to 55L).map(i => (10L, i, i)) ++   // in the band → drop
+      (1L to 80L).map(i => (20L, 100L + i, i)) ++      // above both → drop
+      (1L to 5L).map(i => (30L, 200L + i, i))          // small → all-pairs
+    val got = PairGen.pairs(rows.toDF("key", "id", "sort"), 64, dropHotAbove = Some(50))
+      .as[(Long, Long, Long)].collect().toSeq.sorted
+    assert(got == PairGenOracle.pairs(rows, 64, Some(50)))
+    assert(got.forall(_._3 == 30L) && got.size == 10)
 
     // and with dropHotAbove > allPairsCap: (allPairsCap, cap] chains, > cap drops
-    val buckets2 = ((1L to 70L).map(i => (40L, i, i)) ++   // chain (64 < 70 ≤ 100)
-      (1L to 120L).map(i => (50L, 300L + i, i)))           // drop (> 100)
-      .toDF("key", "id", "sort")
-    val main2 = PairGen.pairs(buckets2, 64, dropHotAbove = Some(100))
-      .as[(Long, Long, Long)].collect().toSet
-    val windowed2 = PairGen.pairsWindowed(buckets2, 64, dropHotAbove = Some(100))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(main2 == windowed2)
-    assert(main2.forall(_._3 == 40L) && main2.size == 69)
+    val rows2 = (1L to 70L).map(i => (40L, i, i)) ++   // chain (64 < 70 ≤ 100)
+      (1L to 120L).map(i => (50L, 300L + i, i))        // drop (> 100)
+    val got2 = PairGen.pairs(rows2.toDF("key", "id", "sort"), 64, dropHotAbove = Some(100))
+      .as[(Long, Long, Long)].collect().toSeq.sorted
+    assert(got2 == PairGenOracle.pairs(rows2, 64, Some(100)))
+    assert(got2.forall(_._3 == 40L) && got2.size == 69)
   }
 
   test("withSignatures: n_shingles is the document's real shingle count") {
@@ -218,8 +188,8 @@ class StagesSpec extends SparkSpec {
     val docs = Seq((1L, text), (2L, "tiny")).toDF("id", "text")
     val got = Signatures.withSignatures(docs, cfg)
       .select("id", "n_shingles").as[(Long, Int)].collect().toMap
-    // Model.DocSig contract: the field is the COUNT (docSignature parity),
-    // not the permutation constant; 0 still marks unlinkable docs
+    // Model.DocSig contract: the field is the shingle COUNT, not the
+    // signature length; 0 still marks unlinkable docs
     val real = docs.filter(col("id") === 1L)
       .select(size(graft.expr.GraftFunctions.shingleHashes(col("text"), cfg.shingleK)))
       .as[Int].head()
