@@ -2,6 +2,7 @@ package graft.stages
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 /** Distributed connected components — the engine's replacement for Splink's
   * `cluster_pairwise_predictions_at_threshold`
@@ -9,9 +10,13 @@ import org.apache.spark.sql.functions._
   *
   * Alternating large-star / small-star (Kiveris et al., "Connected
   * Components in MapReduce and Beyond", SoCC'14) on a Dataset of edges:
-  * O(log n) rounds, each round = groupBy(min) + join, no vertex state
-  * collected to the driver. `localCheckpoint` between rounds cuts the
-  * lineage blow-up (the known failure mode at scale, SURVEY §7.5.1).
+  * O(log n) rounds, no vertex state collected to the driver. Each star
+  * pass is one hash exchange on the node plus a streamed pass over that
+  * node's sorted neighbours. An iteration is two rounds under one lineage
+  * cut (`localCheckpoint`, against the lineage blow-up that is the known
+  * failure mode at scale, SURVEY §7.5.1) and ends in one aggregation that
+  * stops the loop as soon as the graph is a min-rooted star forest.
+  * Small edge sets skip the loop for driver union-find.
   *
   * Output invariant (SURVEY §1.4.3): cluster_id = MIN member id — relied on
   * by everything downstream in the reference (`WHERE id = cluster_id`
@@ -58,13 +63,13 @@ object ConnectedComponents {
   }
 
   /** @param edges columns src:long, dst:long (undirected, any orientation)
-    * @param maxIterations bound on star ROUNDS (large-star+small-star = 2
-    *        rounds per loop pass; the loop checks convergence every other
-    *        round, so it may run at most one round past the bound before
-    *        noticing). Exhausting the bound without a fixpoint THROWS —
-    *        an unconverged star graph would silently yield a wrong cluster
-    *        set, the worst failure mode. Practically unreachable at the
-    *        default 50 (convergence is log-diameter, 4-6 rounds typical).
+    * @param maxIterations bound on star ROUNDS (one round = a large-star
+    *        pass + a small-star pass; an iteration runs two rounds and then
+    *        the stop test, so the loop may run one round past an odd
+    *        bound). Exhausting the bound without reaching a star forest
+    *        THROWS — an unconverged graph would silently yield a wrong
+    *        cluster set, the worst failure mode. Practically unreachable at
+    *        the default 50 (convergence is log-diameter, 2-6 rounds typical).
     * @param reliableCheckpoint cut lineage with a RELIABLE `checkpoint()`
     *        (requires `spark.sparkContext.setCheckpointDir`) instead of
     *        `localCheckpoint`. localCheckpoint stores blocks in executor
@@ -75,8 +80,10 @@ object ConnectedComponents {
     *        to localCheckpoint when no dir is set. Both paths produce
     *        identical assignments (spec-pinned).
     * @param fastPathMaxEdges run driver union-find instead of the
-    *        distributed loop when the canonical edge count (known anyway —
-    *        the input-materialize action) is ≤ this; 0 disables.
+    *        distributed loop when the canonical edge count is ≤ this (one
+    *        limit-collect decides, and its cache feeds the loop when the
+    *        bound is exceeded); 0 disables, and the loop reads `edges`
+    *        directly.
     * @return (id, cluster_id) for every id appearing in `edges`. Callers
     *         union singletons (ids without edges) with cluster_id = id. */
   def run(spark: SparkSession, edges: DataFrame, maxIterations: Int = 50,
@@ -84,32 +91,23 @@ object ConnectedComponents {
           fastPathMaxEdges: Long = DriverFastPathMaxEdges): DataFrame = {
     import spark.implicits._
     val useReliable = reliableCheckpoint && spark.sparkContext.getCheckpointDir.isDefined
-    // LAZY checkpoint: the per-iteration convergence-signature action
-    // materializes it, so each round costs ONE job instead of an eager
-    // checkpoint job plus the signature job — per-job scheduling is serial
+    // LAZY checkpoint: the iteration's stop-test action materializes it, so
+    // the cut costs no job of its own — per-job scheduling is serial
     // driver time, the enemy of N→4N scaling efficiency
     def cut(df: DataFrame): DataFrame =
       if (useReliable) df.checkpoint(false) else df.localCheckpoint(false)
 
-    // All loop persists route through IntermediateCaches so the documented
-    // cache contract (Pipeline.clearIntermediateCaches) can release the
-    // final converged star graph — the returned assignments are lazy over
-    // it, so run() itself must not unpersist it. Superseded iterations are
-    // unpersisted in-loop (the tracked double-release is a no-op).
-    var e = IntermediateCaches.persistTracked(canonicalEdges(edges))
-
-    var converged = false
-    var iter = 0
-    var prevSig: (Long, Long, Long) = (-1L, -1L, -1L)
-
+    // the loop's input: the fast path's canonical cache when it was
+    // filled, else the caller's edges (which the loop never unpersists)
+    var g = edges
+    var owned = false
     if (fastPathMaxEdges > 0) {
+      val e = IntermediateCaches.persistTracked(canonicalEdges(edges))
       // ONE action decides the plan AND feeds the fast path: collect up to
       // bound+1 canonical edges. Small graph (the common case at bench
-      // scale): this scans every partition (limit never satisfied),
-      // populating e's cache exactly like a count would — then union-find
-      // on the driver, zero distributed rounds. Big graph: the limit
-      // short-circuits early and the loop below pays one count to finish
-      // cache materialization.
+      // scale): union-find on the driver, zero distributed rounds. Big
+      // graph: the collect has filled e's cache, and the loop starts from
+      // it.
       // Two ceilings regardless of config: a hard 100M (beyond it the
       // union-find arrays outgrow any sane driver heap) and a HEAP-DERIVED
       // cap — the fast path transiently holds ~200 B/edge (collected Tuple2
@@ -124,8 +122,7 @@ object ConnectedComponents {
       // ⌈log₄(parts)⌉ + 1 SERIAL job submissions in the common small-graph
       // case (limit never satisfied). Scanning everything in wave 1 is
       // never wasted here: a small graph needs every partition anyway,
-      // and a big graph falls through to the count() below, which needs
-      // full materialization regardless (the cache keeps wave-1 work).
+      // and a big graph's loop reads every cached partition.
       val arr = ExecHints.singleWaveTake(spark) {
         e.limit(bound + 1).as[(Long, Long)].collect()
       }
@@ -145,81 +142,57 @@ object ConnectedComponents {
           spark.sparkContext.parallelize(assigned, spark.sparkContext.defaultParallelism))
           .toDF("id", "cluster_id")
       }
+      g = e
+      owned = true
     }
-    // materialize input once so iterations read only the cache
-    val edgeCount = e.count()
-    ScaleStats.ccDistributedRuns.incrementAndGet()
-    ScaleStats.recordMax(ScaleStats.maxCcDistributedEdges, edgeCount)
-    while (!converged && iter < maxIterations) {
-      // TWO star rounds per convergence action: each action is one serial
-      // job submission (driver scheduling + plan compile — the
-      // size-independent Amdahl term that caps N→4N efficiency), and a
-      // typical run needs 4-6 rounds, so checking every other round halves
-      // the action count. Convergence stays exact: a converged graph is a
-      // fixpoint of starRound, so its signature is unchanged by one round
-      // or two; at worst one extra (no-op) round runs after the true
-      // fixpoint. The lineage cut lands once per double-round.
-      // Persist BEFORE the signature action and compute the signature FROM
-      // the cached frame: the one action then populates the SQL cache as a
-      // side effect of the scan (and materializes the lazy checkpoint).
-      // Computing the signature on the raw `small` instead leaves the new
-      // e's InMemoryRelation unpopulated when the next round plans over it,
-      // which defeats exchange reuse across the double-star plan's repeated
-      // references — measured as the same shuffle executing 10-15× per
-      // round (90+ stages and 4× round-over-round wall growth at 1.2M
-      // edges) versus ~14 stages with the cache warm.
-      val small = IntermediateCaches.persistTracked(cut(doubleStarRound(e)))
 
-      // convergence signature: summands bounded by 2^32 so the ANSI-mode
-      // sum cannot overflow below ~2^31 edges per partition-set
-      val sig = small.agg(
-        count(lit(1)),
-        coalesce(sum(shiftrightunsigned(xxhash64($"src", $"dst"), 32)), lit(0L)),
-        coalesce(sum($"dst".bitwiseAND(lit(0xffffffffL))), lit(0L)))
-        .as[(Long, Long, Long)].head()
-      converged = sig == prevSig
-      prevSig = sig
-      e.unpersist()
-      e = small
-      iter += 2 // two star rounds ran — count both against maxIterations
+    ScaleStats.ccDistributedRuns.incrementAndGet()
+    // the first large-star pass counts the distinct canonical edges as its
+    // sorted stream meets them — the loop needs no count job
+    val distinctEdges = spark.sparkContext.longAccumulator("cc_distinct_edges")
+    // All loop persists route through IntermediateCaches so the documented
+    // cache contract (Pipeline.clearIntermediateCaches) can release the
+    // final star forest — the returned assignments are lazy over it, so
+    // run() itself must not unpersist it. Superseded iterations are
+    // unpersisted in-loop (the tracked double-release is a no-op).
+    var converged = false
+    var rounds = 0
+    while (!converged && rounds < maxIterations) {
+      // Persist BEFORE the stop-test action and test the cached frame: the
+      // one action fills the cache (and the lazy checkpoint) as a side
+      // effect of its scan, so the next iteration reads only the cache.
+      val next = IntermediateCaches.persistTracked(
+        cut(starIteration(g, if (rounds == 0) Some(distinctEdges) else None)))
+      // one job wave for the take (ExecHints.singleWaveTake): any breaking
+      // node anywhere means another iteration
+      converged = ExecHints.singleWaveTake(spark) {
+        starForestBreaks(next).limit(1).collect()
+      }.isEmpty
+      if (rounds == 0)
+        ScaleStats.recordMax(ScaleStats.maxCcDistributedEdges, distinctEdges.value)
+      if (owned) g.unpersist()
+      g = next
+      owned = true
+      rounds += 2
     }
     if (!converged)
       throw new IllegalStateException(
         s"connected components did not converge within $maxIterations star rounds " +
-          s"($iter ran) — emitting the unconverged graph would silently produce " +
+          s"($rounds ran) — emitting the unconverged graph would silently produce " +
           "wrong cluster assignments; raise maxIterations")
+    ScaleStats.recordMax(ScaleStats.maxCcStarRounds, rounds)
 
-    // star graph: every src points at its component's min id; roots appear
-    // only as dst. Emit both directions of the assignment.
-    val assignments = e.select($"src".as("id"), $"dst".as("cluster_id"))
-      .unionByName(e.select($"dst".as("id"), $"dst".as("cluster_id")))
+    // star forest: every src points at its component's min id; roots
+    // appear only as dst. Emit both directions of the assignment.
+    val assignments = g.select($"src".as("id"), $"dst".as("cluster_id"))
+      .unionByName(g.select($"dst".as("id"), $"dst".as("cluster_id")))
       .groupBy("id").agg(min($"cluster_id").as("cluster_id"))
     assignments
   }
 
-  /** One large-star + small-star round as a lazy transform (Kiveris et
-    * al.): input and output both in canonical src > dst orientation.
-    *
-    * WINDOW formulation, not groupBy(min)+join-back: the neighbourhood
-    * minimum is attached to every edge row with min().over(partitionBy
-    * (src)) — ONE reference to the input per star instead of the 3-4 a
-    * join formulation needs (bi in the agg + bi in the join + the union).
-    * That reference count is what decides whether the composed double-
-    * round plan is executable: subtree copies multiply through the
-    * composition, and Spark's exchange reuse does NOT collapse them all —
-    * measured on 1.2M edges at 32 cores as 90-170 stages and 60-75 s PER
-    * ROUND with the join form (the same shuffle re-executing 10-15×), vs
-    * ~16 stages and 6-10 s with this form. Skew note: WindowExec buffers
-    * one partition's rows (spilling via its unsafe-row buffer) where
-    * groupBy would partial-agg map-side — acceptable here because
-    * large-star's first round breaks giant stars apart, so high-degree
-    * nodes shrink by round, and a spilled O(deg) buffer beats re-executing
-    * every upstream shuffle. */
-  /** Canonical self-loop-free edge set the star loop runs over: long-cast,
-    * src > dst (least as `dst`, greatest as `src` — the star rounds orient
-    * edges pointing DOWN to the smaller id), distinct. ONE definition so
-    * tools that dump/replay the loop's plan (CcBench explain mode) can
-    * never drift from what run() actually executes. */
+  /** Canonical self-loop-free edge set the fast path collects: long-cast,
+    * src > dst (least as `dst`, greatest as `src` — the star passes orient
+    * edges pointing DOWN to the smaller id), distinct. */
   private[graft] def canonicalEdges(edges: DataFrame): DataFrame =
     edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
@@ -228,42 +201,105 @@ object ConnectedComponents {
       .select("src", "dst")
       .distinct()
 
-  private[graft] def starRound(cur: DataFrame): DataFrame = {
-    val wSrc = org.apache.spark.sql.expressions.Window.partitionBy("src")
-    // large-star: for each node u, m = min(Γ(u) ∪ {u}); connect every
-    // strictly-larger neighbour to m. Both orientations are emitted with
-    // ONE Generate over ONE reference — a self-union would reference cur
-    // twice, and in the composed double-round plan that duplicates the
-    // whole inner-round subtree (AQE's exchange-reuse stage cache misses
-    // on it; observed as every inner shuffle executing twice).
-    val bi = cur.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src"), col("e.dst"))
-    val large = bi
-      .withColumn("m", least(col("src"), min(col("dst")).over(wSrc)))
-      .filter(col("dst") > col("src"))
-      .select(col("dst").as("src"), col("m").as("dst"))
-      .distinct()
+  /** One loop iteration as a lazy transform: two rounds, large-star,
+    * small-star, large-star, small-star — four hash exchanges in a chain,
+    * each pass reading the one before it once. */
+  private[graft] def starIteration(g: DataFrame,
+                                   distinctEdges: Option[LongAccumulator] = None): DataFrame =
+    smallStar(largeStar(smallStar(largeStar(g, distinctEdges))))
 
-    // small-star: edges point large→small after large-star; for each u,
-    // m = min of its smaller neighbourhood ∪ itself (= min(dst): every
-    // dst < src); connect the rest of the neighbourhood AND u to m. The
-    // (u, m) row is emitted once per edge and deduped — a per-group
-    // emission would need a second reference or an agg+join.
-    large
-      .withColumn("m", min(col("dst")).over(wSrc))
-      .select(explode(array(
-        struct(col("dst").as("src"), col("m").as("dst")),
-        struct(col("src"), col("m").as("dst")))).as("e"))
-      .select(col("e.src"), col("e.dst"))
+  /** Large-star (Kiveris et al.): for each node u, m = min(Γ(u) ∪ {u});
+    * emit (v, m) for every neighbour v > u. Reads edges in any
+    * orientation, with self-loops and repeats; emits canonical edges
+    * (src > dst) that may repeat. `distinctEdges`, if given, is credited
+    * with the number of distinct undirected input edges. */
+  private[graft] def largeStar(g: DataFrame,
+                               distinctEdges: Option[LongAccumulator] = None): DataFrame = {
+    val e = g.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
+    // both orientations from ONE Generate over ONE reference
+    val bi = e.select(explode(array(
+        struct(col("src").as("k"), col("dst").as("v")),
+        struct(col("dst").as("k"), col("src").as("v")))).as("e"))
+      .select(col("e.k"), col("e.v"))
+    starPass(bi, large = true, distinctEdges.orNull)
   }
 
-  /** The per-convergence-action transform: two star rounds composed. */
-  private[graft] def doubleStarRound(e: DataFrame): DataFrame =
-    starRound(starRound(e))
+  /** Small-star over canonical edges (src > dst): for each node u,
+    * m = its least neighbour, which is min(Γ(u) ∪ {u}) since every
+    * neighbour is smaller; emit (v, m) for every other neighbour v, and
+    * (u, m) once. Output is canonical and may repeat. */
+  private[graft] def smallStar(g: DataFrame): DataFrame =
+    starPass(g.select(col("src").as("k"), col("dst").as("v")), large = false, null)
+
+  /** The PairGen plan shape: one hash exchange on the key, a sort by
+    * (key, neighbour) within partitions, one streamed [[StarPass]]. */
+  private def starPass(kv: DataFrame, large: Boolean, distinctEdges: LongAccumulator): DataFrame = {
+    val spark = kv.sparkSession
+    import spark.implicits._
+    kv.repartition(spark.sessionState.conf.numShufflePartitions, col("k"))
+      .sortWithinPartitions("k", "v")
+      .as[(Long, Long)]
+      .mapPartitions(rows => new StarPass(rows, large, distinctEdges))
+      .toDF("src", "dst")
+  }
+
+  /** The per-partition pass of [[largeStar]] / [[smallStar]] over (k, v)
+    * rows sorted by that pair. State is O(1) per key (the key, its m and
+    * the last neighbour seen); a row equal to the one before it is
+    * skipped, which stands in for a `distinct` of the previous pass's
+    * output. Each remaining row emits at most one edge. */
+  private final class StarPass(rows: Iterator[(Long, Long)], large: Boolean,
+                               distinctEdges: LongAccumulator)
+      extends Iterator[(Long, Long)] {
+    private var open = false
+    private var key = 0L
+    private var last = 0L
+    private var m = 0L
+    private var out: (Long, Long) = null // the next edge, once found
+
+    override def hasNext: Boolean = {
+      while (out == null && rows.hasNext) {
+        val (k, v) = rows.next()
+        val newKey = !open || k != key
+        if (newKey || v != last) {
+          // the first row of a key holds its least neighbour
+          if (newKey) { open = true; key = k; m = if (large) math.min(k, v) else v }
+          last = v
+          if (!large) out = (if (newKey) k else v, m)
+          else if (v > k) {
+            // a distinct (k, v) with v > k: each undirected edge once
+            if (distinctEdges != null) distinctEdges.add(1L)
+            out = (v, m)
+          }
+        }
+      }
+      out != null
+    }
+    override def next(): (Long, Long) = {
+      if (!hasNext) throw new NoSuchElementException
+      val e = out
+      out = null
+      e
+    }
+  }
+
+  /** The loop's stop test: the nodes that break the min-rooted
+    * star-forest shape — a src with two distinct dsts, or a src that is
+    * also a dst. None means every component is a star around a node that
+    * is only ever a dst, and canonical orientation (src > dst) makes that
+    * root the component's min id: an exact certificate of
+    * cluster_id = min(id), where a checksum of the edge set could collide.
+    * One aggregation: a group-by on the node. */
+  private[graft] def starForestBreaks(g: DataFrame): DataFrame =
+    g.select(explode(array(
+        struct(col("src").as("node"), col("dst").as("root")),
+        struct(col("dst").as("node"), lit(null).cast("long").as("root")))).as("r"))
+      .groupBy(col("r.node"))
+      .agg(min(col("r.root")).as("lo"), max(col("r.root")).as("hi"),
+           count(col("r.root")).as("as_src"), count(lit(1)).as("rows"))
+      .filter(col("as_src") > 0 && (col("lo") =!= col("hi") || col("rows") > col("as_src")))
+      .select("node")
 
   /** Driver-side union-find with path compression, min-id labeling —
     * the small-graph execution plan behind [[DriverFastPathMaxEdges]].

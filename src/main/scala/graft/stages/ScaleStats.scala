@@ -9,7 +9,8 @@ import org.apache.spark.util.{AccumulatorV2, LongAccumulator}
   * threshold — a driver-memory bound argued rather than observed; these
   * counters record what it actually sees at run time so a scale probe can
   * report observed headroom instead of an argument (VERDICT r3 item 2).
-  * PairGen reports how many hot buckets took its chain path. Updated only
+  * The distributed loop reports its edge count and star rounds. PairGen
+  * reports how many hot buckets took its chain path. Updated only
   * on the driver (CC's record sites run once per invocation, after an
   * action; PairGen's as its tasks finish), so plain atomics are enough;
   * values are maxima across invocations since [[reset]].
@@ -31,6 +32,8 @@ object ScaleStats {
   val ccFastPathLimitUsed = new AtomicLong(0L)
   /** Largest edge count CC resolved via the distributed star loop. */
   val maxCcDistributedEdges = new AtomicLong(0L)
+  /** Most star rounds (large-star + small-star) one converged loop ran. */
+  val maxCcStarRounds = new AtomicLong(0L)
   /** Invocation counts per CC path. */
   val ccDriverRuns = new AtomicLong(0L)
   val ccDistributedRuns = new AtomicLong(0L)
@@ -65,7 +68,7 @@ object ScaleStats {
 
   def reset(): Unit =
     Seq(maxBigKeysCollected, maxCcDriverEdges,
-      maxCcDistributedEdges, ccDriverRuns, ccDistributedRuns,
+      maxCcDistributedEdges, maxCcStarRounds, ccDriverRuns, ccDistributedRuns,
       ccFastPathLimitUsed).foreach(_.set(0L))
 
   def snapshot(): Map[String, Long] = {
@@ -79,6 +82,7 @@ object ScaleStats {
       "pairgen_max_big_keys_collected" -> maxBigKeysCollected.get(),
       "cc_max_driver_edges" -> ccEdges,
       "cc_max_distributed_edges" -> maxCcDistributedEdges.get(),
+      "cc_max_star_rounds" -> maxCcStarRounds.get(),
       "cc_driver_fast_path_limit" -> ccLimit,
       "cc_driver_runs" -> ccDriverRuns.get(),
       "cc_distributed_runs" -> ccDistributedRuns.get())

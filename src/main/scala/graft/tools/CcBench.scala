@@ -1,10 +1,14 @@
 package graft.tools
 
 import graft.stages.ConnectedComponents
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
-/** Dev-only: CC in isolation on a synthetic edge list. */
+/** Dev-only: CC in isolation on a synthetic edge list.
+  *
+  * Usage: `CcBench [n] [chain|star] [chainLen] [fastPathMaxEdges]`
+  * (defaults 2000, chain, 4, the engine's fast-path bound; 0 forces the
+  * distributed loop). Per-stage wall, CPU, jobs and shuffle come from
+  * `perfbench/run.py --trace 1`. */
 object CcBench {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
@@ -16,60 +20,30 @@ object CcBench {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    // GRAFT_CC_STAGES=1: per-stage telemetry (wall, summed task run time,
-    // task count) to localize where the time goes — driver gaps vs executor
-    if (sys.env.get("GRAFT_CC_STAGES").contains("1")) {
-      spark.sparkContext.addSparkListener(new SparkListener {
-        private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-          t0.put(s.stageInfo.stageId, System.nanoTime())
-        override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-          val si = s.stageInfo
-          val wall = Option(t0.remove(si.stageId))
-            .map(t => (System.nanoTime() - t) / 1e9).getOrElse(-1.0)
-          println(f"[stage] id=${si.stageId} tasks=${si.numTasks} wall=$wall%.2f " +
-            f"run=${si.taskMetrics.executorRunTime / 1e3}%.1f " +
-            f"cpu=${si.taskMetrics.executorCpuTime / 1e9}%.1f " +
-            f"gc=${si.taskMetrics.jvmGCTime / 1e3}%.1f " +
-            f"shufW=${si.taskMetrics.shuffleWriteMetrics.bytesWritten} " +
-            si.name.take(60))
-        }
-      })
-    }
-
     val n = if (args.nonEmpty) args(0).toInt else 2000
-    // chains of length GRAFT_CC_CHAINLEN+1 nodes (default 5): a DISTRIBUTED
-    // plan (spark.range), not a driver collection — toDF on a local Seq
-    // embeds a LocalRelation whose row Vector every Catalyst
-    // transformExpressions pass re-maps, which benchmarks the analyzer
-    // against the fixture instead of CC. Long chains (e.g. CHAINLEN=4096)
-    // force a deep-diameter graph: ~log2(len) double-rounds, the fixture
-    // for per-round wall stability across many convergence actions.
-    val chainLen = sys.env.getOrElse("GRAFT_CC_CHAINLEN", "4").toLong
+    val star = args.length > 1 && args(1) == "star"
+    // chains of chainLen+1 nodes (default 5): a DISTRIBUTED plan
+    // (spark.range), not a driver collection — toDF on a local Seq embeds
+    // a LocalRelation whose row Vector every Catalyst transformExpressions
+    // pass re-maps, which benchmarks the analyzer against the fixture
+    // instead of CC. Long chains (e.g. chainLen 4096) force a deep-diameter
+    // graph: ~log2(len) iterations, the fixture for per-round wall
+    // stability across many stop-test actions.
+    val chainLen = if (args.length > 2) args(2).toLong else 4L
     val stride = chainLen * 3 // node-id gap between chains
-    // GRAFT_CC_SHAPE=star: ONE hub with n*chainLen spokes — the worst-case
-    // skew fixture for the window star rounds (the hub's whole
-    // neighbourhood lands in one WindowExec partition and must buffer/
-    // spill). Default: n chains of chainLen edges.
+    // star: ONE hub with n*chainLen spokes — the worst-case skew fixture
+    // for the star passes (the hub's whole neighbourhood lands in one
+    // partition's sorted run)
     val edges =
-      if (sys.env.get("GRAFT_CC_SHAPE").contains("star"))
+      if (star)
         spark.range(n.toLong * chainLen).select(
           org.apache.spark.sql.functions.lit(0L).as("src"), ($"id" + 1).as("dst"))
       else spark.range(n.toLong * chainLen)
         .select((($"id" / chainLen).cast("long") * stride + $"id" % chainLen).as("src"),
                 (($"id" / chainLen).cast("long") * stride + $"id" % chainLen + 1).as("dst"))
 
-    val fastMax = sys.env.get("GRAFT_CC_FAST_MAX").map(_.toLong)
-      .getOrElse(ConnectedComponents.DriverFastPathMaxEdges)
-    // GRAFT_CC_EXPLAIN=1: dump the composed double-round physical plan (as
-    // the loop builds it over the cached canonical edges) to eyeball
-    // exchange reuse, then exit without running CC
-    if (sys.env.get("GRAFT_CC_EXPLAIN").contains("1")) {
-      val e = ConnectedComponents.canonicalEdges(edges).persist()
-      e.count()
-      ConnectedComponents.doubleStarRound(e).explain("formatted")
-      spark.stop(); return
-    }
+    val fastMax = if (args.length > 3) args(3).toLong
+      else ConnectedComponents.DriverFastPathMaxEdges
     val t0 = System.nanoTime()
     val cc = ConnectedComponents.run(spark, edges, fastPathMaxEdges = fastMax)
     val k = cc.select("cluster_id").distinct().count()

@@ -101,6 +101,20 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  test("CC loop iteration: one hash exchange per star pass plus the stop test, no window or distinct") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 4L)).toDF("src", "dst")
+    val p = plan(stages.ConnectedComponents.starForestBreaks(
+      stages.ConnectedComponents.starIteration(edges)))
+    // four star passes + the stop test's group-by on the node, and nothing else
+    assert("Exchange hashpartitioning".r.findAllIn(p).length == 5, s"expected five hash exchanges:\n$p")
+    assert("Exchange ".r.findAllIn(p).length == 5, s"unexpected non-hash exchange:\n$p")
+    assert(!p.contains("Window"), s"unexpected Window in the CC iteration plan:\n$p")
+    // a distinct is an aggregate with grouping keys and no functions
+    assert(!"HashAggregate\\(keys=\\[[^\\]]+\\], functions=\\[\\]".r.findFirstIn(p).isDefined,
+      s"unexpected distinct aggregate in the CC iteration plan:\n$p")
+  }
+
   test("q08 dense ids avoid the single-partition global window (W6 hazard)") {
     val p = plan(queries.Queries.queries("q08_dense_ids")(spark, dir))
     assert(!p.contains("Exchange SinglePartition"),

@@ -46,7 +46,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val rnd = new java.util.SplittableRandom(61)
     val edges = (1 to 400).map(_ => (rnd.nextLong(250), rnd.nextLong(250)))
       .filter(e => e._1 != e._2)
-    // canonical input, as the loop feeds starRound
+    // canonical input, as the fast path's cache feeds the loop
     val canon = edges.map { case (a, b) => (math.max(a, b), math.min(a, b)) }
       .distinct.toDF("src", "dst")
     def comps(es: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -65,7 +65,8 @@ class ConnectedComponentsSpec extends SparkSpec {
     var star = false
     var round = 0
     while (!star && round < 20) {
-      val out = ConnectedComponents.starRound(cur)
+      // one round: a streamed large-star pass, then a streamed small-star
+      val out = ConnectedComponents.smallStar(ConnectedComponents.largeStar(cur))
         .as[(Long, Long)].collect().toSeq
       // 1. canonical orientation always holds
       assert(out.forall { case (s, d) => s > d }, s"non-canonical edge in round $round")
@@ -77,7 +78,10 @@ class ConnectedComponentsSpec extends SparkSpec {
         s"round $round changed the component partition")
       // 3. fixpoint is the star graph: every src points at its component min
       star = out.forall { case (s, d) => d == before(s) }
+      // the loop's stop test certifies exactly that fixpoint
       cur = out.toDF("src", "dst")
+      val breaks = ConnectedComponents.starForestBreaks(cur).count()
+      assert((breaks == 0L) == star, s"stop test says $breaks breaks, star=$star in round $round")
       round += 1
     }
     assert(star, "star rounds did not reach the min-labelled star fixpoint in 20 rounds")

@@ -40,6 +40,26 @@ class ScaleStatsSpec extends SparkSpec {
     graft.Pipeline.clearIntermediateCaches(spark)
   }
 
+  test("CC reports the star rounds its distributed loop ran") {
+    def rounds = ScaleStats.snapshot()("cc_max_star_rounds")
+    ScaleStats.reset()
+    // already a star: one iteration (two rounds) and the stop test passes
+    ConnectedComponents.run(spark, (2L to 9L).map(i => (i, 1L)).toDF("src", "dst"),
+      fastPathMaxEdges = 0L).count()
+    assert(rounds === 2L)
+    ScaleStats.reset()
+    val n = 64
+    ConnectedComponents.run(spark, (0L until n - 1L).map(i => (i, i + 1)).toDF("src", "dst"),
+      fastPathMaxEdges = 0L).count()
+    val bound = 2 * (32 - Integer.numberOfLeadingZeros(n - 1)) + 2 // 2·⌈log2 n⌉ + 2
+    assert(rounds >= 2L && rounds <= bound, s"$rounds rounds for a $n-node path")
+    // the driver fast path runs no rounds
+    ScaleStats.reset()
+    ConnectedComponents.run(spark, Seq((1L, 2L)).toDF("src", "dst")).count()
+    assert(rounds === 0L)
+    graft.Pipeline.clearIntermediateCaches(spark)
+  }
+
   test("fast-path limit gauge pairs with the run that produced the edge max") {
     ScaleStats.reset()
     val big = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
