@@ -4,7 +4,7 @@ import graft.expr.GraftFunctions
 import graft.extract.TextExtract
 import graft.model.EngineConfig
 import graft.stages._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end dedup pipeline (SURVEY §3 lifecycle, Spark-first):
@@ -42,15 +42,18 @@ object Pipeline {
     * committed snapshot read back. Stages in pipeline order: survivors,
     * holdouts, signatures, candidates, scored, edges, assignments. */
   private final class StageGraph(spark: SparkSession, input: DataFrame, cfg: EngineConfig,
-                                 at: (String, => DataFrame) => DataFrame) {
+                                 at: (String, => DataFrame) => DataFrame,
+                                 fingerprint: Option[Observation] = None) {
     GraftFunctions.register(spark)
     // ONE split feeds both survivors and holdouts: building it twice would
     // run the full-corpus exact-dedup shuffle twice — the widest stage in
     // the pipeline. The persist flags keep the second consumer on the
     // materialized intermediate instead of a rebuilt plan. lazy: a fully
-    // resumed run never builds it.
+    // resumed run never builds it. `fingerprint` observes the input
+    // fingerprint on the hash split's first job.
     private lazy val split =
-      if (cfg.exactDedupByHash) ExactDedup.splitByHash(input, persistHoldouts = true)
+      if (cfg.exactDedupByHash)
+        ExactDedup.splitByHash(input, persistHoldouts = true, fingerprint = fingerprint)
       else ExactDedup.split(input, persistRanked = true)
     lazy val survivors: DataFrame = at("survivors", split._1)
     lazy val holdouts: DataFrame = at("holdouts", split._2)
@@ -123,63 +126,95 @@ object Pipeline {
   /** Pipeline without the metrics actions — returns lazy assignments only
     * (used by the driver-facing queries where the caller counts). */
   def runLite(spark: SparkSession, docs: DataFrame,
-              cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    // signatures feed bucket explosion AND both sides of the scoring join —
-    // 128-slot MinHash is the most expensive narrow transform in the
-    // pipeline, computed once, cached. Candidates persist (as in run()):
-    // exactVerify's plan references the scoring subtree from the id
-    // semi-join, the exact join, and the below-threshold union — composed
-    // repeated subtrees that exchange reuse cannot be relied on to
-    // collapse; the pair-dedup shuffle would re-execute per reference at
-    // full candidate volume.
-    // Survivors feed several downstream jobs (signatures, exact verify,
-    // substring). When the CALLER's doc table is uncached, cache the
-    // compact (id, text) form once; when the caller already persisted the
-    // input (the bench corpus, any warehouse-cached table), survivors
-    // re-derive per consumer as a scan of THAT cache plus a broadcast
-    // anti-join probe on the holdout ids — layering a second full-width
-    // cache of ~the same bytes bought nothing but the storage write
-    // (guide §5: cache only when recompute beats the memory pressure;
-    // same shape run() has always used over its persisted input).
-    val cached = Seq("signatures", "candidates") ++
-      (if (docs.storageLevel == org.apache.spark.storage.StorageLevel.NONE) Seq("survivors")
-       else Nil)
+              cfg: EngineConfig = EngineConfig.default): DataFrame =
     // only (id, text) are consumed downstream — dropping url/warc_ts/lang
     // up front keeps them out of every downstream exchange and cache
-    new StageGraph(spark, docs.select("id", "text"), cfg, persistAt(cached: _*)).assignments
-  }
+    new StageGraph(spark, docs.select("id", "text"), cfg, persistAt(liteCached(docs): _*)).assignments
+
+  /** The stages [[runLite]] caches.
+    *
+    * Signatures feed bucket explosion AND both sides of the scoring join —
+    * 128-slot MinHash is the most expensive narrow transform in the
+    * pipeline, computed once, cached. Candidates persist (as in run()):
+    * exactVerify's plan references the scoring subtree from the id
+    * semi-join, the exact join, and the below-threshold union — composed
+    * repeated subtrees that exchange reuse cannot be relied on to
+    * collapse; the pair-dedup shuffle would re-execute per reference at
+    * full candidate volume.
+    * Survivors feed several downstream jobs (signatures, exact verify,
+    * substring). When the CALLER's doc table is uncached, cache the
+    * compact (id, text) form once; when the caller already persisted the
+    * input (the bench corpus, any warehouse-cached table), survivors
+    * re-derive per consumer as a scan of THAT cache plus a broadcast
+    * anti-join probe on the holdout ids — layering a second full-width
+    * cache of ~the same bytes bought nothing but the storage write
+    * (guide §5: cache only when recompute beats the memory pressure;
+    * same shape run() has always used over its persisted input). */
+  private def liteCached(docs: DataFrame): Seq[String] =
+    Seq("signatures", "candidates") ++
+      (if (docs.storageLevel == org.apache.spark.storage.StorageLevel.NONE) Seq("survivors")
+       else Nil)
 
   /** Snapshot stages of [[runResumable]], in commit order. */
-  private[graft] val SnapshotStages =
-    Seq("survivors", "holdouts", "signatures", "edges", "assignments")
+  private[graft] val SnapshotStages = Seq("holdouts", "edges", "assignments")
 
-  /** Resumable pipeline: every stage boundary is an Iceberg-style snapshot
-    * commit ([[graft.io.SnapshotStore]]). A killed run restarts from the
-    * last committed snapshot and — because every stage is a deterministic
-    * function of its committed inputs + config — reproduces byte-identical
-    * output (north_rule resumability; reference analog
-    * person_1/person.py:752-756). Per-stage, per-partition lineage rows are
-    * committed alongside (`lineage_*` snapshots). */
+  /** Resumable pipeline: the stages the input cannot cheaply rebuild —
+    * exact-dup holdouts, edges and assignments — are committed as
+    * Iceberg-style snapshots ([[graft.io.SnapshotStore]]: atomic manifest
+    * rename, config fingerprint, per-file row counts, schema). Survivors,
+    * signatures and candidates are rebuilt from `docs` under [[runLite]]'s
+    * boundary policy on every call that needs them. A killed run restarts
+    * from the last committed snapshot and — because every stage is a
+    * deterministic function of its committed inputs, the input and the
+    * config — reproduces byte-identical output (north_rule resumability;
+    * reference analog person_1/person.py:752-756).
+    *
+    * Input check: every manifest records an order-insensitive fingerprint
+    * of `docs`' (id, text) rows ([[ExactDedup.inputFingerprint]]). A fresh
+    * commit observes it on the hash split's job, at no extra job (the
+    * window split, `exactDedupByHash = false`, costs one aggregate). A partial
+    * resume (some stages committed, a later one missing) must re-read the
+    * input; it computes the fingerprint first, with one aggregate, and
+    * fails if it differs from the recorded one — committed holdouts of one
+    * input must never meet survivors rebuilt from another. Manifests
+    * written before fingerprints were recorded resume unchecked.
+    *
+    * A full resume (all three stages committed) trusts the committed
+    * assignments as they stand: it returns them without reading `docs`, so
+    * it is one parquet scan, and it does NOT check the input — a scan of
+    * the input would cost more than the resume itself. Resuming over a
+    * different input is caught only where the input is read.
+    *
+    * Cache contract: a call that computes any stage persists and tracks
+    * the same intermediates [[runLite]] does; call
+    * [[clearIntermediateCaches]] once the result is consumed. A full
+    * resume registers no cache. */
   def runResumable(spark: SparkSession, docs: DataFrame, storeRoot: String,
                    cfg: EngineConfig = EngineConfig.default): DataFrame = {
     val store = new graft.io.SnapshotStore(storeRoot)
-    val fp = Integer.toHexString(configJson(cfg).hashCode)
-    val g = new StageGraph(spark, docs, cfg, (name, stage) =>
-      if (SnapshotStages.contains(name)) {
-        val committed = store.stage(spark, name, fp)(stage)
-        if (store.currentId(s"lineage_$name").isEmpty) {
-          store.commit(s"lineage_$name",
-            committed.groupBy(spark_partition_id().as("partition_id"))
-              .count().withColumn("stage", lit(name)), fp)
-        }
-        committed
-      }
-      // candidates persist for the same multi-reference reason as runLite
-      else if (name == "candidates") IntermediateCaches.persistTracked(stage)
-      else stage)
-    // force every snapshot stage in commit order: a fresh run commits each
-    // one, a resumed run reads it back (or recomputes a missing one)
-    Seq(g.survivors, g.holdouts, g.signatures, g.edges, g.assignments).last
+    val cfgFp = Integer.toHexString(configJson(cfg).hashCode)
+    val committed = SnapshotStages.flatMap(st => store.latest(spark, st, cfgFp).map(st -> _)).toMap
+    if (committed.size == SnapshotStages.size) return committed("assignments")
+
+    val input = docs.select("id", "text")
+    // fresh: observed on the hash split's first job, which the holdouts
+    // commit runs before it writes its manifest; otherwise one aggregate
+    val observed = if (committed.isEmpty && cfg.exactDedupByHash) Some(Observation()) else None
+    lazy val inputFp = observed.flatMap(ExactDedup.observedFingerprint)
+      .getOrElse(ExactDedup.inputFingerprint(input))
+    for (st <- committed.keys; recorded <- store.inputFingerprint(st) if recorded != inputFp)
+      throw new IllegalStateException(s"snapshot store $storeRoot: stage '$st' was committed " +
+        s"from a different input (fingerprint $recorded, this input $inputFp); resume with " +
+        "the original input or use a fresh store")
+    val lite = persistAt(liteCached(docs): _*)
+    val g = new StageGraph(spark, input, cfg, (name, stage) =>
+      committed.getOrElse(name,
+        if (SnapshotStages.contains(name)) store.commit(name, stage, cfgFp, inputFingerprint = Some(inputFp))
+        else lite(name, stage)),
+      observed)
+    // force every snapshot stage in commit order: each one is either read
+    // back or computed and committed
+    Seq(g.holdouts, g.edges, g.assignments).last
   }
 
   /** Ingest raw pages: extract text (pinned extractor) + assign stable ids.

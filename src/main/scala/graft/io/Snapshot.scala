@@ -2,17 +2,23 @@ package graft.io
 
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Iceberg-style snapshot store (SURVEY §7.2 module 11).
   *
   * No Iceberg runtime jar ships in this sandbox (offline build), so this
   * module implements the Iceberg *contract* the pipeline needs — immutable
   * parquet data files + a tiny JSON manifest per snapshot (id, parent,
-  * stage name, config fingerprint, row count), committed atomically by
+  * stage name, config fingerprint, row count, per-file row counts, schema,
+  * optional input fingerprint), committed atomically by
   * manifest rename — giving checkpoint-based resumability and lineage
   * (north_rule: "restarts from the last committed snapshot"). A real
   * Iceberg catalog slots in by replacing this class: `commit` ≙ append
@@ -77,14 +83,29 @@ final class SnapshotStore(val root: String,
   private def nextId(): Long = synchronized {
     val ids = listDir(manifestDir)
       .filter(_.getName.endsWith(".json"))
-      .flatMap { p =>
-        val s = readString(p)
-        "\"id\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong)
-      }
+      .map(p => SnapshotStore.json.readTree(readString(p)).path("id").asLong(0L))
     val scanned = if (ids.isEmpty) 1L else ids.max + 1
     val id = math.max(scanned, lastIssued.get() + 1)
     lastIssued.set(id)
     id
+  }
+
+  /** (path relative to `dir`, row count) of every parquet data file under
+    * `dir`, partition subdirectories included. The counts come from the
+    * file footers, read on the driver: no Spark job, and exact under task
+    * retries and speculative duplicates (only committed files exist). */
+  private def fileRows(dir: HPath): Seq[(String, Long)] = {
+    val base = dir.toUri.getPath.stripSuffix("/") + "/"
+    val it = fs.listFiles(dir, true)
+    val files = Seq.newBuilder[HPath]
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.endsWith(".parquet")) files += p
+    }
+    files.result().map { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, hadoopConf))
+      try (p.toUri.getPath.stripPrefix(base), reader.getRecordCount) finally reader.close()
+    }.sortBy(_._1)
   }
 
   /** Commit a stage result: write immutable parquet, then atomically move
@@ -92,10 +113,16 @@ final class SnapshotStore(val root: String,
     * recomputes on restart) or a complete one (stage is skipped) — never a
     * half-visible snapshot.
     *
-    * The manifest row count is observed ON the write job itself
-    * (`Dataset.observe`) — committing executes exactly one Spark job; the
-    * old form re-read the parquet it had just written for a second
-    * full-scan count per stage.
+    * Committing executes exactly one Spark job, the write. The manifest
+    * carries what a later reader needs without touching the data:
+    *  - `files`: each data file's name and row count, read from the
+    *    footers just written (the per-file lineage of the stage);
+    *  - `rows`: their sum;
+    *  - `schema`: the frame's schema, so [[latest]] reads without a
+    *    schema-inference job;
+    *  - `input`: `inputFingerprint`, when given. It is evaluated AFTER the
+    *    write, so a fingerprint observed on the write job itself
+    *    (`Dataset.observe` upstream of `df`) is available to it.
     *
     * `partitionBy`: optional partition columns for the data files — at
     * scale a resumed stage that is later read with a partition-column
@@ -104,73 +131,83 @@ final class SnapshotStore(val root: String,
     * Hive-style directory names, so an empty-string (or null) value in a
     * partition column is written as __HIVE_DEFAULT_PARTITION__ and reads
     * back as NULL — choose non-null, non-empty partition columns or the
-    * byte-identical-resume contract does not hold for that column.
-    *
-    * The manifest `rows` field (surfaced via currentRows) is observed on
-    * the write job: under stage retries / speculative duplicate task
-    * successes observed metrics can overcount — treat it as informational;
-    * the data files are the source of truth. */
+    * byte-identical-resume contract does not hold for that column. */
   def commit(stage: String, df: DataFrame, configFingerprint: String,
-             partitionBy: Seq[String] = Nil): DataFrame = {
-    // names are embedded raw in file paths, JSON, and (for the
-    // fingerprint) a lookup regex — constrain them instead of escaping
-    // in three syntaxes (Pipeline passes hex; this makes it a contract)
+             partitionBy: Seq[String] = Nil,
+             inputFingerprint: => Option[String] = None): DataFrame = {
+    // stage names are embedded raw in data and manifest file names —
+    // constrain them instead of escaping; config fingerprints keep the
+    // same plain alphabet (Pipeline passes hex; this makes it a contract)
     require(stage.matches("[A-Za-z0-9._-]+"), s"unsupported stage name: $stage")
     require(configFingerprint.matches("[A-Za-z0-9._-]*"),
       s"unsupported config fingerprint: $configFingerprint")
     val spark = df.sparkSession
     val id = nextId()
     val dest = new HPath(dataDir, s"$stage-$id")
-    val obs = Observation()
-    val writer = df.observe(obs, count(lit(1)).as("rows"))
-      .write.mode("overwrite")
+    val writer = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
       .parquet(dest.toString)
-    val rows = obs.get("rows").asInstanceOf[Long]
-    val parent = currentId(stage).getOrElse(0L)
-    val manifest =
-      s"""{"id":$id,"parent":$parent,"stage":"$stage","path":"${dest.toString}",
-         |"config":"$configFingerprint","rows":$rows}""".stripMargin.replace("\n", "")
+    val files = fileRows(dest)
+    val m = SnapshotStore.json.createObjectNode()
+    m.put("id", id)
+    m.put("parent", currentId(stage).getOrElse(0L))
+    m.put("stage", stage)
+    m.put("path", dest.toString)
+    m.put("config", configFingerprint)
+    m.put("rows", files.map(_._2).sum)
+    val fileArr = m.putArray("files")
+    files.foreach { case (name, rows) => fileArr.addObject().put("name", name).put("rows", rows) }
+    m.set[JsonNode]("schema", SnapshotStore.json.readTree(df.schema.json))
+    inputFingerprint.foreach(m.put("input", _))
     val tmp = new HPath(manifestDir, s".$stage.json.tmp")
-    writeString(tmp, manifest)
+    writeString(tmp, SnapshotStore.json.writeValueAsString(m))
     fc.rename(tmp, manifestPath(stage), Options.Rename.OVERWRITE)
     // read back with the KNOWN schema: schema inference would launch a
-    // footer-read job, making commit a two-job operation again (partition
-    // columns resolve from the user schema by name, so partitioned commits
-    // keep their original column order and types)
+    // footer-read job (partition columns resolve from the user schema by
+    // name, so partitioned commits keep their original column order and
+    // types)
     spark.read.schema(df.schema).parquet(dest.toString)
   }
 
-  private def readManifest(stage: String): Option[String] = {
+  private def readManifest(stage: String): Option[JsonNode] = {
     val p = manifestPath(stage)
-    if (fs.exists(p)) Some(readString(p)) else None
+    if (fs.exists(p)) Some(SnapshotStore.json.readTree(readString(p))) else None
   }
 
-  def currentId(stage: String): Option[Long] =
-    readManifest(stage).flatMap(s =>
-      "\"id\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong))
+  private def field(stage: String, name: String): Option[JsonNode] =
+    readManifest(stage).flatMap(m => Option(m.get(name)))
+
+  def currentId(stage: String): Option[Long] = field(stage, "id").map(_.asLong)
 
   /** Manifest row count of the current snapshot for a stage (metrics use —
     * no data scan). */
-  def currentRows(stage: String): Option[Long] =
-    readManifest(stage).flatMap(s =>
-      "\"rows\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong))
+  def currentRows(stage: String): Option[Long] = field(stage, "rows").map(_.asLong)
+
+  /** (data file, rows) of the current snapshot for a stage; empty for a
+    * manifest written before per-file counts were recorded. */
+  def currentFiles(stage: String): Seq[(String, Long)] =
+    field(stage, "files").toSeq.flatMap(_.asScala.map(f => (f.get("name").asText, f.get("rows").asLong)))
+
+  /** Input fingerprint recorded with the current snapshot of a stage, if
+    * its commit recorded one. */
+  def inputFingerprint(stage: String): Option[String] = field(stage, "input").map(_.asText)
 
   /** Latest committed snapshot for a stage, iff its config fingerprint
     * matches (a changed engine config invalidates downstream snapshots —
-    * model-JSON semantics). */
+    * model-JSON semantics). Reads with the manifest's schema when it has
+    * one (no Spark job); an older manifest without it falls back to
+    * schema inference. */
   def latest(spark: SparkSession, stage: String, configFingerprint: String): Option[DataFrame] =
-    readManifest(stage).flatMap { m =>
-      // quote the fingerprint: '.' or '+' in a caller-supplied value must
-      // match literally, not as regex syntax (a '.' would accept a stale
-      // snapshot committed under a different config)
-      val quoted = java.util.regex.Pattern.quote(s""""config":"$configFingerprint"""")
-      val cfgOk = quoted.r.findFirstIn(m).isDefined
-      val path = "\"path\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(m).map(_.group(1))
-      if (cfgOk) path.filter(p => fs.exists(new HPath(p)))
-        .map(p => spark.read.parquet(p))
-      else None
-    }
+    readManifest(stage)
+      .filter(m => Option(m.get("config")).exists(_.asText == configFingerprint))
+      .flatMap { m =>
+        Option(m.get("path")).map(_.asText).filter(p => fs.exists(new HPath(p))).map { p =>
+          Option(m.get("schema")).map(s => DataType.fromJson(s.toString)) match {
+            case Some(schema: StructType) => spark.read.schema(schema).parquet(p)
+            case _ => spark.read.parquet(p)
+          }
+        }
+      }
 
   /** Compute-or-load: the resumability primitive. */
   def stage(spark: SparkSession, name: String, configFingerprint: String,
@@ -200,10 +237,7 @@ final class SnapshotStore(val root: String,
     // silent recompute on resume
     val currentPaths = listDir(manifestDir)
       .filter(_.getName.endsWith(".json"))
-      .flatMap { p =>
-        val s = readString(p)
-        "\"path\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(s).map(_.group(1))
-      }
+      .flatMap(p => Option(SnapshotStore.json.readTree(readString(p)).get("path")).map(_.asText))
       .map(p => fs.makeQualified(new HPath(p)).toString)
       .toSet
     val byStage = fs.listStatus(dataDir).filter(_.isDirectory).map(_.getPath).flatMap { p =>
@@ -226,6 +260,8 @@ final class SnapshotStore(val root: String,
 }
 
 object SnapshotStore {
+  private val json = new ObjectMapper()
+
   /** Hadoop conf for the store: the active session's (so cluster-deployed
     * credentials/filesystem settings — fs.defaultFS, s3a keys — apply),
     * falling back to a vanilla Configuration off-session. */

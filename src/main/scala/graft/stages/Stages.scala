@@ -2,7 +2,7 @@ package graft.stages
 
 import graft.expr.GraftFunctions
 import graft.model.EngineConfig
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -60,26 +60,22 @@ object ExactDedup {
     * full-width data movement left is the survivors' own anti-join — text
     * never enters a shuffle key or a window sort. */
   def splitByHash(docs: DataFrame, idCol: String = "id", textCol: String = "text",
-                  persistHoldouts: Boolean = false): (DataFrame, DataFrame) = {
-    // Two independent 64-bit hashes: the salt literal goes FIRST, so the
-    // second hash runs over the text with a genuinely different seed
-    // (xxhash64 folds columns left-to-right with the running hash as seed
-    // — text-then-salt would make __h2 a pure function of __h1, collapsing
-    // the pair to 64 bits). NULL text hashes over '' with an explicit
-    // __hn marker column, so null-text duplicates group together, join
-    // with plain equality (no null-rejecting key), and stay distinct from
-    // empty-string text — exactly the window plan's partition semantics.
+                  persistHoldouts: Boolean = false,
+                  fingerprint: Option[Observation] = None): (DataFrame, DataFrame) = {
     // cached (engine-tracked, 25 B/row): keyed feeds BOTH the group
     // aggregate and the holdout join below — uncached, each reference
     // re-ran the two full-text xxhash64 passes over the corpus (the
     // dominant narrow cost of this stage). At 10^12 docs the cache is
     // narrow-row MEMORY_AND_DISK spill; the alternative is re-hashing the
     // full corpus text per reference (guide §2.4: share one computation).
-    val keyed = IntermediateCaches.persistTracked(docs.select(
-      col(idCol),
-      xxhash64(coalesce(col(textCol), lit(""))).as("__h1"),
-      xxhash64(lit(0x9e3779b9L), coalesce(col(textCol), lit(""))).as("__h2"),
-      isnull(col(textCol)).as("__hn")))
+    // `fingerprint` observes [[inputFingerprint]]'s aggregate on the rows
+    // entering the cache, so it completes with the job that fills it.
+    val hashed = contentKeys(docs, idCol, textCol)
+    val keyed = IntermediateCaches.persistTracked(
+      fingerprint.fold(hashed) { obs =>
+        val aggs = fingerprintAggs(idCol)
+        hashed.observe(obs, aggs.head, aggs.tail: _*)
+      })
     val grp = keyed.groupBy("__h1", "__h2", "__hn")
       .agg(min(col(idCol)).as("master_id"), count(lit(1)).as("__n"))
     val holdouts0 = keyed
@@ -91,6 +87,53 @@ object ExactDedup {
     else holdouts0
     val survivors = docs.join(holdouts.select(col(idCol)), Seq(idCol), "left_anti")
     (survivors, holdouts)
+  }
+
+  /** (`idCol`, `__h1`, `__h2`, `__hn`): the content key of every row.
+    * Two independent 64-bit hashes: the salt literal goes FIRST, so the
+    * second hash runs over the text with a genuinely different seed
+    * (xxhash64 folds columns left-to-right with the running hash as seed
+    * — text-then-salt would make __h2 a pure function of __h1, collapsing
+    * the pair to 64 bits). NULL text hashes over '' with an explicit
+    * __hn marker column, so null-text duplicates group together, join
+    * with plain equality (no null-rejecting key), and stay distinct from
+    * empty-string text — exactly the window plan's partition semantics. */
+  private def contentKeys(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(
+      col(idCol),
+      xxhash64(coalesce(col(textCol), lit(""))).as("__h1"),
+      xxhash64(lit(0x9e3779b9L), coalesce(col(textCol), lit(""))).as("__h2"),
+      isnull(col(textCol)).as("__hn"))
+
+  // over contentKeys' columns. bit_xor, not sum: the combine must wrap,
+  // and a long sum throws on overflow under ANSI mode
+  private def fingerprintAggs(idCol: String): Seq[Column] = Seq(
+    bit_xor(xxhash64(col(idCol), col("__h1"), col("__h2"), col("__hn"))).as("fp_hash"),
+    count(lit(1)).as("fp_rows"))
+
+  /** Order-insensitive fingerprint of a doc table's (id, text) rows: the
+    * XOR of one 64-bit hash per (id, content key) row, plus the row count,
+    * as `"<hash hex>:<rows>"`. Equal tables give equal fingerprints under
+    * any partitioning or row order. One aggregate job. */
+  def inputFingerprint(docs: DataFrame, idCol: String = "id", textCol: String = "text"): String = {
+    val aggs = fingerprintAggs(idCol)
+    formatFingerprint(contentKeys(docs, idCol, textCol).agg(aggs.head, aggs.tail: _*).head().toSeq)
+  }
+
+  /** The fingerprint a [[splitByHash]] `fingerprint` observation recorded,
+    * or None if no job has completed it within 100 ms. The wait is bounded
+    * (the semantics of Spark's package-private `Observation.getOrEmpty`),
+    * never `get`'s unbounded one: a plan that never ran the observed rows
+    * must not hang its caller. */
+  def observedFingerprint(obs: Observation): Option[String] =
+    scala.util.Try(scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(100, "ms"))).toOption
+      .map(r => formatFingerprint(Seq(r.get(0), r.get(1))))
+
+  private def formatFingerprint(v: Seq[Any]): String = {
+    // bit_xor over zero rows is null
+    val hash = Option(v.head).fold(0L)(_.asInstanceOf[Long])
+    f"$hash%016x:${v(1).asInstanceOf[Long]}"
   }
 
   /** J4 holdout re-attach (`person_1/link_model_per.py:945-953`: left

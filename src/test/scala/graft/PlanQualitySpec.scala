@@ -66,33 +66,14 @@ class PlanQualitySpec extends SparkSpec {
 
   test("PairGen is one lazy pass: no job at call time, one hash exchange, no range/window/cache") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // small buckets plus one hot bucket (past the all-pairs cap of 64)
     val buckets = ((1L to 100L).map(i => (i % 10, i, i)) ++
       (1L to 100L).map(i => (99L, 1000L + i, i))).toDF("key", "id", "sort")
-    val sc = spark.sparkContext
-    val others = new java.util.concurrent.atomic.AtomicInteger(0)
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    // the listener bus delivers in order: once the marker job is seen,
-    // every job submitted before it has been seen too
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "pairgen-marker"))
-          marker.countDown()
-        else others.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    val frames = try {
-      val fs = Seq(stages.PairGen.pairs(buckets),
+    val (frames, jobs) = SparkSpec.countJobs(spark)(
+      Seq(stages.PairGen.pairs(buckets),
         stages.PairGen.pairs(buckets, 64, dropHotAbove = Some(50)),
-        stages.PairGen.pairs(buckets, 16, dropHotAbove = Some(80), chainWidth = 3))
-      sc.setJobDescription("pairgen-marker")
-      sc.parallelize(Seq(1)).count()
-      sc.setJobDescription(null)
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
-      fs
-    } finally sc.removeSparkListener(listener)
-    assert(others.get() == 0, s"PairGen.pairs ran ${others.get()} Spark job(s) at call time")
+        stages.PairGen.pairs(buckets, 16, dropHotAbove = Some(80), chainWidth = 3)))
+    assert(jobs == 0, s"PairGen.pairs ran $jobs Spark job(s) at call time")
     for (df <- frames) {
       val p = plan(df)
       assert("Exchange hashpartitioning".r.findAllIn(p).length == 1, s"expected one hash exchange:\n$p")
@@ -113,6 +94,24 @@ class PlanQualitySpec extends SparkSpec {
     // a distinct is an aggregate with grouping keys and no functions
     assert(!"HashAggregate\\(keys=\\[[^\\]]+\\], functions=\\[\\]".r.findFirstIn(p).isDefined,
       s"unexpected distinct aggregate in the CC iteration plan:\n$p")
+  }
+
+  test("a fresh runResumable submits at most 5 more jobs than runLite on the same corpus") {
+    val docs = fixtures.Corpus.generate(spark, 400)
+      .select("id", "url", "warc_ts", "text", "lang").persist()
+    docs.count()
+    try {
+      val (_, lite) = SparkSpec.countJobs(spark)(Pipeline.runLite(spark, docs).collect())
+      Pipeline.clearIntermediateCaches(spark)
+      val root = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+      val (_, commit) = SparkSpec.countJobs(spark)(Pipeline.runResumable(spark, docs, root).collect())
+      // the commit adds its three parquet writes to the lite call's jobs;
+      // survivors, signatures and lineage are no longer written
+      assert(commit <= lite + 5, s"fresh runResumable ran $commit jobs, runLite $lite")
+    } finally {
+      docs.unpersist()
+      Pipeline.clearIntermediateCaches(spark)
+    }
   }
 
   test("q08 dense ids avoid the single-partition global window (W6 hazard)") {

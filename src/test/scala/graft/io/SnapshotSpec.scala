@@ -2,8 +2,10 @@ package graft.io
 
 import graft.{Pipeline, SparkSpec}
 import graft.fixtures.Corpus
+import graft.model.EngineConfig
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, concat, lit, when}
 import scala.jdk.CollectionConverters._
 
 class SnapshotSpec extends SparkSpec {
@@ -50,39 +52,156 @@ class SnapshotSpec extends SparkSpec {
     assert(computes == 1)
   }
 
+  private val cfgFp = Integer.toHexString(Pipeline.configJson(EngineConfig.default).hashCode)
+
+  private def corpus(n: Int) = {
+    val docs = Corpus.generate(spark, n).select("id", "url", "warc_ts", "text", "lang").persist()
+    docs.count()
+    docs
+  }
+
+  private def resume(docs: DataFrame, root: String): Seq[(Long, Long)] =
+    try Pipeline.runResumable(spark, docs, root).as[(Long, Long)].collect().sortBy(_._1).toSeq
+    finally Pipeline.clearIntermediateCaches(spark)
+
+  private def kill(root: String, stages: Seq[String]): Unit =
+    stages.foreach(st => Files.delete(Paths.get(root, "manifests", s"$st.json")))
+
   test("kill/restart: resumed run reproduces byte-identical assignments") {
     val root = tmpDir()
-    val docs = Corpus.generate(spark, 600)
-      .select("id", "url", "warc_ts", "text", "lang").persist()
-    docs.count()
+    val docs = corpus(600)
+    val full = resume(docs, root)
 
-    val full = Pipeline.runResumable(spark, docs, root)
-      .as[(Long, Long)].collect().sortBy(_._1)
-
-    // simulate a kill at every stage boundary in turn: the killed stage
-    // and every later one never committed (data + lineage manifests gone),
-    // the earlier commits survive. The resume must recompute exactly the
-    // missing stages from the surviving snapshots and reproduce the output.
+    // simulate a kill at every snapshot boundary in turn: the killed stage
+    // and every later one never committed, the earlier commits survive.
+    // The resume must recompute exactly the missing stages from the
+    // surviving snapshots and the input, and reproduce the output.
     val store = new SnapshotStore(root)
     val stages = Pipeline.SnapshotStages
+    assert(stages == Seq("holdouts", "edges", "assignments"))
     for ((killed, i) <- stages.zipWithIndex) {
       val kept = stages.take(i).map(st => st -> store.currentId(st))
-      val lost = stages.drop(i).flatMap(st => Seq(st, s"lineage_$st"))
-      lost.foreach(name => Files.delete(Paths.get(root, "manifests", s"$name.json")))
-      val resumed = Pipeline.runResumable(spark, docs, root)
-        .as[(Long, Long)].collect().sortBy(_._1)
-      assert(resumed.sameElements(full), s"killed at $killed")
+      val lost = stages.drop(i)
+      kill(root, lost)
+      assert(resume(docs, root) == full, s"killed at $killed")
       for ((st, id) <- kept)
         assert(store.currentId(st) == id, s"$st recomputed (killed at $killed)")
-      for (name <- lost)
-        assert(store.currentId(name).isDefined, s"$name not recommitted (killed at $killed)")
+      for (st <- lost)
+        assert(store.currentId(st).isDefined, s"$st not recommitted (killed at $killed)")
     }
+    // only the snapshot stages are committed: no survivors, signatures or
+    // lineage tables
+    val manifests = Files.list(Paths.get(root, "manifests")).iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".json")).toSet
+    assert(manifests == stages.map(st => s"$st.json").toSet, s"unexpected manifests $manifests")
 
     // restart from scratch in a different store: identical again
-    val fresh = Pipeline.runResumable(spark, docs, tmpDir())
-      .as[(Long, Long)].collect().sortBy(_._1)
-    assert(fresh.sameElements(full))
+    assert(resume(docs, tmpDir()) == full)
     docs.unpersist()
+  }
+
+  test("manifests carry per-file row counts that sum to rows and to the stage's row count") {
+    val root = tmpDir()
+    val docs = corpus(200)
+    resume(docs, root)
+    val store = new SnapshotStore(root)
+    for (st <- Pipeline.SnapshotStages) {
+      val files = store.currentFiles(st)
+      assert(files.nonEmpty, s"$st: no per-file counts")
+      val stored = store.latest(spark, st, cfgFp).get
+      assert(files.map(_._2).sum == store.currentRows(st).get, s"$st: files vs rows")
+      assert(files.map(_._2).sum == stored.count(), s"$st: files vs data")
+      // every listed file exists, and nothing unlisted holds data
+      val dataFiles = stored.inputFiles.map(f => new java.io.File(new java.net.URI(f)).getName).toSet
+      assert(files.map(_._1).toSet == dataFiles, s"$st: files vs directory")
+    }
+    assert(store.currentRows("assignments").contains(200L))
+    docs.unpersist()
+  }
+
+  test("partial resume over a changed input fails on the input fingerprint") {
+    val root = tmpDir()
+    val docs = corpus(300)
+    val full = resume(docs, root)
+    val store = new SnapshotStore(root)
+    val fp = store.inputFingerprint("holdouts")
+    assert(fp.isDefined && Pipeline.SnapshotStages.forall(store.inputFingerprint(_) == fp))
+    val holdoutsId = store.currentId("holdouts")
+    val edited = docs.withColumn("text",
+      when(col("id") === 7L, concat(col("text"), lit(" edited"))).otherwise(col("text")))
+    val dropped = docs.filter(col("id") =!= 7L)
+    for ((killed, changed, what) <- Seq(("edges", edited, "one text edited"),
+                                        ("assignments", dropped, "one doc dropped"))) {
+      kill(root, Pipeline.SnapshotStages.dropWhile(_ != killed))
+      val e = intercept[IllegalStateException](resume(changed, root))
+      assert(e.getMessage.contains("different input"), s"killed at $killed, $what: ${e.getMessage}")
+      // the failed resume committed nothing; the original input resumes
+      assert(resume(docs, root) == full, s"killed at $killed, $what")
+    }
+    assert(store.currentId("holdouts") == holdoutsId, "holdouts recommitted")
+    docs.unpersist()
+  }
+
+  /** Rewrites a manifest in the format stores used before per-file counts,
+    * schemas and input fingerprints were recorded. */
+  private def toOldFormat(root: String, stage: String): Unit = {
+    val p = Paths.get(root, "manifests", s"$stage.json")
+    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(Files.readString(p))
+    Files.writeString(p, s"""{"id":${m.get("id")},"parent":${m.get("parent")},""" +
+      s""""stage":"$stage","path":"${m.get("path").asText}","config":"${m.get("config").asText}",""" +
+      s""""rows":${m.get("rows")}}""")
+    // the local Hadoop FS checksums what it writes; drop the stale sidecar
+    Files.deleteIfExists(Paths.get(root, "manifests", s".$stage.json.crc"))
+  }
+
+  test("a store written before this manifest format resumes fully and partially") {
+    val root = tmpDir()
+    val docs = corpus(300)
+    val full = resume(docs, root)
+    val store = new SnapshotStore(root)
+    // the stages such a store also committed: survivors, signatures and a
+    // lineage table per stage
+    val extra = Seq("survivors", "signatures") ++
+      Seq("survivors", "holdouts", "signatures", "edges", "assignments").map(st => s"lineage_$st")
+    extra.foreach(st => store.commit(st, Seq((1L, 2L)).toDF("a", "b"), cfgFp))
+    (Pipeline.SnapshotStages ++ extra).foreach(toOldFormat(root, _))
+    assert(store.inputFingerprint("holdouts").isEmpty && store.currentFiles("edges").isEmpty)
+    def ids(names: Seq[String]) = names.map(st => st -> store.currentId(st))
+    val before = ids(Pipeline.SnapshotStages ++ extra)
+    assert(resume(docs, root) == full, "full resume")
+    assert(ids(Pipeline.SnapshotStages ++ extra) == before, "full resume recommitted a stage")
+    for (killed <- Seq("assignments", "edges")) {
+      val lost = Pipeline.SnapshotStages.dropWhile(_ != killed)
+      val keep = Pipeline.SnapshotStages.takeWhile(_ != killed) ++ extra
+      val kept = ids(keep)
+      kill(root, lost)
+      assert(resume(docs, root) == full, s"killed at $killed")
+      assert(ids(keep) == kept, s"killed at $killed: a committed stage was recommitted")
+      lost.foreach(toOldFormat(root, _))
+    }
+    docs.unpersist()
+  }
+
+  test("a full resume submits one Spark job: the assignments read") {
+    val root = tmpDir()
+    val docs = corpus(200)
+    val full = resume(docs, root)
+    val cachesBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val (back, jobs) = SparkSpec.countJobs(spark)(
+      Pipeline.runResumable(spark, docs, root).as[(Long, Long)].collect().sortBy(_._1).toSeq)
+    assert(back == full)
+    assert(jobs == 1, s"full resume ran $jobs jobs, expected 1")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachesBefore, "full resume registered a cache")
+    docs.unpersist()
+  }
+
+  test("latest reads an old manifest without a schema by inference") {
+    val root = tmpDir()
+    val store = new SnapshotStore(root)
+    store.commit("st", Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "c")
+    toOldFormat(root, "st")
+    val back = store.latest(spark, "st", "c").get
+    assert(back.as[(Long, String)].collect().sortBy(_._1).toSeq == Seq((1L, "a"), (2L, "b")))
   }
 
   test("expireSnapshots removes superseded data dirs; resume stays byte-identical") {
@@ -149,26 +268,14 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("commit runs exactly one Spark job (row count observed on the write)") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     val store = new SnapshotStore(tmpDir())
     val df = spark.range(0, 1000, 1, 4).selectExpr("id", "id % 7 as v")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      store.commit("onejob", df, "c")
-      // listener delivery is async: wait for the (synchronously completed)
-      // write job's start event, then a settle window for any second job
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (jobs.get() < 1 && System.nanoTime() < deadline) Thread.sleep(20)
-      Thread.sleep(500)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    // the old form re-read the written parquet for a second full-scan
-    // count job; the manifest count must now come from the write job itself
-    assert(jobs.get() == 1, s"commit ran ${jobs.get()} jobs, expected 1")
+    val (_, jobs) = SparkSpec.countJobs(spark)(store.commit("onejob", df, "c"))
+    // the manifest's row counts come from the footers of the files just
+    // written, read on the driver: the write is the only job
+    assert(jobs == 1, s"commit ran $jobs jobs, expected 1")
     assert(store.currentRows("onejob").contains(1000L))
+    assert(store.currentFiles("onejob").size == 4)
   }
 
   test("partitioned commit: resumed stage prunes partitions under a predicate") {
@@ -176,6 +283,9 @@ class SnapshotSpec extends SparkSpec {
     val df = Seq((1L, "en", "a"), (2L, "de", "b"), (3L, "en", "c"), (4L, "fr", "d"))
       .toDF("id", "lang", "text")
     store.commit("parts", df, "c", partitionBy = Seq("lang"))
+    // per-file counts reach into the partition directories
+    assert(store.currentFiles("parts").map { case (f, n) => f.takeWhile(_ != '/') -> n }
+      .groupMapReduce(_._1)(_._2)(_ + _) == Map("lang=en" -> 2L, "lang=de" -> 1L, "lang=fr" -> 1L))
     val back = store.latest(spark, "parts", "c").get
     assert(back.count() == 4)
     val pruned = back.filter(col("lang") === "en")
@@ -192,17 +302,4 @@ class SnapshotSpec extends SparkSpec {
     assert(pruned.as[(Long, String, String)].collect().map(_._1).sorted.toSeq == Seq(1L, 3L))
   }
 
-  test("lineage snapshots are committed per stage") {
-    val root = tmpDir()
-    val docs = Corpus.generate(spark, 200)
-      .select("id", "url", "warc_ts", "text", "lang")
-    Pipeline.runResumable(spark, docs, root)
-    val store = new SnapshotStore(root)
-    for (st <- Seq("survivors", "signatures", "edges", "assignments"))
-      assert(store.currentId(s"lineage_$st").isDefined, s"missing lineage for $st")
-    val lin = store.latest(spark, "lineage_assignments",
-      Integer.toHexString(Pipeline.configJson(graft.model.EngineConfig.default).hashCode))
-    assert(lin.get.agg(org.apache.spark.sql.functions.sum("count"))
-      .head().getLong(0) == 200L)
-  }
 }
