@@ -100,7 +100,7 @@ class SnapshotSpec extends SparkSpec {
     docs.unpersist()
   }
 
-  test("manifests carry per-file row counts that sum to rows and to the stage's row count") {
+  test("manifests' per-file row counts sum to rows and to the stage's row count") {
     val root = tmpDir()
     val docs = corpus(200)
     resume(docs, root)
