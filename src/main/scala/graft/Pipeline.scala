@@ -4,7 +4,7 @@ import graft.expr.GraftFunctions
 import graft.extract.TextExtract
 import graft.model.EngineConfig
 import graft.stages._
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end dedup pipeline (SURVEY §3 lifecycle, Spark-first):
@@ -42,18 +42,15 @@ object Pipeline {
     * committed snapshot read back. Stages in pipeline order: survivors,
     * holdouts, signatures, candidates, scored, edges, assignments. */
   private final class StageGraph(spark: SparkSession, input: DataFrame, cfg: EngineConfig,
-                                 at: (String, => DataFrame) => DataFrame,
-                                 fingerprint: Option[Observation] = None) {
+                                 at: (String, => DataFrame) => DataFrame) {
     GraftFunctions.register(spark)
     // ONE split feeds both survivors and holdouts: building it twice would
     // run the full-corpus exact-dedup shuffle twice — the widest stage in
     // the pipeline. The persist flags keep the second consumer on the
     // materialized intermediate instead of a rebuilt plan. lazy: a fully
-    // resumed run never builds it. `fingerprint` observes the input
-    // fingerprint on the hash split's first job.
+    // resumed run never builds it.
     private lazy val split =
-      if (cfg.exactDedupByHash)
-        ExactDedup.splitByHash(input, persistHoldouts = true, fingerprint = fingerprint)
+      if (cfg.exactDedupByHash) ExactDedup.splitByHash(input, persistHoldouts = true)
       else ExactDedup.split(input, persistRanked = true)
     lazy val survivors: DataFrame = at("survivors", split._1)
     lazy val holdouts: DataFrame = at("holdouts", split._2)
@@ -170,14 +167,13 @@ object Pipeline {
     * reference analog person_1/person.py:752-756).
     *
     * Input check: every manifest records an order-insensitive fingerprint
-    * of `docs`' (id, text) rows ([[ExactDedup.inputFingerprint]]). A fresh
-    * commit observes it on the hash split's job, at no extra job (the
-    * window split, `exactDedupByHash = false`, costs one aggregate). A partial
-    * resume (some stages committed, a later one missing) must re-read the
-    * input; it computes the fingerprint first, with one aggregate, and
-    * fails if it differs from the recorded one — committed holdouts of one
-    * input must never meet survivors rebuilt from another. Manifests
-    * written before fingerprints were recorded resume unchecked.
+    * of `docs`' (id, text) rows ([[ExactDedup.inputFingerprint]]). Every
+    * call that reads the input — a fresh commit, or a partial resume (some
+    * stages committed, a later one missing) — computes it first, with one
+    * exact aggregate, and fails if a committed stage recorded a different
+    * one: committed holdouts of one input must never meet survivors
+    * rebuilt from another. Manifests written before fingerprints were
+    * recorded resume unchecked.
     *
     * A full resume (all three stages committed) trusts the committed
     * assignments as they stand: it returns them without reading `docs`, so
@@ -197,21 +193,15 @@ object Pipeline {
     if (committed.size == SnapshotStages.size) return committed("assignments")
 
     val input = docs.select("id", "text")
-    // fresh: observed on the hash split's first job, which the holdouts
-    // commit runs before it writes its manifest; otherwise one aggregate
-    val observed = if (committed.isEmpty && cfg.exactDedupByHash) Some(Observation()) else None
-    lazy val inputFp = observed.flatMap(ExactDedup.observedFingerprint)
-      .getOrElse(ExactDedup.inputFingerprint(input))
+    val inputFp = ExactDedup.inputFingerprint(input)
     for (st <- committed.keys; recorded <- store.inputFingerprint(st) if recorded != inputFp)
       throw new IllegalStateException(s"snapshot store $storeRoot: stage '$st' was committed " +
         s"from a different input (fingerprint $recorded, this input $inputFp); resume with " +
         "the original input or use a fresh store")
     val lite = persistAt(liteCached(docs): _*)
     val g = new StageGraph(spark, input, cfg, (name, stage) =>
-      committed.getOrElse(name,
-        if (SnapshotStages.contains(name)) store.commit(name, stage, cfgFp, inputFingerprint = Some(inputFp))
-        else lite(name, stage)),
-      observed)
+      if (SnapshotStages.contains(name)) store.stage(spark, name, cfgFp, inputFingerprint = Some(inputFp))(stage)
+      else lite(name, stage))
     // force every snapshot stage in commit order: each one is either read
     // back or computed and committed
     Seq(g.holdouts, g.edges, g.assignments).last

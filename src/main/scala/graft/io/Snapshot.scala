@@ -120,9 +120,8 @@ final class SnapshotStore(val root: String,
     *  - `rows`: their sum;
     *  - `schema`: the frame's schema, so [[latest]] reads without a
     *    schema-inference job;
-    *  - `input`: `inputFingerprint`, when given. It is evaluated AFTER the
-    *    write, so a fingerprint observed on the write job itself
-    *    (`Dataset.observe` upstream of `df`) is available to it.
+    *  - `input`: `inputFingerprint`, when given — the fingerprint of the
+    *    input the stage was computed from, which a later resume checks.
     *
     * `partitionBy`: optional partition columns for the data files — at
     * scale a resumed stage that is later read with a partition-column
@@ -134,7 +133,7 @@ final class SnapshotStore(val root: String,
     * byte-identical-resume contract does not hold for that column. */
   def commit(stage: String, df: DataFrame, configFingerprint: String,
              partitionBy: Seq[String] = Nil,
-             inputFingerprint: => Option[String] = None): DataFrame = {
+             inputFingerprint: Option[String] = None): DataFrame = {
     // stage names are embedded raw in data and manifest file names —
     // constrain them instead of escaping; config fingerprints keep the
     // same plain alphabet (Pipeline passes hex; this makes it a contract)
@@ -209,12 +208,13 @@ final class SnapshotStore(val root: String,
         }
       }
 
-  /** Compute-or-load: the resumability primitive. */
+  /** Compute-or-load: the resumability primitive. `inputFingerprint` is
+    * recorded only when the stage is computed, never checked here. */
   def stage(spark: SparkSession, name: String, configFingerprint: String,
-            partitionBy: Seq[String] = Nil)
+            partitionBy: Seq[String] = Nil, inputFingerprint: Option[String] = None)
            (compute: => DataFrame): DataFrame =
     latest(spark, name, configFingerprint).getOrElse {
-      commit(name, compute, configFingerprint, partitionBy)
+      commit(name, compute, configFingerprint, partitionBy, inputFingerprint)
     }
 
   /** Snapshot expiry (the Iceberg `expire_snapshots` contract this module

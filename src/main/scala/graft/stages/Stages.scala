@@ -2,7 +2,7 @@ package graft.stages
 
 import graft.expr.GraftFunctions
 import graft.model.EngineConfig
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -60,22 +60,14 @@ object ExactDedup {
     * full-width data movement left is the survivors' own anti-join — text
     * never enters a shuffle key or a window sort. */
   def splitByHash(docs: DataFrame, idCol: String = "id", textCol: String = "text",
-                  persistHoldouts: Boolean = false,
-                  fingerprint: Option[Observation] = None): (DataFrame, DataFrame) = {
+                  persistHoldouts: Boolean = false): (DataFrame, DataFrame) = {
     // cached (engine-tracked, 25 B/row): keyed feeds BOTH the group
     // aggregate and the holdout join below — uncached, each reference
     // re-ran the two full-text xxhash64 passes over the corpus (the
     // dominant narrow cost of this stage). At 10^12 docs the cache is
     // narrow-row MEMORY_AND_DISK spill; the alternative is re-hashing the
     // full corpus text per reference (guide §2.4: share one computation).
-    // `fingerprint` observes [[inputFingerprint]]'s aggregate on the rows
-    // entering the cache, so it completes with the job that fills it.
-    val hashed = contentKeys(docs, idCol, textCol)
-    val keyed = IntermediateCaches.persistTracked(
-      fingerprint.fold(hashed) { obs =>
-        val aggs = fingerprintAggs(idCol)
-        hashed.observe(obs, aggs.head, aggs.tail: _*)
-      })
+    val keyed = IntermediateCaches.persistTracked(contentKeys(docs, idCol, textCol))
     val grp = keyed.groupBy("__h1", "__h2", "__hn")
       .agg(min(col(idCol)).as("master_id"), count(lit(1)).as("__n"))
     val holdouts0 = keyed
@@ -105,35 +97,19 @@ object ExactDedup {
       xxhash64(lit(0x9e3779b9L), coalesce(col(textCol), lit(""))).as("__h2"),
       isnull(col(textCol)).as("__hn"))
 
-  // over contentKeys' columns. bit_xor, not sum: the combine must wrap,
-  // and a long sum throws on overflow under ANSI mode
-  private def fingerprintAggs(idCol: String): Seq[Column] = Seq(
-    bit_xor(xxhash64(col(idCol), col("__h1"), col("__h2"), col("__hn"))).as("fp_hash"),
-    count(lit(1)).as("fp_rows"))
-
   /** Order-insensitive fingerprint of a doc table's (id, text) rows: the
     * XOR of one 64-bit hash per (id, content key) row, plus the row count,
     * as `"<hash hex>:<rows>"`. Equal tables give equal fingerprints under
-    * any partitioning or row order. One aggregate job. */
+    * any partitioning or row order. One Spark job: per-partition partials
+    * combined on the driver (a DataFrame aggregate runs its exchange as a
+    * second job), and exact under task retries, unlike an observed metric. */
   def inputFingerprint(docs: DataFrame, idCol: String = "id", textCol: String = "text"): String = {
-    val aggs = fingerprintAggs(idCol)
-    formatFingerprint(contentKeys(docs, idCol, textCol).agg(aggs.head, aggs.tail: _*).head().toSeq)
-  }
-
-  /** The fingerprint a [[splitByHash]] `fingerprint` observation recorded,
-    * or None if no job has completed it within 100 ms. The wait is bounded
-    * (the semantics of Spark's package-private `Observation.getOrEmpty`),
-    * never `get`'s unbounded one: a plan that never ran the observed rows
-    * must not hang its caller. */
-  def observedFingerprint(obs: Observation): Option[String] =
-    scala.util.Try(scala.concurrent.Await.result(obs.future,
-      scala.concurrent.duration.Duration(100, "ms"))).toOption
-      .map(r => formatFingerprint(Seq(r.get(0), r.get(1))))
-
-  private def formatFingerprint(v: Seq[Any]): String = {
-    // bit_xor over zero rows is null
-    val hash = Option(v.head).fold(0L)(_.asInstanceOf[Long])
-    f"$hash%016x:${v(1).asInstanceOf[Long]}"
+    val (hash, rows) = contentKeys(docs, idCol, textCol)
+      .select(xxhash64(col(idCol), col("__h1"), col("__h2"), col("__hn")))
+      .rdd
+      .aggregate((0L, 0L))((acc, r) => (acc._1 ^ r.getLong(0), acc._2 + 1),
+                           (a, b) => (a._1 ^ b._1, a._2 + b._2))
+    f"$hash%016x:$rows"
   }
 
   /** J4 holdout re-attach (`person_1/link_model_per.py:945-953`: left

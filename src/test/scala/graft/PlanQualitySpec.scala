@@ -105,8 +105,9 @@ class PlanQualitySpec extends SparkSpec {
       Pipeline.clearIntermediateCaches(spark)
       val root = java.nio.file.Files.createTempDirectory("graft-jobs").toString
       val (_, commit) = SparkSpec.countJobs(spark)(Pipeline.runResumable(spark, docs, root).collect())
-      // the commit adds its three parquet writes to the lite call's jobs;
-      // survivors, signatures and lineage are no longer written
+      // the commit adds its three parquet writes and the input-fingerprint
+      // aggregate to the lite call's jobs; survivors, signatures and
+      // lineage are no longer written
       assert(commit <= lite + 5, s"fresh runResumable ran $commit jobs, runLite $lite")
     } finally {
       docs.unpersist()

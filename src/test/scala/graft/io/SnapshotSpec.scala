@@ -43,9 +43,11 @@ class SnapshotSpec extends SparkSpec {
     val store = new SnapshotStore(root)
     var computes = 0
     def body = { computes += 1; Seq((1L, 10L)).toDF("id", "x") }
-    store.stage(spark, "st", "c")(body)
-    store.stage(spark, "st", "c")(body)
+    store.stage(spark, "st", "c", inputFingerprint = Some("f1"))(body)
+    store.stage(spark, "st", "c", inputFingerprint = Some("f2"))(body)
     assert(computes == 1)
+    // the fingerprint is recorded by the computing call, not checked
+    assert(store.inputFingerprint("st").contains("f1"))
     // a NEW store instance (≙ restarted job) still sees the snapshot
     val store2 = new SnapshotStore(root)
     store2.stage(spark, "st", "c")(body)
@@ -126,6 +128,7 @@ class SnapshotSpec extends SparkSpec {
     val store = new SnapshotStore(root)
     val fp = store.inputFingerprint("holdouts")
     assert(fp.isDefined && Pipeline.SnapshotStages.forall(store.inputFingerprint(_) == fp))
+    assert(fp.contains(graft.stages.ExactDedup.inputFingerprint(docs.select("id", "text").repartition(3))))
     val holdoutsId = store.currentId("holdouts")
     val edited = docs.withColumn("text",
       when(col("id") === 7L, concat(col("text"), lit(" edited"))).otherwise(col("text")))
