@@ -39,21 +39,21 @@ object Pipeline {
     * use, and handed to `at(name, stage)` — the entry point's
     * materialization policy — which returns the frame every downstream
     * stage consumes: the plan itself, a tracked cache of it, or a
-    * committed snapshot read back. Stages in pipeline order: survivors,
-    * holdouts, signatures, candidates, scored, edges, assignments. */
+    * committed snapshot read back. Stages in pipeline order: holdouts,
+    * survivors, signatures, candidates, scored, edges, assignments. */
   private final class StageGraph(spark: SparkSession, input: DataFrame, cfg: EngineConfig,
                                  at: (String, => DataFrame) => DataFrame) {
     GraftFunctions.register(spark)
-    // ONE split feeds both survivors and holdouts: building it twice would
-    // run the full-corpus exact-dedup shuffle twice — the widest stage in
-    // the pipeline. The persist flags keep the second consumer on the
-    // materialized intermediate instead of a rebuilt plan. lazy: a fully
-    // resumed run never builds it.
-    private lazy val split =
-      if (cfg.exactDedupByHash) ExactDedup.splitByHash(input, persistHoldouts = true)
-      else ExactDedup.split(input, persistRanked = true)
-    lazy val survivors: DataFrame = at("survivors", split._1)
-    lazy val holdouts: DataFrame = at("holdouts", split._2)
+    // the exact-dup split only ever yields holdouts: survivors are the input
+    // minus the holdouts the boundary returned (splitByHash's own survivor
+    // plan), so a resume with committed holdouts never builds the split.
+    // The persist flags keep survivors and the later holdout consumers on
+    // the materialized holdouts instead of a rebuilt plan.
+    lazy val holdouts: DataFrame = at("holdouts",
+      if (cfg.exactDedupByHash) ExactDedup.splitByHash(input, persistHoldouts = true)._2
+      else ExactDedup.split(input, persistRanked = true)._2)
+    lazy val survivors: DataFrame = at("survivors",
+      input.join(holdouts.select("id"), Seq("id"), "left_anti"))
     lazy val signatures: DataFrame = at("signatures",
       Signatures.withSignatures(survivors, cfg).select("id", "minhash", "simhash"))
     lazy val candidates: DataFrame = at("candidates", Blocking.candidatePairs(signatures, cfg))

@@ -117,9 +117,9 @@ object PersonParity {
     * `dense_rank().over(partitionBy(entity_type))` — with a handful of
     * entity types that is one partition per type, i.e. the W6
     * single-partition hazard (SURVEY §7.5.5) on whichever type dominates.
-    * Instead each type goes through the distributed two-phase dense-id
-    * form (range partition + per-partition offsets, [[graft.stages.Golden
-    * .denseIds]]) over its distinct cluster_ids and joins back: same total
+    * Instead each type goes through the distributed dense-id form (range
+    * partition + sort + zipWithIndex, [[graft.stages.Golden.denseIds]])
+    * over its distinct cluster_ids and joins back: same total
     * order, same ids, no single-partition window. */
   def namespacedIds(lookup: DataFrame, rangeBases: Map[String, Long]): DataFrame = {
     val spark = lookup.sparkSession

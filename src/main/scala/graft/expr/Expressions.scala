@@ -1,7 +1,6 @@
 package graft.expr
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -10,7 +9,7 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions — the engine's function surface beyond
+/* Custom Catalyst expressions — the engine's function surface beyond
   * `org.apache.spark.sql.functions` (SURVEY §2.4 F4-F6 + the MinHash/SimHash
   * /winnowing kernels of §7.2). Scalar string metrics get real `doGenCode`
   * (a static call stays inside whole-stage codegen); the array-building
@@ -20,25 +19,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * Registered into the session FunctionRegistry by [[GraftFunctions]] —
   * usable from both the Column API (via `call_function`) and `spark.sql`.
   */
-final case class MinHashSigExpr(child: Expression, k: Int, numPerms: Int, seed: Long)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(v: Any): Any = {
-    val sh = Hashing.shingleHashes(v.asInstanceOf[UTF8String].toString, k)
-    val sig = Hashing.minhashOph(sh, numPerms, seed)
-    if (sig == null) null else new GenericArrayData(sig)
-  }
-  override protected def withNewChildInternal(c: Expression): MinHashSigExpr = copy(child = c)
-  override def prettyName: String = "minhash_sig"
-}
 
 /** Fused per-document signature: struct(minhash array<long>, simhash long)
-  * from ONE tokenization pass ([[Hashing.docSigPair]]). The split
-  * MinHashSigExpr + SimHash64Expr pair each re-tokenized and re-hashed the
-  * full text; this halves the narrow work of the signatures stage. Values
-  * are bit-identical to the split expressions (HashingSpec pins it).
+  * from ONE tokenization pass ([[Hashing.docSigPair]]). Two separate
+  * minhash and simhash expressions would each re-tokenize and re-hash the
+  * full text; fusing halves the narrow work of the signatures stage.
+  * Values are bit-identical to [[Hashing.minhashOph]] of
+  * [[Hashing.shingleHashes]] and to [[Hashing.simhash]] (HashingSpec pins
+  * it).
   *
   * Consumers must extract the fields from an ALIASED struct column in a
   * separate projection (`withColumn("__sig", …)` then getField) — Spark's
@@ -62,8 +50,11 @@ final case class DocSigsExpr(child: Expression, k: Int, numPerms: Int, seed: Lon
 }
 
 /** Fused simhash + doc fingerprint (q23): struct(simhash, fingerprint)
-  * from one tokenization — same extraction pattern as [[DocSigsExpr]],
-  * bit-identical to the split expressions (HashingSpec). */
+  * from one tokenization ([[Hashing.simFingerprintPair]]) — same
+  * extraction pattern as [[DocSigsExpr]]. The fingerprint is a rolling
+  * hash of the token stream (order-sensitive, unlike the shingle set);
+  * both values are pinned against their per-token definitions
+  * (HashingSpec). */
 final case class SimFpExpr(child: Expression)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = StructType(Seq(
@@ -77,16 +68,6 @@ final case class SimFpExpr(child: Expression)
   }
   override protected def withNewChildInternal(c: Expression): SimFpExpr = copy(child = c)
   override def prettyName: String = "sim_fp"
-}
-
-final case class SimHash64Expr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(v: Any): Any =
-    Hashing.simhash(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): SimHash64Expr = copy(child = c)
-  override def prettyName: String = "simhash64"
 }
 
 /** Band hashes of a minhash signature (array<long> → array<long> of length
@@ -224,23 +205,6 @@ final case class CosineSimExpr(left: Expression, right: Expression)
   override def prettyName: String = "cosine_sim"
 }
 
-/** Rolling-hash document fingerprint: a single 64-bit digest of the token
-  * stream (order-sensitive — unlike the shingle set). */
-final case class DocFingerprintExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(v: Any): Any = {
-    val toks = Hashing.tokens(v.asInstanceOf[UTF8String].toString)
-    var h = 0x9e3779b97f4a7c15L
-    var i = 0
-    while (i < toks.length) { h = Hashing.hash64(h, Hashing.hash64(toks(i))); i += 1 }
-    h
-  }
-  override protected def withNewChildInternal(c: Expression): DocFingerprintExpr = copy(child = c)
-  override def prettyName: String = "doc_fingerprint"
-}
-
 /** Session registration + Column-API helpers. Idempotent. */
 object GraftFunctions {
   import graft.model.EngineConfig
@@ -268,9 +232,6 @@ object GraftFunctions {
   def register(spark: SparkSession): Unit = {
     if (!registered.add(spark)) return
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("minhash_sig",
-      es => MinHashSigExpr(es.head, litInt(es(1)), litInt(es(2)), litLong(es(3))), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64Expr(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("doc_sigs",
       es => DocSigsExpr(es.head, litInt(es(1)), litInt(es(2)), litLong(es(3))), "scala_udf")
     reg.createOrReplaceTempFunction("band_hashes",
@@ -290,15 +251,10 @@ object GraftFunctions {
       es => WinnowExpr(es.head, litInt(es(1)), litInt(es(2))), "scala_udf")
     reg.createOrReplaceTempFunction("cosine_sim",
       es => CosineSimExpr(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("doc_fingerprint",
-      es => DocFingerprintExpr(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("sim_fp", es => SimFpExpr(es.head), "scala_udf")
   }
 
   import org.apache.spark.sql.functions.lit
-  def minhashSig(text: Column, cfg: EngineConfig): Column =
-    call_function("minhash_sig", text, lit(cfg.shingleK), lit(cfg.numPerms), lit(cfg.seed))
-  def simhash64(text: Column): Column = call_function("simhash64", text)
   def docSigs(text: Column, cfg: EngineConfig): Column =
     call_function("doc_sigs", text, lit(cfg.shingleK), lit(cfg.numPerms), lit(cfg.seed))
   def bandHashes(sig: Column, cfg: EngineConfig): Column =
@@ -314,6 +270,5 @@ object GraftFunctions {
   def winnowFps(text: Column, k: Int, w: Int): Column =
     call_function("winnow_fps", text, lit(k), lit(w))
   def cosineSim(l: Column, r: Column): Column = call_function("cosine_sim", l, r)
-  def docFingerprint(c: Column): Column = call_function("doc_fingerprint", c)
   def simFp(c: Column): Column = call_function("sim_fp", c)
 }

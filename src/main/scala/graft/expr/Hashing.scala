@@ -288,7 +288,7 @@ object Hashing {
 
   /** 64-bit SimHash over token-unigram hashes (frequency-weighted).
     * Computed from the fused one-scan token hashes; identical output to the
-    * reference formulation ([[simhashReference]], spec-pinned equal). */
+    * per-token vote loop over [[tokens]] (spec-pinned equal). */
   def simhash(text: String): Long = simhashFromFnv(tokenFnvHashes(text))
 
   /** Nibble → 4 one-bit votes spread into 16-bit lanes of a long:
@@ -350,21 +350,13 @@ object Hashing {
     out
   }
 
-  /** Reference simhash (tokenize → hash64 per token → vote loop) — the
-    * shipped formulation before round 6; spec-pinned equal to [[simhash]]. */
-  private[expr] def simhashReference(text: String): Long = {
-    val toks = tokens(text)
-    if (toks.isEmpty) return 0L
-    simhashVoteLoop(tokenHashes(toks))
-  }
-
   /** Fused per-document signature kernel: ONE text scan yields the token
     * FNV hashes, from which both the MinHash signature (shingle combine →
     * OPH kernel) and the SimHash (mix64 per token → packed votes)
-    * derive. The split expressions each re-tokenized (and re-FNV-hashed)
+    * derive. Separate kernels would each re-tokenize (and re-FNV-hash)
     * the full text — two scans plus ~2n String allocations per document in
     * the single most expensive narrow stage of the pipeline. Output is
-    * bit-identical to ([[minhashOph]] of [[shingleHashes]], [[simhashReference]])
+    * bit-identical to ([[minhashOph]] of [[shingleHashes]], [[simhash]])
     * — pinned by HashingSpec. */
   def docSigPair(text: String, k: Int, numPerms: Int, seed: Long): (Array[Long], Long) = {
     val th = tokenFnvHashes(text)
@@ -524,7 +516,7 @@ object Hashing {
 
   /** Fused simhash + order-sensitive doc fingerprint from ONE token scan
     * (q23's surface): values bit-identical to [[simhash]] and the
-    * doc_fingerprint fold over [[hash64(String)]] token hashes —
+    * rolling-hash fold over [[hash64(String)]] token hashes —
     * hash64(tok) == mix64(FNV(tok)) == mix64(tokenFnvHashes(_)(i)).
     * Spec-pinned (HashingSpec). */
   def simFingerprintPair(text: String): (Long, Long) = {

@@ -91,9 +91,9 @@ final class SnapshotStore(val root: String,
   }
 
   /** (path relative to `dir`, row count) of every parquet data file under
-    * `dir`, partition subdirectories included. The counts come from the
-    * file footers, read on the driver: no Spark job, and exact under task
-    * retries and speculative duplicates (only committed files exist). */
+    * `dir`. The counts come from the file footers, read on the driver: no
+    * Spark job, and exact under task retries and speculative duplicates
+    * (only committed files exist). */
   private def fileRows(dir: HPath): Seq[(String, Long)] = {
     val base = dir.toUri.getPath.stripSuffix("/") + "/"
     val it = fs.listFiles(dir, true)
@@ -121,18 +121,8 @@ final class SnapshotStore(val root: String,
     *  - `schema`: the frame's schema, so [[latest]] reads without a
     *    schema-inference job;
     *  - `input`: `inputFingerprint`, when given — the fingerprint of the
-    *    input the stage was computed from, which a later resume checks.
-    *
-    * `partitionBy`: optional partition columns for the data files — at
-    * scale a resumed stage that is later read with a partition-column
-    * predicate prunes to the matching directories instead of re-scanning
-    * the whole snapshot. Restriction: partition VALUES round-trip through
-    * Hive-style directory names, so an empty-string (or null) value in a
-    * partition column is written as __HIVE_DEFAULT_PARTITION__ and reads
-    * back as NULL — choose non-null, non-empty partition columns or the
-    * byte-identical-resume contract does not hold for that column. */
+    *    input the stage was computed from, which a later resume checks. */
   def commit(stage: String, df: DataFrame, configFingerprint: String,
-             partitionBy: Seq[String] = Nil,
              inputFingerprint: Option[String] = None): DataFrame = {
     // stage names are embedded raw in data and manifest file names —
     // constrain them instead of escaping; config fingerprints keep the
@@ -143,9 +133,7 @@ final class SnapshotStore(val root: String,
     val spark = df.sparkSession
     val id = nextId()
     val dest = new HPath(dataDir, s"$stage-$id")
-    val writer = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(dest.toString)
+    df.write.mode("overwrite").parquet(dest.toString)
     val files = fileRows(dest)
     val m = SnapshotStore.json.createObjectNode()
     m.put("id", id)
@@ -162,9 +150,7 @@ final class SnapshotStore(val root: String,
     writeString(tmp, SnapshotStore.json.writeValueAsString(m))
     fc.rename(tmp, manifestPath(stage), Options.Rename.OVERWRITE)
     // read back with the KNOWN schema: schema inference would launch a
-    // footer-read job (partition columns resolve from the user schema by
-    // name, so partitioned commits keep their original column order and
-    // types)
+    // footer-read job
     spark.read.schema(df.schema).parquet(dest.toString)
   }
 
@@ -211,10 +197,10 @@ final class SnapshotStore(val root: String,
   /** Compute-or-load: the resumability primitive. `inputFingerprint` is
     * recorded only when the stage is computed, never checked here. */
   def stage(spark: SparkSession, name: String, configFingerprint: String,
-            partitionBy: Seq[String] = Nil, inputFingerprint: Option[String] = None)
+            inputFingerprint: Option[String] = None)
            (compute: => DataFrame): DataFrame =
     latest(spark, name, configFingerprint).getOrElse {
-      commit(name, compute, configFingerprint, partitionBy, inputFingerprint)
+      commit(name, compute, configFingerprint, inputFingerprint)
     }
 
   /** Snapshot expiry (the Iceberg `expire_snapshots` contract this module

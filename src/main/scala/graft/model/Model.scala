@@ -68,7 +68,6 @@ final case class EngineConfig(
     numPerms: Int = 128,
     bands: Int = 16,
     rowsPerBand: Int = 8,
-    simhashBits: Int = 64,
     seed: Long = 42L,
     // ordered-level thresholds (≙ gamma levels, SURVEY §2.11): first
     // match wins. exact-hash > jaccard > simhash-hamming > substring.

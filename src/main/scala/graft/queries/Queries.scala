@@ -101,8 +101,8 @@ object Queries {
         .orderBy("o_custkey")
     }),
 
-    // W6 dense new-id namespacing — through the scale-safe two-phase form
-    // (range partition + per-partition offsets, Golden.denseIds), NOT the
+    // W6 dense new-id namespacing — through the scale-safe distributed form
+    // (range partition + sort + zipWithIndex, Golden.denseIds), NOT the
     // single-partition `dense_rank().over(Window.orderBy(...))` the survey
     // warns against (§7.5.5). Same total order, same result.
     "q08_dense_ids" -> ((s, dir) => {
@@ -263,10 +263,10 @@ object Queries {
     }),
 
     // SimHash fingerprints + doc fingerprint (engine-native; no SQL oracle).
-    // Fused sim_fp kernel: one tokenization for both values (the split
-    // simhash64 + doc_fingerprint expressions each re-scanned the text);
+    // Fused sim_fp kernel: one tokenization for both values (separate
+    // simhash and fingerprint expressions would each re-scan the text);
     // two-projection extraction so the struct evaluates once — values
-    // bit-identical (HashingSpec pins the kernel equality).
+    // pinned against their per-token definitions (HashingSpec).
     "q23_fingerprints" -> ((s, dir) => {
       GraftFunctions.register(s)
       t(s, dir, "documents")

@@ -1,9 +1,9 @@
 package graft.stages
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Canonical-document ("golden record") selection + id namespacing
   * (SURVEY §7.2 module 10).
@@ -54,113 +54,34 @@ object Golden {
   /** Dense ids from a namespace base — scalable form of
     * `DENSE_RANK() OVER (ORDER BY …) + base` (W6). A single-partition
     * global window is the reference shape but a scale hazard (SURVEY
-    * §7.5.5); this version discovers range boundaries once (small collect
-    * of per-range min key + count), then assigns each key a range by
-    * binary search and offsets local ranks within ranges: distributed,
-    * same total order, same result.
+    * §7.5.5); this version range-partitions the distinct keys, sorts each
+    * partition, and numbers the rows with `zipWithIndex` (one small job
+    * counts each partition's rows, then offsets follow partition order):
+    * distributed, Spark's own total order, same result.
     *
-    * The range cuts are FROZEN on the driver, so the returned plan is a
-    * pure function of (input keys, frozen cuts): any re-execution —
-    * evicted cache, cleared engine caches before a late consumer, lost
-    * block — reconstructs identical ids. The earlier form reused the
-    * range exchange's own sampled partition ids, which RESAMPLE per
-    * physical execution; driver offsets keyed to one sampling then met
-    * rows partitioned by another, emitting duplicate/gapped ids.
+    * Re-execution safe: the range bounds are sampled once, when the
+    * shuffle dependency is built, and every later read of the returned
+    * frame — a second action, a consumer after the engine caches were
+    * cleared, a recomputed lost shuffle block — goes through that same
+    * dependency, so each partition holds the same keys in the same order
+    * and gets the same ids.
     *
-    * Keys must be integral or string (the engine's two uses: numeric
-    * cluster ids, name keys); a null key, if present, ranks first. */
+    * Any orderable key type ranks in Spark's order (strings by UTF-8
+    * bytes); a null key, if present, ranks first. */
   def denseIds(spark: SparkSession, masters: DataFrame, keyCol: String, base: Long,
                partitions: Int = 0): DataFrame = {
+    // an explicit partition count: AQE does not coalesce a user-specified
+    // range repartition
     val n = if (partitions > 0) partitions
       else spark.sessionState.conf.numShufflePartitions
-    val keyType = masters.schema(keyCol).dataType
-    val integral = keyType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case StringType => false
-      case t => throw new IllegalArgumentException(
-        s"denseIds supports integral and string keys, got $t for '$keyCol'")
-    }
-    val keys = IntermediateCaches.persistTracked(masters.select(col(keyCol)).distinct())
-    // One materialization of a range exchange to DISCOVER cuts: the i-th
-    // non-empty partition covers exactly [min_i, min_{i+1}) — any key
-    // between partition i's upper boundary and min_{i+1} would itself be
-    // a smaller member of partition i+1. So (min, count) per partition,
-    // in order, fully describes a valid range split of the key set.
-    val stats = keys.repartitionByRange(n, col(keyCol))
-      .select(spark_partition_id().as("__p"), col(keyCol))
-      .groupBy("__p")
-      .agg(min(col(keyCol)).as("__min"), count(lit(1)).as("__cnt"))
-      .orderBy("__p")
-      .collect() // ≤ n rows, one per non-empty range
-    val offsets = stats.map(_.getLong(2)).scanLeft(0L)(_ + _)
-    val offsetsB = spark.sparkContext.broadcast(offsets)
-    // range index = last i with min_i <= key (binary search over the
-    // frozen mins). A null min marks the range holding only the null key
-    // (min() ignores nulls) = -infinity; null keys route to range 0 in
-    // the column guard, mirroring asc_nulls_first.
-    val pidOf = if (integral) {
-      val mins = stats.map(r => if (r.isNullAt(1)) null
-        else java.lang.Long.valueOf(r.get(1).asInstanceOf[Number].longValue))
-      val minsB = spark.sparkContext.broadcast(mins)
-      val u = udf((k: Long) => rangeOfLong(minsB.value, k))
-      when(col(keyCol).isNull, lit(0)).otherwise(u(col(keyCol).cast("long")))
-    } else {
-      // Spark sorts strings as unsigned UTF-8 bytes (UTF8String binary
-      // order); Java String.compareTo is UTF-16 code-unit order. The two
-      // disagree for supplementary-plane characters (U+FFFF sorts below
-      // U+1F600 in UTF-8 but above it in UTF-16), so the driver-side
-      // binary search MUST compare the same way the range exchange
-      // sorted, or a key near a range boundary routes to the wrong range.
-      val mins = stats.map(r => if (r.isNullAt(1)) null
-        else r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val minsB = spark.sparkContext.broadcast(mins)
-      val u = udf((k: String) => rangeOfString(minsB.value,
-        k.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      when(col(keyCol).isNull, lit(0)).otherwise(u(col(keyCol)))
-    }
-    val rankW = Window.partitionBy("__pid").orderBy(col(keyCol).asc_nulls_first)
-    val offsetUdf = udf((pid: Int) => offsetsB.value(pid))
-    keys
-      .withColumn("__pid", pidOf)
-      .withColumn("__local", row_number().over(rankW).cast("long"))
-      .withColumn("new_id", lit(base) + offsetUdf(col("__pid")) + col("__local"))
-      .select(col(keyCol), col("new_id"))
-  }
-
-  // largest i with mins(i) <= k over ascending mins; a null min is the
-  // -infinity range (only the null key sorts below every non-null min,
-  // and callers route null keys to range 0 before the udf)
-  private def rangeOfLong(mins: Array[java.lang.Long], k: Long): Int = {
-    var lo = 0; var hi = mins.length - 1; var ans = 0
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      if (mins(mid) == null || mins(mid).longValue <= k) { ans = mid; lo = mid + 1 }
-      else hi = mid - 1
-    }
-    ans
-  }
-
-  private def rangeOfString(mins: Array[Array[Byte]], k: Array[Byte]): Int = {
-    var lo = 0; var hi = mins.length - 1; var ans = 0
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      if (mins(mid) == null || utf8Compare(mins(mid), k) <= 0) { ans = mid; lo = mid + 1 }
-      else hi = mid - 1
-    }
-    ans
-  }
-
-  // unsigned byte-wise lexicographic compare — identical to Spark's
-  // UTF8String.compareTo, the order repartitionByRange sorted the keys in
-  private def utf8Compare(a: Array[Byte], b: Array[Byte]): Int = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
+    val key = col(keyCol).asc_nulls_first
+    val ranked = masters.select(col(keyCol)).distinct()
+      .repartitionByRange(n, key)
+      .sortWithinPartitions(key)
+      .rdd.zipWithIndex()
+      .map { case (r, i) => Row(r.get(0), base + 1 + i) }
+    spark.createDataFrame(ranked, StructType(Seq(
+      masters.schema(keyCol), StructField("new_id", LongType, nullable = false))))
   }
 
   /** Case-restore update-join (J6 variant,

@@ -150,9 +150,9 @@ object ExactDedup {
 object Signatures {
   def withSignatures(docs: DataFrame, cfg: EngineConfig, textCol: String = "text"): DataFrame =
     docs
-      // fused kernel: ONE tokenization yields both signatures (the split
-      // minhash_sig + simhash64 expressions each re-scanned and re-hashed
-      // the full text — measured as the pipeline's most expensive narrow
+      // fused kernel: ONE tokenization yields both signatures (separate
+      // minhash and simhash expressions each re-scanned and re-hashed the
+      // full text — measured as the pipeline's most expensive narrow
       // stage). The struct is aliased in its own projection and the fields
       // extracted in a SECOND projection: CollapseProject declines to merge
       // a multi-referenced non-cheap alias, so doc_sigs evaluates once per

@@ -145,6 +145,32 @@ class SnapshotSpec extends SparkSpec {
     docs.unpersist()
   }
 
+  test("a partial resume with committed holdouts never rebuilds the exact-dup split") {
+    val root = tmpDir()
+    val docs = corpus(300)
+    // the split caches its content-key frame (`__h1`, `__h2`, `__hn`) when
+    // it runs; a cached RDD is named after its plan
+    def cachedKeys = spark.sparkContext.getPersistentRDDs.values
+      .filter(r => Option(r.name).exists(_.contains("__h1")))
+    def runCollect() = Pipeline.runResumable(spark, docs, root).as[(Long, Long)].collect().sortBy(_._1).toSeq
+    val full = try {
+      val out = runCollect()
+      assert(cachedKeys.nonEmpty, "a fresh commit builds the split")
+      out
+    } finally Pipeline.clearIntermediateCaches(spark)
+    val store = new SnapshotStore(root)
+    val holdoutsId = store.currentId("holdouts")
+    kill(root, Seq("edges", "assignments"))
+    assert(cachedKeys.isEmpty)
+    try {
+      assert(runCollect() == full)
+      assert(cachedKeys.isEmpty, s"the resume cached ${cachedKeys.size} plan(s) over the split's keys")
+    } finally Pipeline.clearIntermediateCaches(spark)
+    assert(store.currentId("holdouts") == holdoutsId, "holdouts recommitted")
+    assert(store.currentId("edges").isDefined && store.currentId("assignments").isDefined)
+    docs.unpersist()
+  }
+
   /** Rewrites a manifest in the format stores used before per-file counts,
     * schemas and input fingerprints were recorded. */
   private def toOldFormat(root: String, stage: String): Unit = {
@@ -280,29 +306,4 @@ class SnapshotSpec extends SparkSpec {
     assert(store.currentRows("onejob").contains(1000L))
     assert(store.currentFiles("onejob").size == 4)
   }
-
-  test("partitioned commit: resumed stage prunes partitions under a predicate") {
-    val store = new SnapshotStore(tmpDir())
-    val df = Seq((1L, "en", "a"), (2L, "de", "b"), (3L, "en", "c"), (4L, "fr", "d"))
-      .toDF("id", "lang", "text")
-    store.commit("parts", df, "c", partitionBy = Seq("lang"))
-    // per-file counts reach into the partition directories
-    assert(store.currentFiles("parts").map { case (f, n) => f.takeWhile(_ != '/') -> n }
-      .groupMapReduce(_._1)(_._2)(_ + _) == Map("lang=en" -> 2L, "lang=de" -> 1L, "lang=fr" -> 1L))
-    val back = store.latest(spark, "parts", "c").get
-    assert(back.count() == 4)
-    val pruned = back.filter(col("lang") === "en")
-    val plan = pruned.queryExecution.executedPlan.toString
-    // partition-column predicate must reach the scan as a partition filter
-    // (directory pruning), not a post-scan data filter
-    assert(plan.contains("PartitionFilters") && plan.contains("lang"),
-      s"expected partition filter on lang in plan:\n$plan")
-    val scanned = pruned.queryExecution.executedPlan.collectLeaves().collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.selectedPartitions.partitionCount
-    }.sum
-    assert(scanned == 1, s"expected 1 of 3 lang partitions scanned, got $scanned")
-    assert(pruned.as[(Long, String, String)].collect().map(_._1).sorted.toSeq == Seq(1L, 3L))
-  }
-
 }

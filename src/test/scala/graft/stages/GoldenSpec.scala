@@ -86,9 +86,8 @@ class GoldenSpec extends SparkSpec {
     // every consumer on that sampling. clearIntermediateCaches before the
     // (lazy) output was consumed dropped the pin, the rank window
     // re-executed the exchange with RESAMPLED boundaries, and the stale
-    // offsets emitted duplicate/gapped ids. Cuts are now frozen on the
-    // driver, so the plan is re-execution-safe — the cache is purely an
-    // optimization and the Caches doc ("clearing earlier is safe") holds.
+    // offsets emitted duplicate/gapped ids. The output must not depend on
+    // any engine cache: the Caches doc ("clearing earlier is safe") holds.
     val keys = (1L to 20000L).map(i => graft.expr.Hashing.mix64(i) & 0xFFFFFFFFL)
     val out = Golden.denseIds(spark, keys.toDF("cluster_id"), "cluster_id",
       7000000L, partitions = 16)
@@ -135,11 +134,38 @@ class GoldenSpec extends SparkSpec {
     graft.Pipeline.clearIntermediateCaches(spark)
   }
 
-  test("denseIds: unsupported key type fails loudly") {
-    val masters = Seq(1.5, 2.5).toDF("k")
-    val ex = intercept[IllegalArgumentException](
-      Golden.denseIds(spark, masters, "k", 0L))
-    assert(ex.getMessage.contains("integral and string"))
+  /** key (as a string; null stays None) -> new_id, so NaN keys compare */
+  private def idsByKey(df: org.apache.spark.sql.DataFrame): Map[Option[String], Long] =
+    df.collect().map(r => (Option(r.get(0)).map(_.toString), r.getLong(1))).toMap
+
+  /** The reference shape: one global window over the distinct keys. */
+  private def denseRankIds(masters: org.apache.spark.sql.DataFrame, keyCol: String,
+                           base: Long): Map[Option[String], Long] =
+    idsByKey(masters.select(keyCol).distinct().withColumn("new_id",
+      dense_rank().over(org.apache.spark.sql.expressions.Window
+        .orderBy(col(keyCol).asc_nulls_first)).cast("long") + lit(base)))
+
+  test("denseIds: double keys rank as dense_rank does (NaN last, null first, -0.0 = 0.0)") {
+    val rnd = new scala.util.Random(11)
+    val special = Seq(Some(2.5), Some(-1.0), None, Some(Double.NaN), Some(Double.PositiveInfinity),
+      Some(Double.NegativeInfinity), Some(0.0), Some(-0.0), Some(1e-300), Some(2.5))
+    val masters = (special ++ Seq.fill(3000)(Some(rnd.nextGaussian() * 1e6))).toDF("k")
+    val got = idsByKey(Golden.denseIds(spark, masters, "k", 40L, partitions = 8))
+    val expected = denseRankIds(masters, "k", 40L)
+    assert(got.size == expected.size)
+    assert(got == expected)
+    assert(got(None) == 41L)
+  }
+
+  test("denseIds: date keys rank as dense_rank does") {
+    val dates = spark.range(0, 3000).select(
+      date_add(lit("1900-01-01").cast("date"), pmod(col("id") * 7919L, lit(60000L)).cast("int")).as("d"))
+    val masters = dates.unionByName(Seq(Option.empty[java.sql.Date]).toDF("d"))
+    val got = idsByKey(Golden.denseIds(spark, masters, "d", 0L, partitions = 8))
+    val expected = denseRankIds(masters, "d", 0L)
+    assert(got.size == expected.size)
+    assert(got == expected)
+    assert(got(None) == 1L)
   }
 
   test("goldenFill: NULL-recency rows stay eligible, losing to any dated row " +
