@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   *      per-entity [[graft.model.EngineConfig.forThreshold]] config);
   *   2. the per-entity lookups union into ONE namespaced lookup
   *      (`person_2/fv_all_person_lookup.sql:30-115`: DENSE_RANK per type +
-  *      1M/2M/3M/4M/5M range bases) via the scale-safe two-phase dense-id
-  *      form ([[PersonParity.namespacedIds]] — no single-partition window);
+  *      1M/2M/3M/4M/5M range bases) via the distributed dense-id form
+  *      ([[PersonParity.namespacedIds]]: range sort + `zipWithIndex`, no
+  *      single-partition window);
   *   3. master rows per type insert into the unified table and sparse
   *      columns back-fill from the highest-ordered non-master cluster
   *      member (`person_2/fv_person.sql:36-338`,

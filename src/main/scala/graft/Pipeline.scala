@@ -1,6 +1,5 @@
 package graft
 
-import graft.expr.GraftFunctions
 import graft.extract.TextExtract
 import graft.model.EngineConfig
 import graft.stages._
@@ -43,7 +42,6 @@ object Pipeline {
     * survivors, signatures, candidates, scored, edges, assignments. */
   private final class StageGraph(spark: SparkSession, input: DataFrame, cfg: EngineConfig,
                                  at: (String, => DataFrame) => DataFrame) {
-    GraftFunctions.register(spark)
     // the exact-dup split only ever yields holdouts: survivors are the input
     // minus the holdouts the boundary returned (splitByHash's own survivor
     // plan), so a resume with committed holdouts never builds the split.

@@ -1,11 +1,10 @@
 package graft.expr
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,8 +15,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * signature kernels use `CodegenFallback` — they dominate their own cost
   * (hashing hundreds of shingles), so the interpreted boundary is noise.
   *
-  * Registered into the session FunctionRegistry by [[GraftFunctions]] —
-  * usable from both the Column API (via `call_function`) and `spark.sql`.
+  * Reached only through the Column helpers of [[GraftFunctions]], which
+  * wrap each expression in a Column directly: there is no function
+  * registry and no SQL name surface (`prettyName` names the expression in
+  * plans and generated column names only).
   */
 
 /** Fused per-document signature: struct(minhash array<long>, simhash long)
@@ -205,70 +206,30 @@ final case class CosineSimExpr(left: Expression, right: Expression)
   override def prettyName: String = "cosine_sim"
 }
 
-/** Session registration + Column-API helpers. Idempotent. */
+/** Column-API helpers: each builds its expression directly, so every
+  * operator resolves on any session, with nothing registered first. */
 object GraftFunctions {
   import graft.model.EngineConfig
+  import org.apache.spark.sql.graft.ColumnExpr.{column, expression}
 
-  private def litInt(e: Expression): Int = e.asInstanceOf[Literal].value match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case o => o.toString.toInt
-  }
-  private def litLong(e: Expression): Long = e.asInstanceOf[Literal].value match {
-    case i: Int => i.toLong
-    case l: Long => l
-    case o => o.toString.toLong
-  }
-
-  /** Idempotent per-session: repeated calls (every query entry registers)
-    * must not re-register — the replace WARNs pollute driver-captured logs
-    * and registration mutates shared session state. WeakHashMap-backed so
-    * stopped sessions (bench/scaling tools create one per rep) are not
-    * pinned for the JVM lifetime. */
-  private val registered = java.util.Collections.newSetFromMap(
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  def register(spark: SparkSession): Unit = {
-    if (!registered.add(spark)) return
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("doc_sigs",
-      es => DocSigsExpr(es.head, litInt(es(1)), litInt(es(2)), litLong(es(3))), "scala_udf")
-    reg.createOrReplaceTempFunction("band_hashes",
-      es => BandHashesExpr(es.head, litInt(es(1)), litInt(es(2))), "scala_udf")
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      es => ShingleHashesExpr(es.head, litInt(es(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("jaccard_arrays",
-      es => JaccardArraysExpr(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_agree",
-      es => MinHashAgreeExpr(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("jaro_winkler",
-      es => JaroWinklerExpr(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("damerau_levenshtein",
-      es => DamerauLevenshteinExpr(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("dmetaphone", es => DoubleMetaphoneExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("winnow_fps",
-      es => WinnowExpr(es.head, litInt(es(1)), litInt(es(2))), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim",
-      es => CosineSimExpr(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("sim_fp", es => SimFpExpr(es.head), "scala_udf")
-  }
-
-  import org.apache.spark.sql.functions.lit
   def docSigs(text: Column, cfg: EngineConfig): Column =
-    call_function("doc_sigs", text, lit(cfg.shingleK), lit(cfg.numPerms), lit(cfg.seed))
+    column(DocSigsExpr(expression(text), cfg.shingleK, cfg.numPerms, cfg.seed))
   def bandHashes(sig: Column, cfg: EngineConfig): Column =
-    call_function("band_hashes", sig, lit(cfg.bands), lit(cfg.rowsPerBand))
+    column(BandHashesExpr(expression(sig), cfg.bands, cfg.rowsPerBand))
   def shingleHashes(text: Column, k: Int): Column =
-    call_function("shingle_hashes", text, lit(k))
-  def jaccardArrays(l: Column, r: Column): Column = call_function("jaccard_arrays", l, r)
-  def minhashAgree(l: Column, r: Column): Column = call_function("minhash_agree", l, r)
-  def jaroWinkler(l: Column, r: Column): Column = call_function("jaro_winkler", l, r)
+    column(ShingleHashesExpr(expression(text), k))
+  def jaccardArrays(l: Column, r: Column): Column =
+    column(JaccardArraysExpr(expression(l), expression(r)))
+  def minhashAgree(l: Column, r: Column): Column =
+    column(MinHashAgreeExpr(expression(l), expression(r)))
+  def jaroWinkler(l: Column, r: Column): Column =
+    column(JaroWinklerExpr(expression(l), expression(r)))
   def damerauLevenshtein(l: Column, r: Column): Column =
-    call_function("damerau_levenshtein", l, r)
-  def dmetaphone(c: Column): Column = call_function("dmetaphone", c)
+    column(DamerauLevenshteinExpr(expression(l), expression(r)))
+  def dmetaphone(c: Column): Column = column(DoubleMetaphoneExpr(expression(c)))
   def winnowFps(text: Column, k: Int, w: Int): Column =
-    call_function("winnow_fps", text, lit(k), lit(w))
-  def cosineSim(l: Column, r: Column): Column = call_function("cosine_sim", l, r)
-  def simFp(c: Column): Column = call_function("sim_fp", c)
+    column(WinnowExpr(expression(text), k, w))
+  def cosineSim(l: Column, r: Column): Column =
+    column(CosineSimExpr(expression(l), expression(r)))
+  def simFp(c: Column): Column = column(SimFpExpr(expression(c)))
 }

@@ -58,53 +58,18 @@ object Hashing {
     * etc. would change its shingles and signatures. */
   @inline private def isSpace(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
 
-  /** Whitespace tokenizer — the pinned tokenization for shingling.
-    * Manual scan, no regex: `split("\\s+")` recompiles its Pattern on
-    * every call, and this runs once per document per signature expression
-    * in the hottest narrow stage. Token boundaries follow the regex `\s+`
-    * split over the RAW string. NOTE (intentional behavior change,
-    * versioned as kernel "h2"): the h1 tokenizer called `.trim` first,
-    * which also stripped leading/trailing control chars ≤ U+0020 outside
-    * the `\s` class (NUL, BEL, …) — such documents tokenize (and sign)
-    * differently under h2, which is why [[kernelVersion]] participates in
-    * the snapshot config fingerprint. */
-  def tokens(text: String): Array[String] = {
-    if (text == null || text.isEmpty) return Array.empty
-    val out = new scala.collection.mutable.ArrayBuilder.ofRef[String]
-    val n = text.length
-    var i = 0
-    while (i < n) {
-      while (i < n && isSpace(text.charAt(i))) i += 1
-      val start = i
-      while (i < n && !isSpace(text.charAt(i))) i += 1
-      if (i > start) out += text.substring(start, i)
-    }
-    out.result()
-  }
-
-  /** FNV-1a hash of each token (un-finalized — inputs to [[shingleHashes]]'
-    * per-shingle combine and finalized by mix64 where used directly). */
-  private def tokenHashes(toks: Array[String]): Array[Long] = {
-    val th = new Array[Long](toks.length)
-    var i = 0
-    while (i < toks.length) {
-      val t = toks(i)
-      var h = 0xcbf29ce484222325L
-      var c = 0
-      while (c < t.length) { h ^= t.charAt(c).toLong; h *= 0x100000001b3L; c += 1 }
-      th(i) = h
-      i += 1
-    }
-    th
-  }
-
-  /** Un-finalized FNV-1a hash per token in ONE scan over the text — the
-    * fused form of `tokenHashes(tokens(text))`, hashing characters as the
-    * scan passes them instead of materializing a String per token (the
-    * token substrings were pure allocation: every consumer of the combined
-    * signature path needs only the hashes). Token boundaries are exactly
-    * [[tokens]]' (`\s+` split), so th(i) here == tokenHashes(tokens(text))(i)
-    * value-for-value. */
+  /** Un-finalized FNV-1a hash of each whitespace token, in ONE scan over
+    * the text — the pinned tokenization for shingling, simhash and the doc
+    * fingerprint. Characters are hashed as the scan passes them; no String
+    * is built per token. Token boundaries follow the regex `\s+` split over
+    * the RAW string (manual scan, no regex: `split` recompiles its Pattern
+    * on every call). NOTE (intentional behavior change, versioned as kernel
+    * "h2"): the h1 tokenizer called `.trim` first, which also stripped
+    * leading/trailing control chars ≤ U+0020 outside the `\s` class (NUL,
+    * BEL, …) — such documents tokenize (and sign) differently under h2,
+    * which is why [[kernelVersion]] participates in the snapshot config
+    * fingerprint. HashingSpec pins every consumer against a reference
+    * that splits the text into token Strings first. */
   private[expr] def tokenFnvHashes(text: String): Array[Long] = {
     if (text == null || text.isEmpty) return Array.empty
     val out = new scala.collection.mutable.ArrayBuilder.ofLong
@@ -130,9 +95,8 @@ object Hashing {
     * Each token is char-hashed ONCE (not once per overlapping shingle);
     * a shingle combines its k token hashes order-sensitively. */
   def shingleHashes(text: String, k: Int): Array[Long] = {
-    val toks = tokens(text)
-    if (toks.length < k) return Array.empty
-    shingleHashesOf(tokenHashes(toks), k)
+    val th = tokenFnvHashes(text)
+    if (th.length < k) Array.empty else shingleHashesOf(th, k)
   }
 
   /** Largest open-addressing probe table: 2^30 slots, the biggest power of
@@ -288,7 +252,7 @@ object Hashing {
 
   /** 64-bit SimHash over token-unigram hashes (frequency-weighted).
     * Computed from the fused one-scan token hashes; identical output to the
-    * per-token vote loop over [[tokens]] (spec-pinned equal). */
+    * per-token vote loop over token Strings (spec-pinned equal). */
   def simhash(text: String): Long = simhashFromFnv(tokenFnvHashes(text))
 
   /** Nibble → 4 one-bit votes spread into 16-bit lanes of a long:

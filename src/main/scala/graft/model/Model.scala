@@ -1,60 +1,12 @@
 package graft.model
 
-import java.sql.Timestamp
-
-/** Core data model of the dedup engine.
+/* Core data model of the dedup engine: its configuration.
   *
-  * Shapes derive from BASELINE.json `input_hint` (url, warc_ts, html, text,
-  * lang) and the reference pipeline's intermediate tables — see SURVEY.md
-  * §1.2/§1.3 and reference `person_1/link_model_per.py:1288-1333` (DDLs).
-  * Implementation is Spark-first: typed Datasets over these case classes.
+  * Stage frames are untyped DataFrames whose shapes derive from
+  * BASELINE.json `input_hint` (url, warc_ts, html, text, lang) and the
+  * reference pipeline's intermediate tables — see SURVEY.md §1.2/§1.3 and
+  * reference `person_1/link_model_per.py:1288-1333` (DDLs).
   */
-
-/** One web page row — the engine's primary input table
-  * (Iceberg-style table of Common-Crawl-style pages). */
-final case class PageRow(
-    url: String,
-    warc_ts: Timestamp,
-    html: Array[Byte],
-    text: String,
-    lang: String)
-
-/** Page with the engine's stable numeric id (assigned once at ingest,
-  * = xxhash64-style hash of url unless provided). cluster_id = min(id)
-  * invariant (SURVEY §1.4.3) requires a total order on ids. */
-final case class DocRow(
-    id: Long,
-    url: String,
-    warc_ts: Timestamp,
-    text: String,
-    lang: String)
-
-/** Per-document signature: 128-slot MinHash + 64-bit SimHash.
-  * nShingles==0 marks unlinkable docs (too short — reference analog:
-  * unlinkable records, person_1/link_model_per.py:754-762). */
-final case class DocSig(
-    id: Long,
-    minhash: Array[Long],
-    simhash: Long,
-    nShingles: Int)
-
-/** Candidate pair produced by LSH blocking (J3 analog). Canonical form
-  * idL < idR; matchKey = first band index that produced the pair
-  * (provenance, ≙ Splink match_key, person_1/link_model_per.py:489). */
-final case class CandidatePair(idL: Long, idR: Long, matchKey: Int)
-
-/** Scored pair (edge) — similarity analog of Splink match_weight. */
-final case class ScoredPair(
-    idL: Long,
-    idR: Long,
-    jaccardEst: Double,
-    hammingDist: Int,
-    level: Int,
-    reason: String)
-
-final case class Edge(src: Long, dst: Long)
-
-final case class ClusterAssignment(id: Long, clusterId: Long)
 
 /** Engine configuration — the analog of the reference's Splink model JSON
   * (person_1/link_model_per.py:745-752): everything that must be pinned for

@@ -175,7 +175,6 @@ object Queries {
 
     // F6 edit distances (Levenshtein built-in; Damerau-Levenshtein custom)
     "q15_editdist" -> ((s, dir) => {
-      GraftFunctions.register(s)
       val n = t(s, dir, "nation").select(col("n_name"))
       val l = n.select(col("n_name").as("name_l"))
       val r = n.select(col("n_name").as("name_r"))
@@ -249,7 +248,6 @@ object Queries {
 
     // MinHash + LSH candidate dedup pairs (engine-native; no SQL oracle)
     "q22_minhash_lsh" -> ((s, dir) => {
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
         .select(col("doc_id").as("id"), col("text"))
       val sigs = graft.stages.Signatures.withSignatures(docs, cfg)
@@ -268,7 +266,6 @@ object Queries {
     // two-projection extraction so the struct evaluates once — values
     // pinned against their per-token definitions (HashingSpec).
     "q23_fingerprints" -> ((s, dir) => {
-      GraftFunctions.register(s)
       t(s, dir, "documents")
         .withColumn("__sf", GraftFunctions.simFp(col("text")))
         .select(col("doc_id"),
@@ -288,7 +285,6 @@ object Queries {
 
     // similarity search: brute-force cosine top-1 neighbour
     "q25_cosine_top1" -> ((s, dir) => {
-      GraftFunctions.register(s)
       val e = t(s, dir, "embeddings")
       val a = e.select(col("vec_id"), col("embedding"))
       val b = e.select(col("vec_id").as("nid"), col("embedding").as("emb_b"))
@@ -347,7 +343,6 @@ object Queries {
     // '|'-joined string: the driver's rows-only check sorts columns with
     // pandas, which cannot sort raw arrays.
     "q29_phonetic" -> ((s, dir) => {
-      GraftFunctions.register(s)
       t(s, dir, "customer")
         .select(col("c_custkey"),
           concat_ws("|", GraftFunctions.dmetaphone(col("c_mktsegment"))).as("dm_codes"),
@@ -490,7 +485,7 @@ object Queries {
     // threshold (0.8 / 0.7 / 0.85 — the analog of the reference's five
     // per-model thresholds 22/18.5/22/10.5/5.8), unioned into ONE
     // namespaced lookup (dense ids per type from 1M/2M/3M range bases via
-    // the scale-safe two-phase form), masters selected (J7), and a planted
+    // range sort + zipWithIndex), masters selected (J7), and a planted
     // sparse `cni` column back-filled onto masters from the
     // highest-ordered non-master cluster member (crossEntityFill). Dup
     // structure is planted per entity: an exact copy (+30M — exercises
@@ -553,7 +548,6 @@ object Queries {
     // (minhash-dependent); EngineConfigSpec pins the band choice and
     // StagesSpec the recall at the retuned threshold.
     "q38_threshold_tuned" -> ((s, dir) => {
-      GraftFunctions.register(s)
       val tuned = EngineConfig.forThreshold(0.8)
       val docs = t(s, dir, "documents")
         .select(col("doc_id").as("id"), col("text"))

@@ -94,7 +94,6 @@ object Knn {
     * `chainWidth` ids held, no per-bucket window. */
   def lshTop1(spark: SparkSession, embeddings: DataFrame, cfg: EngineConfig,
               bits: Int = 8, bucketCap: Int = 256, chainWidth: Int = 4): DataFrame = {
-    GraftFunctions.register(spark)
     val seed = cfg.seed
     // bits sign planes + 1 extra plane for the hot-bucket ordering; planes
     // materialize lazily per executor ([[planesFor]]) — no driver dim probe
@@ -227,7 +226,6 @@ object Knn {
 
   def ivfTop1(spark: SparkSession, embeddings: DataFrame, k: Int = 0,
               nProbe: Int = 2, seed: Long = 42L): DataFrame = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // Centroid pick = distributed top-k by a bijective id hash (mix64 has
     // no collisions on Long, so the hash alone is a deterministic total
@@ -366,7 +364,6 @@ object Knn {
   def embedDedup(spark: SparkSession, embeddings: DataFrame,
                  threshold: Double = 0.9, bits: Int = 8, tables: Int = 8,
                  seed: Long = 42L, allPairsCap: Int = 64): DataFrame = {
-    GraftFunctions.register(spark)
     require(bits <= 24, "bucket bits must leave room for the table index")
     // tables*bits sign planes + 1 shared plane for hot-bucket ordering;
     // generated lazily per executor (no driver dim-probe action, and an
@@ -419,7 +416,6 @@ object Knn {
 
   /** Brute-force cosine top-k (baseline; O(n^2) — test scale only). */
   def bruteTopK(spark: SparkSession, embeddings: DataFrame, k: Int): DataFrame = {
-    GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val a = embeddings.select(col("vec_id"), col("embedding"))
     val b = embeddings.select(col("vec_id").as("nid"), col("embedding").as("emb_b"))

@@ -3,23 +3,6 @@ package graft.stages
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Registry of the engine's internal persisted intermediates.
-  *
-  * Several operators persist intermediate frames whose consumers are LAZY
-  * (the returned DataFrame still references the cached blocks for
-  * recompute), so the operator itself can never safely unpersist them. In
-  * a long-lived session, repeated calls would otherwise accumulate cached
-  * blocks until a global `clearCache()` — which also evicts the CALLER's
-  * caches. This registry tracks exactly the engine-created intermediates
-  * per session so [[clear]] can drop them and nothing else.
-  *
-  * Contract for library callers: after fully consuming the result of
-  * `Pipeline.run`/`runLite`, `Substring.edges`, `Knn.embedDedup` (an
-  * action has run and the output is materialized or persisted by the
-  * caller), call `Pipeline.clearIntermediateCaches(spark)`
-  * to release the engine's internal blocks. Clearing earlier is safe but
-  * forces recomputation if the lazy result is re-evaluated.
-  */
 /** Session-conf scoping helpers for the engine's internal driver actions. */
 private[graft] object ExecHints {
   /** Run `body` (a limit-collect style action) with
@@ -43,6 +26,23 @@ private[graft] object ExecHints {
   }
 }
 
+/** Registry of the engine's internal persisted intermediates.
+  *
+  * Several operators persist intermediate frames whose consumers are LAZY
+  * (the returned DataFrame still references the cached blocks for
+  * recompute), so the operator itself can never safely unpersist them. In
+  * a long-lived session, repeated calls would otherwise accumulate cached
+  * blocks until a global `clearCache()` — which also evicts the CALLER's
+  * caches. This registry tracks exactly the engine-created intermediates
+  * per session so [[clear]] can drop them and nothing else.
+  *
+  * Contract for library callers: after fully consuming the result of
+  * `Pipeline.run`/`runLite`, `Substring.edges`, `Knn.embedDedup` (an
+  * action has run and the output is materialized or persisted by the
+  * caller), call `Pipeline.clearIntermediateCaches(spark)`
+  * to release the engine's internal blocks. Clearing earlier is safe but
+  * forces recomputation if the lazy result is re-evaluated.
+  */
 private[graft] object IntermediateCaches {
   // The tracked DataFrames must be held STRONGLY until clear(): the
   // intermediate Dataset wrappers are referenced only by this registry

@@ -160,7 +160,7 @@ object Signatures {
       .withColumn("__sig", GraftFunctions.docSigs(col(textCol), cfg))
       .withColumn("minhash", col("__sig").getField("minhash"))
       .withColumn("simhash", col("__sig").getField("simhash"))
-      // real shingle count (Model.DocSig contract), not a constant: the
+      // real shingle count (0 marks an unlinkable doc), not a constant: the
       // extra shingle pass is column-pruned away in the pipeline hot path
       // (which selects only id/minhash/simhash) and only paid by consumers
       // that actually read the count

@@ -1,6 +1,5 @@
 package graft.tools
 
-import graft.expr.GraftFunctions
 import graft.fixtures.Corpus
 import graft.model.EngineConfig
 import graft.stages._
@@ -64,7 +63,6 @@ object ScaleProbe {
       .fold(builder0)(d => builder0.config("spark.local.dir", d))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
     // GRAFT_CC_FAST_MAX=0 forces the distributed star loop even below the
     // driver fast-path threshold — the 5M probe found the fast path still
     // engaged at 1.24M edges (well below its limit), so this is the only

@@ -36,7 +36,6 @@ object StreamProbe {
       .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.expr.GraftFunctions.register(spark)
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 

@@ -50,7 +50,6 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    graft.expr.GraftFunctions.register(s)
     s
   }
 }

@@ -178,16 +178,41 @@ class HashingSpec extends AnyFunSuite {
       " leading and trailing  ") ++ Seq.fill(20)(gen(1 + rnd.nextInt(300)))
   }
 
+  /** Reference tokenizer: Java's regex `\s+` split (`\s` = [ \t\n\x0B\f\r],
+    * ASCII only) over the raw string, empty tokens dropped. The kernels
+    * scan the text once without building these Strings. */
+  private def tokens(text: String): Array[String] =
+    if (text == null) Array.empty else text.split("\\s+").filter(_.nonEmpty)
+
+  /** Un-finalized FNV-1a of one token. */
+  private def fnv(t: String): Long = {
+    var h = 0xcbf29ce484222325L
+    t.foreach { c => h ^= c.toLong; h *= 0x100000001b3L }
+    h
+  }
+
   /** Reference simhash: tokenize → un-finalized FNV-1a per token → the
     * per-bit vote loop. The formulation [[Hashing.simhash]] replaced. */
   private def simhashReference(text: String): Long = {
-    val toks = Hashing.tokens(text)
+    val toks = tokens(text)
     if (toks.isEmpty) return 0L
-    Hashing.simhashVoteLoop(toks.map { t =>
-      var h = 0xcbf29ce484222325L
-      t.foreach { c => h ^= c.toLong; h *= 0x100000001b3L }
-      h
-    })
+    Hashing.simhashVoteLoop(toks.map(fnv))
+  }
+
+  /** Reference shingles: tokenize → un-finalized FNV-1a per token → each
+    * window of k token hashes FNV-combined in order and mix64-finalized →
+    * distinct values in first-occurrence order. */
+  private def shingleReference(text: String, k: Int): Array[Long] = {
+    val th = tokens(text).map(fnv)
+    if (th.length < k) return Array.empty
+    th.sliding(k).map { w =>
+      Hashing.mix64(w.foldLeft(0xcbf29ce484222325L)((h, t) => (h ^ t) * 0x100000001b3L))
+    }.toArray.distinct
+  }
+
+  test("shingleHashes equals the token-String reference on every text class") {
+    for (t <- randomTexts; k <- Seq(1, 2, 3, 5))
+      assert(Hashing.shingleHashes(t, k).sameElements(shingleReference(t, k)), s"k=$k text=<$t>")
   }
 
   test("packed-vote simhash equals the reference vote loop on every text class") {
@@ -209,7 +234,7 @@ class HashingSpec extends AnyFunSuite {
   test("docSigPair equals the split minhash/simhash expressions' kernels") {
     for (t <- randomTexts) {
       val (mh, sim) = Hashing.docSigPair(t, cfg.shingleK, cfg.numPerms, cfg.seed)
-      val expectMh = Hashing.minhashOph(Hashing.shingleHashes(t, cfg.shingleK), cfg.numPerms, cfg.seed)
+      val expectMh = Hashing.minhashOph(shingleReference(t, cfg.shingleK), cfg.numPerms, cfg.seed)
       assert(sim == simhashReference(t), s"simhash mismatch on <$t>")
       if (expectMh == null) assert(mh == null, s"minhash null mismatch on <$t>")
       else assert(mh.sameElements(expectMh), s"minhash mismatch on <$t>")
@@ -221,7 +246,7 @@ class HashingSpec extends AnyFunSuite {
       val (sim, fp) = Hashing.simFingerprintPair(t)
       assert(sim == simhashReference(t), s"simhash mismatch on <$t>")
       var h = 0x9e3779b97f4a7c15L
-      Hashing.tokens(t).foreach(tok => h = Hashing.hash64(h, Hashing.hash64(tok)))
+      tokens(t).foreach(tok => h = Hashing.hash64(h, Hashing.hash64(tok)))
       assert(fp == h, s"fingerprint mismatch on <$t>")
     }
   }

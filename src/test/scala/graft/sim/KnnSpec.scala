@@ -232,7 +232,6 @@ class KnnSpec extends SparkSpec {
   }
 
   test("cosine_sim degrades mismatched or zero-dim vectors to 0.0 instead of throwing") {
-    graft.expr.GraftFunctions.register(spark)
     val df = Seq(
       (1L, Array(1f, 0f), Array(1f, 0f, 0f)), // wrong dim
       (2L, Array(1f, 0f), Array.empty[Float]), // empty side

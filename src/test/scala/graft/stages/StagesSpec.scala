@@ -188,8 +188,8 @@ class StagesSpec extends SparkSpec {
     val docs = Seq((1L, text), (2L, "tiny")).toDF("id", "text")
     val got = Signatures.withSignatures(docs, cfg)
       .select("id", "n_shingles").as[(Long, Int)].collect().toMap
-    // Model.DocSig contract: the field is the shingle COUNT, not the
-    // signature length; 0 still marks unlinkable docs
+    // the field is the shingle COUNT, not the signature length; 0 still
+    // marks unlinkable docs
     val real = docs.filter(col("id") === 1L)
       .select(size(graft.expr.GraftFunctions.shingleHashes(col("text"), cfg.shingleK)))
       .as[Int].head()
