@@ -192,7 +192,18 @@ final case class CosineSimExpr(left: Expression, right: Expression)
     // mismatched pair has no meaningful similarity — 0.0 keeps it below
     // any threshold (same convention as the zero-norm case) instead of
     // b(i) crashing the job
-    if (a.length != b.length) return 0.0
+    if (a.length != b.length) 0.0 else CosineSimExpr.cosine(a, b)
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimExpr =
+    copy(left = l, right = r)
+  override def prettyName: String = "cosine_sim"
+}
+
+object CosineSimExpr {
+  /** The cosine kernel of `cosine_sim` and the IVF cell assignment: cosine
+    * of two vectors of equal length, 0.0 when either has zero norm. Each
+    * caller decides what a length mismatch means. */
+  def cosine(a: Array[Float], b: Array[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < a.length) {
@@ -201,9 +212,6 @@ final case class CosineSimExpr(left: Expression, right: Expression)
     }
     if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
   }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimExpr =
-    copy(left = l, right = r)
-  override def prettyName: String = "cosine_sim"
 }
 
 /** Column-API helpers: each builds its expression directly, so every

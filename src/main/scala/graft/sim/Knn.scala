@@ -1,15 +1,17 @@
 package graft.sim
 
-import graft.expr.{GraftFunctions, Hashing}
+import graft.expr.{CosineSimExpr, GraftFunctions, Hashing}
 import graft.model.EngineConfig
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Approximate nearest-neighbour search over an embedding column
-  * (`array<float>`): brute-force cosine as the correctness baseline
-  * (oracle-checked, see Queries q25) and a random-hyperplane-LSH bucketed
-  * variant as the scale path — at 10^12 vectors the cross join is
-  * impossible; bucketing bounds each comparison set.
+  * (`array<float>`): hyperplane-LSH and IVF top-1 and LSH-routed embedding
+  * dedup, the scale paths — at 10^12 vectors the cross join is impossible;
+  * bucketing bounds each comparison set. Their correctness baseline is
+  * brute-force cosine: Queries q25 (oracle-checked) and KnnSpec's top-k.
+  * One hyperplane kernel ([[signBits]], [[projection]]) keys every LSH
+  * path; both top-1 paths share the `cosine_sim` kernel and [[top1]].
   */
 object Knn {
 
@@ -75,6 +77,38 @@ object Knn {
     planeCache.computeIfAbsent(k, _ => hyperplanes(dim, bits, seed))
   }
 
+  /** The hyperplane kernel: `v`'s sign bits over planes [from, from + n)
+    * (bit i set when its dot with plane from + i is ≥ 0), and the bit whose
+    * dot has the smallest |magnitude| (the first on ties). */
+  private def signBits(ps: Array[Array[Double]], v: Seq[Float], from: Int, n: Int): (Long, Int) = {
+    var b = 0L
+    var minAbs = Double.MaxValue
+    var minBit = 0
+    var i = 0
+    while (i < n) {
+      val d = dot(ps(from + i), v)
+      if (d >= 0) b |= (1L << i)
+      val a = math.abs(d)
+      if (a < minAbs) { minAbs = a; minBit = i }
+      i += 1
+    }
+    (b, minBit)
+  }
+
+  /** `v`'s projection on plane `p` as a monotone long (PairGen's sort).
+    * Converted INSIDE the udf: Scala .toLong saturates NaN→0, where a
+    * DataFrame-level .cast("long") on a NaN projection throws
+    * CAST_OVERFLOW under Spark 4's default ANSI mode — one corrupt row
+    * must not kill the job. */
+  private def projection(p: Array[Double], v: Seq[Float]): Long =
+    (dot(p, v) * (1L << 32).toDouble).toLong
+
+  private def dot(p: Array[Double], v: Seq[Float]): Double = {
+    var d = 0.0; var j = 0
+    while (j < v.length) { d += p(j) * v(j); j += 1 }
+    d
+  }
+
   /** LSH-bucketed top-1 neighbour: bucket by hyperplane sign bits, compare
     * only within buckets. Vectors whose bucket is a singleton multi-probe
     * the nearest neighbouring bucket (lowest-|dot| sign bit flipped); only
@@ -96,57 +130,24 @@ object Knn {
               bits: Int = 8, bucketCap: Int = 256, chainWidth: Int = 4): DataFrame = {
     val seed = cfg.seed
     // bits sign planes + 1 extra plane for the hot-bucket ordering; planes
-    // materialize lazily per executor ([[planesFor]]) — no driver dim probe
-    val bucketUdf = udf((v: Seq[Float]) => {
+    // materialize lazily per executor ([[planesFor]]) — no driver dim probe.
+    // One kernel pass yields bucket, multi-probe bucket (flip the sign bit
+    // whose hyperplane dot has the smallest |magnitude| — the vector sits
+    // closest to that boundary, so the flipped bucket is its likeliest
+    // second home) and hot-bucket sort
+    val keysUdf = udf((v: Seq[Float]) => {
       val ps = planesFor(v.length, bits + 1, seed)
-      var b = 0
-      var i = 0
-      while (i < bits) {
-        var dot = 0.0
-        var j = 0
-        while (j < v.length) { dot += ps(i)(j) * v(j); j += 1 }
-        if (dot >= 0) b |= (1 << i)
-        i += 1
-      }
-      b
-    })
-    // multi-probe neighbour bucket: flip the sign bit whose hyperplane dot
-    // has the smallest |magnitude| — the vector sits closest to that
-    // boundary, so the flipped bucket is its likeliest second home
-    val probeUdf = udf((v: Seq[Float]) => {
-      val ps = planesFor(v.length, bits + 1, seed)
-      var b = 0
-      var minAbs = Double.MaxValue
-      var minBit = 0
-      var i = 0
-      while (i < bits) {
-        var dot = 0.0
-        var j = 0
-        while (j < v.length) { dot += ps(i)(j) * v(j); j += 1 }
-        if (dot >= 0) b |= (1 << i)
-        val a = math.abs(dot)
-        if (a < minAbs) { minAbs = a; minBit = i }
-        i += 1
-      }
-      b ^ (1 << minBit)
-    })
-    val projUdf = udf((v: Seq[Float]) => {
-      val p = planesFor(v.length, bits + 1, seed)(bits)
-      var dot = 0.0
-      var j = 0
-      while (j < v.length) { dot += p(j) * v(j); j += 1 }
-      // monotone long INSIDE the udf (same pattern as embedDedup's
-      // projUdf): Scala .toLong saturates NaN→0, where a DataFrame-level
-      // .cast("long") on a NaN projection throws CAST_OVERFLOW under
-      // Spark 4's default ANSI mode — one corrupt row must not kill the job
-      (dot * (1L << 32).toDouble).toLong
+      val (b, nearest) = signBits(ps, v, 0, bits)
+      (b.toInt, (b ^ (1L << nearest)).toInt, projection(ps(bits), v))
     })
     // cached (engine-tracked): the returned plan references this frame
     // from counts, the cold/singles splits, the hot branch, and the final
     // vec_id join — without the cache each copy re-runs the (bits+1)×dim
     // dot products per vector, the most expensive narrow op in the path
     val bucketed = graft.stages.IntermediateCaches.persistTracked(embeddings
-      .select(col("vec_id"), col("embedding"), bucketUdf(col("embedding")).as("bucket")))
+      .select(col("vec_id"), col("embedding"), keysUdf(col("embedding")).as("__k"))
+      .select(col("vec_id"), col("embedding"), col("__k._1").as("bucket"),
+        col("__k._2").as("probe"), col("__k._3").as("sort")))
     // hot-bucket key set is tiny by construction (each holds > bucketCap
     // members ⇒ ≤ n/bucketCap keys) — broadcast-safe
     val counts = bucketed.groupBy("bucket").agg(count(lit(1)).as("__cnt"))
@@ -168,7 +169,7 @@ object Knn {
     val singles = bucketed
       .join(broadcast(counts.filter(col("__cnt") === 1).select("bucket")),
         Seq("bucket"), "left_semi")
-      .select(col("vec_id"), col("embedding"), probeUdf(col("embedding")).as("bucket"))
+      .select(col("vec_id"), col("embedding"), col("probe").as("bucket"))
     val probePairs = singles
       .join(cold.select(col("bucket"), col("vec_id").as("nid"), col("embedding").as("emb_b")),
         Seq("bucket"))
@@ -177,13 +178,9 @@ object Knn {
     // width-k chain over each hot bucket's (projection, id) order: PairGen
     // with allPairsCap = 0 chains every bucket it sees
     val hotRows = bucketed.join(broadcast(hotBuckets), Seq("bucket"), "left_semi")
-      .select(col("bucket").as("key"), col("vec_id").as("id"),
-        projUdf(col("embedding")).as("sort"))
+      .select(col("bucket").as("key"), col("vec_id").as("id"), col("sort"))
     val hotIdPairs = graft.stages.PairGen.pairs(hotRows, allPairsCap = 0, chainWidth = chainWidth)
-    val e = embeddings.select(col("vec_id"), col("embedding"))
-    val hotChain = hotIdPairs
-      .join(e.select(col("vec_id").as("id_l"), col("embedding").as("__el")), "id_l")
-      .join(e.select(col("vec_id").as("id_r"), col("embedding").as("__er")), "id_r")
+    val hotChain = withVectors(hotIdPairs, embeddings)
       .select(col("id_l").as("vec_id"), col("__el").as("embedding"),
         col("id_r").as("nid"), col("__er").as("emb_b"))
     // each chained pair is candidate evidence for BOTH endpoints
@@ -191,15 +188,28 @@ object Knn {
       col("nid").as("vec_id"), col("emb_b").as("embedding"),
       col("vec_id").as("nid"), col("embedding").as("emb_b")))
 
-    val within = coldPairs.unionByName(hotPairs).unionByName(probePairs)
+    top1(bucketed, coldPairs.unionByName(hotPairs).unionByName(probePairs))
+  }
+
+  /** (id_l, id_r) pairs with both ends' vectors, as `__el` and `__er`. */
+  private def withVectors(pairs: DataFrame, embeddings: DataFrame): DataFrame = {
+    val e = embeddings.select(col("vec_id"), col("embedding"))
+    pairs.join(e.select(col("vec_id").as("id_l"), col("embedding").as("__el")), "id_l")
+      .join(e.select(col("vec_id").as("id_r"), col("embedding").as("__er")), "id_r")
+  }
+
+  /** The answer of both top-1 paths: for every `vec_id` of `ids`, the
+    * candidate `nid` of highest cosine over (vec_id, embedding, nid, emb_b)
+    * rows, or -1 when it has no candidate. (-cos, nid) min: max cosine,
+    * ties to the SMALLEST nid — cosine ties are routine in a dedup corpus
+    * (exact-duplicate embeddings) and bare max_by(nid, cos) keeps whichever
+    * row the merge visits first, flipping nn_id across partitionings/reruns. */
+  private def top1(ids: DataFrame, candidates: DataFrame): DataFrame = {
+    val best = candidates
       .withColumn("cos", GraftFunctions.cosineSim(col("embedding"), col("emb_b")))
-      // (-cos, nid) min: max cosine, ties to the SMALLEST nid — cosine
-      // ties are routine in a dedup corpus (exact-duplicate embeddings)
-      // and bare max_by(nid, cos) keeps whichever row the merge visits
-      // first, flipping nn_id across partitionings/reruns
       .groupBy("vec_id").agg(min_by(col("nid"), struct(negate(col("cos")), col("nid"))).as("nn_id"))
-    bucketed.select("vec_id")
-      .join(within, Seq("vec_id"), "left")
+    ids.select("vec_id")
+      .join(best, Seq("vec_id"), "left")
       .select(col("vec_id"), coalesce(col("nn_id"), lit(-1L)).as("nn_id"))
   }
 
@@ -282,22 +292,15 @@ object Knn {
     }
     val centsB = spark.sparkContext.broadcast(cents)
 
-    // both sides Array: a Seq param here would implicitly COPY the query
-    // vector once per centroid per row (k*dim floats of garbage per doc)
-    def cos(a: Array[Float], b: Array[Float]): Double = {
+    val cellsUdf = udf((v: Seq[Float]) => {
+      // both sides Array: a Seq here would implicitly COPY the query
+      // vector once per centroid per row (k*dim floats of garbage per doc)
+      val va = v.toArray
       // wrong-dimension corrupt vector vs centroid: NaN, which the
       // top-nProbe scan skips — the vector only probes matching-dim cells
-      if (a.length != b.length) return Double.NaN
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i)
-        i += 1
+      val scores = centsB.value.map { case (_, c) =>
+        if (c.length != va.length) Double.NaN else CosineSimExpr.cosine(c, va)
       }
-      if (na == 0 || nb == 0) 0.0 else dot / math.sqrt(na * nb)
-    }
-    val cellsUdf = udf((v: Seq[Float]) => {
-      val va = v.toArray
-      val scores = centsB.value.map { case (_, c) => cos(c, va) }
       // top-nProbe by repeated max scan — O(k·nProbe), not O(k log k):
       // with k ≈ √n centroids this udf is the dominant per-row cost and
       // a full sort pays log k for the ≤ 2 indices actually kept
@@ -336,12 +339,7 @@ object Knn {
         assigned.select(col("cell"), col("vec_id").as("nid"), col("embedding").as("emb_b")),
         Seq("cell"))
       .filter(col("vec_id") =!= col("nid"))
-      .withColumn("cos", GraftFunctions.cosineSim(col("embedding"), col("emb_b")))
-      // deterministic tie-break, same rationale as lshTop1
-      .groupBy("vec_id").agg(min_by(col("nid"), struct(negate(col("cos")), col("nid"))).as("nn_id"))
-    embeddings.select("vec_id")
-      .join(cand, Seq("vec_id"), "left")
-      .select(col("vec_id"), coalesce(col("nn_id"), lit(-1L)).as("nn_id"))
+    top1(embeddings, cand)
   }
 
   /** Embedding-cosine near-duplicate clustering — the vector analog of the
@@ -371,31 +369,10 @@ object Knn {
     // NoSuchElementException from .head())
     val keysUdf = udf((v: Seq[Float]) => {
       val ps = planesFor(v.length, tables * bits + 1, seed)
-      val out = new Array[Long](tables)
-      var t = 0
-      while (t < tables) {
-        var b = 0L
-        var i = 0
-        while (i < bits) {
-          val p = ps(t * bits + i)
-          var dot = 0.0
-          var j = 0
-          while (j < v.length) { dot += p(j) * v(j); j += 1 }
-          if (dot >= 0) b |= (1L << i)
-          i += 1
-        }
-        out(t) = (t.toLong << 32) | b
-        t += 1
-      }
-      out
+      Array.tabulate(tables)(t => (t.toLong << 32) | signBits(ps, v, t * bits, bits)._1)
     })
-    val projUdf = udf((v: Seq[Float]) => {
-      val p = planesFor(v.length, tables * bits + 1, seed)(tables * bits)
-      var dot = 0.0
-      var j = 0
-      while (j < v.length) { dot += p(j) * v(j); j += 1 }
-      (dot * (1L << 32).toDouble).toLong // monotone long for PairGen's sort
-    })
+    val projUdf = udf((v: Seq[Float]) =>
+      projection(planesFor(v.length, tables * bits + 1, seed)(tables * bits), v))
     // one consumer (PairGen's single pass), so no cache
     val buckets = embeddings.select(
       explode(keysUdf(col("embedding"))).as("key"),
@@ -403,27 +380,11 @@ object Knn {
       projUdf(col("embedding")).as("sort"))
     val cand = graft.stages.PairGen.pairs(buckets, allPairsCap)
       .select("id_l", "id_r").distinct() // same pair found by several tables
-    val e = embeddings.select(col("vec_id"), col("embedding"))
-    val edges = cand
-      .join(e.select(col("vec_id").as("id_l"), col("embedding").as("__el")), "id_l")
-      .join(e.select(col("vec_id").as("id_r"), col("embedding").as("__er")), "id_r")
+    val edges = withVectors(cand, embeddings)
       .filter(GraftFunctions.cosineSim(col("__el"), col("__er")) >= threshold)
       .select(col("id_l").as("src"), col("id_r").as("dst"))
     graft.stages.ConnectedComponents.assign(
         spark, embeddings.select(col("vec_id").as("id")), edges)
       .select(col("id").as("vec_id"), col("cluster_id"))
-  }
-
-  /** Brute-force cosine top-k (baseline; O(n^2) — test scale only). */
-  def bruteTopK(spark: SparkSession, embeddings: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val a = embeddings.select(col("vec_id"), col("embedding"))
-    val b = embeddings.select(col("vec_id").as("nid"), col("embedding").as("emb_b"))
-    val w = Window.partitionBy("vec_id").orderBy(col("cos").desc, col("nid").asc)
-    a.join(b, col("vec_id") =!= col("nid"))
-      .withColumn("cos", GraftFunctions.cosineSim(col("embedding"), col("emb_b")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("vec_id", "rank", "nid", "cos")
   }
 }

@@ -15,7 +15,9 @@ import org.apache.spark.util.LongAccumulator
   * node's sorted neighbours. An iteration is two rounds under one lineage
   * cut (`localCheckpoint`, against the lineage blow-up that is the known
   * failure mode at scale, SURVEY §7.5.1) and ends in one aggregation that
-  * stops the loop as soon as the graph is a min-rooted star forest.
+  * stops the loop as soon as the graph is a min-rooted star forest. The
+  * checkpoint is the iteration's only stored copy, and at most two are
+  * stored at once: the one being filled and the one it reads.
   * Small edge sets skip the loop for driver union-find.
   *
   * Output invariant (SURVEY §1.4.3): cluster_id = MIN member id — relied on
@@ -98,9 +100,10 @@ object ConnectedComponents {
       if (useReliable) df.checkpoint(false) else df.localCheckpoint(false)
 
     // the loop's input: the fast path's canonical cache when it was
-    // filled, else the caller's edges (which the loop never unpersists)
+    // filled, else the caller's edges (which the loop never unpersists);
+    // `release` frees g's stored copy once nothing reads it any more
     var g = edges
-    var owned = false
+    var release: () => Unit = () => ()
     if (fastPathMaxEdges > 0) {
       val e = IntermediateCaches.persistTracked(canonicalEdges(edges))
       // ONE action decides the plan AND feeds the fast path: collect up to
@@ -143,26 +146,23 @@ object ConnectedComponents {
           .toDF("id", "cluster_id")
       }
       g = e
-      owned = true
+      release = () => e.unpersist()
     }
 
     ScaleStats.ccDistributedRuns.incrementAndGet()
     // the first large-star pass counts the distinct canonical edges as its
     // sorted stream meets them — the loop needs no count job
     val distinctEdges = spark.sparkContext.longAccumulator("cc_distinct_edges")
-    // All loop persists route through IntermediateCaches so the documented
-    // cache contract (Pipeline.clearIntermediateCaches) can release the
-    // final star forest — the returned assignments are lazy over it, so
-    // run() itself must not unpersist it. Superseded iterations are
-    // unpersisted in-loop (the tracked double-release is a no-op).
+    // An iteration's checkpoint is its only stored copy: the stop-test
+    // action's scan fills it, the next iteration reads only its blocks, and
+    // the superseded graph is released then. The final checkpoint stays —
+    // the returned assignments are lazy over it, also after
+    // Pipeline.clearIntermediateCaches — until the ContextCleaner frees it
+    // once no result references it.
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxIterations) {
-      // Persist BEFORE the stop-test action and test the cached frame: the
-      // one action fills the cache (and the lazy checkpoint) as a side
-      // effect of its scan, so the next iteration reads only the cache.
-      val next = IntermediateCaches.persistTracked(
-        cut(starIteration(g, if (rounds == 0) Some(distinctEdges) else None)))
+      val next = cut(starIteration(g, if (rounds == 0) Some(distinctEdges) else None))
       // one job wave for the take (ExecHints.singleWaveTake): any breaking
       // node anywhere means another iteration
       converged = ExecHints.singleWaveTake(spark) {
@@ -170,9 +170,9 @@ object ConnectedComponents {
       }.isEmpty
       if (rounds == 0)
         ScaleStats.recordMax(ScaleStats.maxCcDistributedEdges, distinctEdges.value)
-      if (owned) g.unpersist()
+      release()
       g = next
-      owned = true
+      release = () => checkpointRdd(next).unpersist(blocking = false)
       rounds += 2
     }
     if (!converged)
@@ -189,6 +189,12 @@ object ConnectedComponents {
       .groupBy("id").agg(min($"cluster_id").as("cluster_id"))
     assignments
   }
+
+  /** The RDD whose blocks store a `cut` frame's rows. */
+  private def checkpointRdd(cut: DataFrame): org.apache.spark.rdd.RDD[_] =
+    cut.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
 
   /** Canonical self-loop-free edge set the fast path collects: long-cast,
     * src > dst (least as `dst`, greatest as `src` — the star passes orient

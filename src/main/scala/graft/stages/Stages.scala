@@ -353,24 +353,30 @@ object PairGen {
   */
 object Blocking {
 
+  /** One row per (signed doc, band): the bucket `key`, `id`, then the
+    * `carry` columns. The key holds the band index in its top 8 bits
+    * ([[bandOf]]) and the band hash's top 56 bits below it. Batch blocking
+    * and the streaming detector both bucket docs through it.
+    * @param sigs columns: id, minhash and what `carry` reads */
+  def bandRows(sigs: DataFrame, cfg: EngineConfig, carry: Column*): DataFrame = {
+    val exploded = sigs
+      .filter(col("minhash").isNotNull)
+      .select((col("id") +: carry) :+
+        posexplode(GraftFunctions.bandHashes(col("minhash"), cfg)).as(Seq("band_idx", "band_hash")): _*)
+    exploded.select((shiftleft(col("band_idx").cast("long"), 56)
+        .bitwiseOR(shiftrightunsigned(col("band_hash"), 8))).as("key") +:
+      exploded.columns.toSeq.filterNot(Set("band_idx", "band_hash")).map(col): _*)
+  }
+
+  /** The band index of a [[bandRows]] key. */
+  def bandOf(key: Long): Int = (key >>> 56).toInt
+
   /** @param sigs columns: id, minhash, simhash (from [[Signatures]])
     * @return candidate pairs (id_l, id_r, match_key). */
-  def candidatePairs(sigs: DataFrame, cfg: EngineConfig): DataFrame = {
-    val buckets = sigs
-      .filter(col("minhash").isNotNull)
-      .select(
-        col("id"),
-        col("simhash").as("sort"),
-        posexplode(GraftFunctions.bandHashes(col("minhash"), cfg)).as(Seq("band_idx", "band_hash")))
-      .select(
-        (shiftleft(col("band_idx").cast("long"), 56)
-          .bitwiseOR(shiftrightunsigned(col("band_hash"), 8))).as("key"),
-        col("id"), col("sort"))
-
-    PairGen.pairs(buckets, cfg.allPairsCap)
+  def candidatePairs(sigs: DataFrame, cfg: EngineConfig): DataFrame =
+    PairGen.pairs(bandRows(sigs, cfg, col("simhash").as("sort")), cfg.allPairsCap)
       .groupBy("id_l", "id_r")
       .agg(min(shiftrightunsigned(col("key"), 56)).cast("int").as("match_key"))
-  }
 }
 
 /** Pair scoring (SURVEY §7.2 module 7): per-pair similarity features +

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.stages.{Blocking, Signatures}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -48,12 +49,12 @@ object StreamingDedup {
   final case class NearDupHit(id_l: Long, id_r: Long, hamming: Int, band: Int)
 
   /** Streaming near-duplicate candidate detector: flag likely near-dups of
-    * incoming docs against the recent horizon, in-flight. LSH band hashes
-    * of the 128-slot MinHash signature key a bounded per-bucket state
-    * (most-recent `bucketCap` members, evicted by event-time timeout one
-    * horizon after the bucket's last arrival); each arrival is verified
-    * against bucket members by SimHash Hamming distance
-    * (≤ cfg.hammingThreshold) before a hit is emitted.
+    * incoming docs against the recent horizon, in-flight. The batch LSH
+    * band rows ([[Blocking.bandRows]] over [[Signatures.withSignatures]])
+    * key a bounded per-bucket state (most-recent `bucketCap` members,
+    * evicted by event-time timeout one horizon after the bucket's last
+    * arrival); each arrival is verified against bucket members by SimHash
+    * Hamming distance (≤ cfg.hammingThreshold) before a hit is emitted.
     *
     * Scope (same stance as [[dedupStream]]'s docstring): this is the
     * ingest-side detector a production deployment runs IN FRONT of the
@@ -73,25 +74,12 @@ object StreamingDedup {
     val spark = docs.sparkSession
     import spark.implicits._
     val hamThr = cfg.hammingThreshold
-    val buckets = docs
-      // fused kernel (round 6): one tokenization yields both signatures —
-      // same two-projection extraction pattern as Signatures.withSignatures
-      // (CollapseProject keeps the multi-referenced struct in its own
-      // projection), bit-identical values to the split expressions
-      .withColumn("__sig", graft.expr.GraftFunctions.docSigs(col("text"), cfg))
-      .withColumn("minhash", col("__sig").getField("minhash"))
-      .withColumn("simhash", col("__sig").getField("simhash"))
-      .drop("__sig")
-      .filter(col("minhash").isNotNull)
+    // the batch signatures and band rows (PlanQualitySpec pins one
+    // projected doc_sigs and a pruned n_shingles); the watermark goes on
+    // the band rows, which carry the event times of exactly the signed docs
+    val buckets = Blocking
+      .bandRows(Signatures.withSignatures(docs, cfg), cfg, col("warc_ts"), col("simhash"))
       .withWatermark("warc_ts", watermark)
-      .select(
-        col("id"), col("warc_ts"), col("simhash"),
-        posexplode(graft.expr.GraftFunctions.bandHashes(col("minhash"), cfg))
-          .as(Seq("band_idx", "band_hash")))
-      .select(
-        (shiftleft(col("band_idx").cast("long"), 56)
-          .bitwiseOR(shiftrightunsigned(col("band_hash"), 8))).as("key"),
-        col("id"), col("warc_ts"), col("simhash"))
       // the watermarked TIMESTAMP column must reach the stateful operator
       // unchanged — casting it away would disable event-time timeout
       .as[(Long, Long, java.sql.Timestamp, Long)]
@@ -102,7 +90,7 @@ object StreamingDedup {
         case (key, rows, state: GroupState[BucketState]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
-            val band = (key >>> 56).toInt
+            val band = Blocking.bandOf(key)
             // members is kept sorted newest-first by (event time, id)
             var members = state.getOption.map(_.members).getOrElse(Nil)
             // Bound the per-trigger buffer: a boilerplate band bucket can

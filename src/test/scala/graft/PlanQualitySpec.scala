@@ -52,6 +52,33 @@ class PlanQualitySpec extends SparkSpec {
     assert(n == 1, s"expected exactly one doc_sigs call in the optimized plan, got $n:\n$o")
   }
 
+  test("streaming near-dup detector: doc_sigs projected once, n_shingles pruned") {
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
+    val q = streaming.StreamingDedup
+      .nearDupCandidates(input.toDF().toDF("id", "warc_ts", "text"), watermark = "10 minutes")
+      .writeStream.format("memory").queryName("neardup_plan").start()
+    try {
+      input.addData((1L, new java.sql.Timestamp(0L), "a b c d e f g h"))
+      q.processAllAvailable()
+      // the micro-batch's own optimized plan: the streaming source is not a
+      // LocalRelation, so nothing is constant-folded away
+      val o = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.optimizedPlan.toString
+      // one projected struct; the only other copy is the null filter that
+      // the optimizer pushes below it, as in batch blocking (q22)
+      val projected = "doc_sigs\\([^)]*\\) AS __sig".r.findAllIn(o).length
+      val filtered = "isnotnull\\(doc_sigs\\([^)]*\\)\\.minhash\\)".r.findAllIn(o).length
+      val n = "doc_sigs".r.findAllIn(o).length
+      assert(projected == 1 && filtered <= 1 && n == projected + filtered,
+        s"expected one projected doc_sigs (+ at most its null filter), got $n:\n$o")
+      for (pruned <- Seq("shingle_hashes", "n_shingles"))
+        assert(!o.contains(pruned), s"unexpected $pruned in the streaming plan:\n$o")
+    } finally q.stop()
+  }
+
   test("whole-stage codegen covers the scalar metric expressions") {
     // parquet-backed input so Catalyst cannot constant-fold the whole query
     val df = spark.read.parquet(s"$dir/customer.parquet")

@@ -122,14 +122,50 @@ class HashingSpec extends AnyFunSuite {
     assert(Hashing.winnow(full, 25, 32).sameElements(Hashing.winnow(full, 25, 32)))
   }
 
+  /** Reference winnow: the pre-scratch formulation — same rolling hash
+    * and sliding window, fresh boxed LinkedHashSet dedup per call. */
+  private def winnowReference(text: String, k: Int, w: Int): Array[Long] = {
+    if (text == null || text.length < k) return Array.empty
+    val n = text.length - k + 1
+    val gram = new Array[Long](n)
+    val B = 0x5DEECE66DL
+    var bk = 1L
+    var j = 1
+    while (j < k) { bk *= B; j += 1 }
+    var h = 0L
+    j = 0
+    while (j < k) { h = h * B + text.charAt(j).toLong; j += 1 }
+    gram(0) = Hashing.mix64(h)
+    var i = 1
+    while (i < n) {
+      h = (h - text.charAt(i - 1).toLong * bk) * B + text.charAt(i + k - 1).toLong
+      gram(i) = Hashing.mix64(h)
+      i += 1
+    }
+    if (n <= w) return Array(gram.min)
+    val sel = new java.util.LinkedHashSet[java.lang.Long]()
+    val deque = new Array[Int](n)
+    var head = 0
+    var tail = 0
+    var q = 0
+    while (q < n) {
+      while (tail > head && gram(deque(tail - 1)) >= gram(q)) tail -= 1
+      deque(tail) = q; tail += 1
+      if (deque(head) <= q - w) head += 1
+      if (q >= w - 1) sel.add(gram(deque(head)))
+      q += 1
+    }
+    val out = new Array[Long](sel.size)
+    val it = sel.iterator()
+    var m = 0
+    while (it.hasNext) { out(m) = it.next(); m += 1 }
+    out
+  }
+
   test("winnow: thread-local scratch reuse is bit-identical to a fresh reference") {
-    // Reference: the pre-scratch formulation — same rolling hash, fresh
-    // boxed LinkedHashSet dedup per call (shared with the interleaved A/B
-    // probe, graft.tools.WinnowKernelProbe). The production kernel reuses
-    // per-thread buffers (including a retained LARGER probe table after a
-    // big doc) and must stay bit-identical across any call sequence.
-    def reference(text: String, k: Int, w: Int): Array[Long] =
-      graft.tools.WinnowKernelProbe.reference(text, k, w)
+    // The production kernel reuses per-thread buffers (including a
+    // retained LARGER probe table after a big doc) and must stay
+    // bit-identical to [[winnowReference]] across any call sequence.
     val rnd = new java.util.SplittableRandom(42)
     def mkText(words: Int): String =
       Array.fill(words)("t" + rnd.nextInt(5000)).mkString(" ")
@@ -141,7 +177,7 @@ class HashingSpec extends AnyFunSuite {
       mkText(12000), "x" * 30, mkText(40), mkText(3000))
     for ((t, idx) <- seq.zipWithIndex; (k, w) <- Seq((25, 32), (8, 4), (25, 200))) {
       val got = Hashing.winnow(t, k, w)
-      val want = reference(t, k, w)
+      val want = winnowReference(t, k, w)
       assert(got.sameElements(want),
         s"mismatch at seq #$idx k=$k w=$w: got ${got.length}, want ${want.length}")
     }

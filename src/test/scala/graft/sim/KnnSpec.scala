@@ -1,8 +1,10 @@
 package graft.sim
 
 import graft.SparkSpec
-import graft.expr.Hashing
+import graft.expr.{GraftFunctions, Hashing}
 import graft.model.EngineConfig
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class KnnSpec extends SparkSpec {
@@ -21,8 +23,22 @@ class KnnSpec extends SparkSpec {
     }.toDF("vec_id", "embedding", "label").persist()
   }
 
+  /** Brute-force cosine top-k, the specs' oracle (O(n^2)): per vec_id the
+    * k candidates of highest cosine, ties to the smallest nid, ranked
+    * 1..k. */
+  private def bruteTopK(embeddings: DataFrame, k: Int): DataFrame = {
+    val a = embeddings.select(col("vec_id"), col("embedding"))
+    val b = embeddings.select(col("vec_id").as("nid"), col("embedding").as("emb_b"))
+    val w = Window.partitionBy("vec_id").orderBy(col("cos").desc, col("nid").asc)
+    a.join(b, col("vec_id") =!= col("nid"))
+      .withColumn("cos", GraftFunctions.cosineSim(col("embedding"), col("emb_b")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("vec_id", "rank", "nid", "cos")
+  }
+
   test("brute-force topK: neighbours are same-cluster, ranks are dense") {
-    val top3 = Knn.bruteTopK(spark, clustered.select("vec_id", "embedding"), 3)
+    val top3 = bruteTopK(clustered.select("vec_id", "embedding"), 3)
     val joined = top3
       .join(clustered.select(col("vec_id"), col("label").as("l_q")), "vec_id")
       .join(clustered.select(col("vec_id").as("nid"), col("label").as("l_n")), "nid")
@@ -53,7 +69,7 @@ class KnnSpec extends SparkSpec {
 
   test("IVF top-1 recall vs brute-force >= 0.9 on clustered data") {
     val emb = clustered.select("vec_id", "embedding")
-    val brute = Knn.bruteTopK(spark, emb, 1)
+    val brute = bruteTopK(emb, 1)
       .select(col("vec_id"), col("nid").as("nn_brute"))
     val ivf = Knn.ivfTop1(spark, emb, k = 16, nProbe = 3)
     val joined = brute.join(ivf, "vec_id")

@@ -146,26 +146,47 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("distributed CC persists are released by clearIntermediateCaches") {
     graft.Pipeline.clearIntermediateCaches(spark) // flush older suite state
-    val baseline = spark.sparkContext.getPersistentRDDs.size
+    // RDD ids, not a count: the older state that clear released is
+    // reclaimed by the ContextCleaner while this test runs. The ids are
+    // copied out: a keySet view would keep its map's RDDs reachable
+    def ids = spark.sparkContext.getPersistentRDDs.keysIterator.toSet
+    val before = ids
+    def created = ids -- before
     val rnd = new java.util.SplittableRandom(7)
-    (1 to 3).foreach { _ =>
+    var results = (1 to 3).map { _ =>
       val edges = (1 to 200).map(_ => (rnd.nextLong(150), rnd.nextLong(150)))
         .filter(e => e._1 != e._2).toDF("src", "dst")
-      ConnectedComponents.run(spark, edges, fastPathMaxEdges = 0L).count()
+      val r = ConnectedComponents.run(spark, edges, fastPathMaxEdges = 0L)
+      r.count()
+      r
     }
-    assert(spark.sparkContext.getPersistentRDDs.size > baseline,
+    assert(created.nonEmpty,
       "expected the converged star graphs to be cached while results are live")
+    results = IndexedSeq.empty
     graft.Pipeline.clearIntermediateCaches(spark)
-    // clear() releases the tracked SQL caches synchronously; the loop's
-    // superseded localCheckpoint RDDs are reclaimed by the ContextCleaner
-    // once unreachable — poll with GC nudges for the combined drain
+    // clear() releases the tracked SQL caches synchronously; each final
+    // localCheckpoint RDD is reclaimed by the ContextCleaner once
+    // unreachable — poll with GC nudges for the combined drain
     val deadline = System.currentTimeMillis + 30000
-    while (spark.sparkContext.getPersistentRDDs.size > baseline &&
-        System.currentTimeMillis < deadline) {
+    while (created.nonEmpty && System.currentTimeMillis < deadline) {
       System.gc(); Thread.sleep(200)
     }
-    assert(spark.sparkContext.getPersistentRDDs.size <= baseline,
-      s"stranded cached RDDs after clear: ${spark.sparkContext.getPersistentRDDs.size - baseline}")
+    assert(created.isEmpty, s"stranded cached RDDs after clear: ${created.size}")
+  }
+
+  test("distributed CC stores at most one iteration once its result is read") {
+    // a 20,000-node path takes 16 star rounds (8 iterations); each
+    // iteration's checkpoint must be its only stored copy, and a superseded
+    // checkpoint must be released once its successor is filled
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keysIterator.toSet
+    val path = (0L until 19999L).map(i => (i, i + 1)).toDF("src", "dst")
+    val m = ConnectedComponents.run(spark, path, fastPathMaxEdges = 0L)
+      .as[(Long, Long)].collect()
+    assert(m.length == 20000 && m.forall(_._2 == 0L))
+    val stored = sc.getRDDStorageInfo.filterNot(r => before.contains(r.id))
+    assert(stored.length <= 1, s"storage holds ${stored.length} new RDDs after the action: " +
+      stored.map(r => s"${r.name} (${r.memSize + r.diskSize} B)").mkString(", "))
   }
 
   test("effective fast-path bound honors config, heap, and the 100M ceiling") {

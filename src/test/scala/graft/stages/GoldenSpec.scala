@@ -42,7 +42,7 @@ class GoldenSpec extends SparkSpec {
     }
   }
 
-  test("denseIds: distributed two-phase equals single-window dense_rank") {
+  test("denseIds: range sort + zipWithIndex equals single-window dense_rank") {
     val masters = (1L to 500L).filter(_ % 3 == 0).map(i => i * 7).toDF("cluster_id")
     val dist = Golden.denseIds(spark, masters, "cluster_id", 1000000L, partitions = 4)
       .as[(Long, Long)].collect().toMap
