@@ -24,7 +24,10 @@ object Pipeline {
       assignments: DataFrame, // (id, cluster_id) for every input doc
       edges: DataFrame,       // scored, thresholded
       lineage: DataFrame,     // per-cluster-member gammas + match_type label
-      metrics: DataFrame)     // per-stage counters
+      // (metric, value): five counters of this run, then ScaleStats rows
+      // (pairgen_*, cc_*) that are JVM-wide since ScaleStats.reset() —
+      // maxima (cc_*_runs: call counts) over every call, not this run's
+      metrics: DataFrame)
 
   /** Release the engine's internal persisted intermediates for this
     * session (see [[graft.stages.IntermediateCaches]]). Call after fully
@@ -130,12 +133,9 @@ object Pipeline {
     *
     * Signatures feed bucket explosion AND both sides of the scoring join —
     * 128-slot MinHash is the most expensive narrow transform in the
-    * pipeline, computed once, cached. Candidates persist (as in run()):
-    * exactVerify's plan references the scoring subtree from the id
-    * semi-join, the exact join, and the below-threshold union — composed
-    * repeated subtrees that exchange reuse cannot be relied on to
-    * collapse; the pair-dedup shuffle would re-execute per reference at
-    * full candidate volume.
+    * pipeline, computed once, cached. Candidates are not cached: scoring
+    * is their only reader, and exactVerify caches the scored candidates
+    * itself ([[run]] caches them because its counters read them again).
     * Survivors feed several downstream jobs (signatures, exact verify,
     * substring). When the CALLER's doc table is uncached, cache the
     * compact (id, text) form once; when the caller already persisted the
@@ -146,7 +146,7 @@ object Pipeline {
     * (guide §5: cache only when recompute beats the memory pressure;
     * same shape run() has always used over its persisted input). */
   private def liteCached(docs: DataFrame): Seq[String] =
-    Seq("signatures", "candidates") ++
+    Seq("signatures") ++
       (if (docs.storageLevel == org.apache.spark.storage.StorageLevel.NONE) Seq("survivors")
        else Nil)
 

@@ -44,13 +44,23 @@ final case class EngineConfig(
     // HDFS/S3 in production) instead of executor-local blocks — survives
     // executor loss at real cluster scale; identical assignments either way
     reliableCheckpoints: Boolean = false,
-    // adaptive CC plan choice: edge sets ≤ this run driver union-find
-    // (the distributed loop is 4-6 rounds of pure serial scheduling time
-    // on a graph this small); larger sets run large-star/small-star.
-    // 0 forces the distributed path. Identical output (spec-pinned).
-    // Must equal ConnectedComponents.DriverFastPathMaxEdges (the direct-
-    // caller default) — EngineConfigSpec pins the two together.
-    ccFastPathMaxEdges: Long = graft.stages.ConnectedComponents.DriverFastPathMaxEdges,
+    // adaptive CC plan choice: edge sets ≤ this run driver union-find;
+    // larger sets run large-star/small-star. 0 forces the distributed
+    // path; identical output either way (spec-pinned). Also the default
+    // of direct ConnectedComponents.run/assign callers. Below the bound
+    // the loop is all overhead: 4-6 rounds of plan-compile + job
+    // scheduling + 2 shuffles each, size-independent SERIAL time (~10-20 s
+    // per run regardless of cores). At the bound's scale (10M-doc probe,
+    // 2.48M real dup-graph edges, 16 pinned cores) union-find took 4.1 s,
+    // the distributed window loop 23.8 s on half the edges. Driver memory
+    // at 4M edges: collected Tuple2s at ~56 B each incl. array slot
+    // ≈ 224 MB (freed before output build) + union-find arrays (≤ 8M
+    // nodes: 16M-slot map ≈ 210 MB + id/parent ≈ 96 MB) ≈ 530 MB
+    // transient, more than Spark's 1 GiB default driver heap allows — so
+    // ConnectedComponents.effectiveFastPathBound also caps the bound by
+    // heap; this value gates only drivers with ≥ ~4 GiB. At 10^12 docs
+    // the edge set is far above it and the loop is the only option.
+    ccFastPathMaxEdges: Long = 4000000L,
     // df-weighted exact similarity (≙ reference term_frequency_adjustments,
     // person_1/link_model_per.py:614-651): weight each shingle by
     // log(nDocs/df) so boilerplate overlap scores below content overlap

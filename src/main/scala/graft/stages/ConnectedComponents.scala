@@ -1,5 +1,6 @@
 package graft.stages
 
+import graft.model.EngineConfig
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
@@ -25,34 +26,6 @@ import org.apache.spark.util.LongAccumulator
   * selects masters, `person_1/link_model_per.py:1447`).
   */
 object ConnectedComponents {
-
-  /** Edge sets at or below this size skip the distributed loop and run
-    * union-find on the driver ([[driverUnionFind]]), while the loop costs
-    * 4-6 rounds of plan-compile + job scheduling + 2 shuffles each — pure
-    * size-independent SERIAL time (the Amdahl term that caps N→4N scaling
-    * efficiency; measured ~10-20 s per run regardless of cores). Measured
-    * at the bound's scale (10M-doc probe, 2.48M real dup-graph edges,
-    * 16 pinned cores): union-find 4.1 s vs the distributed window loop's
-    * 23.8 s on half the edges — the driver side wins by ~10× everywhere
-    * the collect fits. Driver memory at the bound, in JVM terms not flat
-    * bytes: 4M edges collect as specialized Tuple2 (~56 B each incl.
-    * array slot ≈ 224 MB, freed before output build) and the union-find
-    * uses primitive open-addressing arrays (≤ 8M nodes: 16M-slot map
-    * ≈ 210 MB + id/parent arrays ≈ 96 MB ≈ 300 MB peak) — ~530 MB
-    * transient. That does NOT fit Spark's 1 GiB spark.driver.memory
-    * DEFAULT, so [[effectiveFastPathBound]] additionally caps the bound
-    * by the running driver's max heap (~200 B/edge in a quarter of it);
-    * this constant is the gate only on drivers provisioned ≥ ~4 GiB. At
-    * 10^12-doc
-    * scale the post-threshold edge set is far above this bound and the
-    * log-round loop is the only option; below it, the loop is all
-    * overhead. Adaptive plan choice, same contract both sides (spec-pinned
-    * identical output). Set 0 to force the distributed path. Must equal
-    * `EngineConfig.default.ccFastPathMaxEdges` — two diverging "defaults"
-    * made the telemetry gauge misreport the limit actually honored
-    * (caught by the 10M probe: 2.48M edges collected under a reported
-    * 2M limit). */
-  val DriverFastPathMaxEdges: Long = 4000000L
 
   /** The fast-path edge bound this JVM actually honors: the configured
     * bound capped by a hard 100M ceiling and by driver heap (~200 B/edge
@@ -88,9 +61,10 @@ object ConnectedComponents {
     *        directly.
     * @return (id, cluster_id) for every id appearing in `edges`. Callers
     *         union singletons (ids without edges) with cluster_id = id. */
-  def run(spark: SparkSession, edges: DataFrame, maxIterations: Int = 50,
-          reliableCheckpoint: Boolean = false,
-          fastPathMaxEdges: Long = DriverFastPathMaxEdges): DataFrame = {
+  def run(spark: SparkSession, edges: DataFrame,
+          maxIterations: Int = EngineConfig.default.maxCcIterations,
+          reliableCheckpoint: Boolean = EngineConfig.default.reliableCheckpoints,
+          fastPathMaxEdges: Long = EngineConfig.default.ccFastPathMaxEdges): DataFrame = {
     import spark.implicits._
     val useReliable = reliableCheckpoint && spark.sparkContext.getCheckpointDir.isDefined
     // LAZY checkpoint: the iteration's stop-test action materializes it, so
@@ -308,7 +282,7 @@ object ConnectedComponents {
       .select("node")
 
   /** Driver-side union-find with path compression, min-id labeling —
-    * the small-graph execution plan behind [[DriverFastPathMaxEdges]].
+    * the small-graph execution plan behind `EngineConfig.ccFastPathMaxEdges`.
     * Deterministic: the final label of every node is the MIN id of its
     * component regardless of union order. Primitive open-addressing
     * id→index map + int parent array — no per-entry boxing, so the memory
@@ -373,8 +347,9 @@ object ConnectedComponents {
     * Splink semantics: "output one row per input record"
     * (person_1/link_model_per.py:830-837). */
   def assign(spark: SparkSession, docIds: DataFrame, edges: DataFrame,
-             maxIterations: Int = 50, reliableCheckpoint: Boolean = false,
-             fastPathMaxEdges: Long = DriverFastPathMaxEdges): DataFrame = {
+             maxIterations: Int = EngineConfig.default.maxCcIterations,
+             reliableCheckpoint: Boolean = EngineConfig.default.reliableCheckpoints,
+             fastPathMaxEdges: Long = EngineConfig.default.ccFastPathMaxEdges): DataFrame = {
     val cc = run(spark, edges, maxIterations, reliableCheckpoint, fastPathMaxEdges)
     docIds.select(col("id"))
       .join(cc, Seq("id"), "left")

@@ -22,12 +22,9 @@ object Golden {
   /** Pick one canonical doc per cluster: longest text (completeness analog),
     * then earliest warc_ts (most-authoritative crawl), then min id —
     * a total order, so deterministic (reference invariant §1.4.4). */
-  def canonicalDocs(clustered: DataFrame,
-                    idCol: String = "id",
-                    tsCol: String = "warc_ts",
-                    textCol: String = "text"): DataFrame = {
+  def canonicalDocs(clustered: DataFrame): DataFrame = {
     val w = Window.partitionBy("cluster_id")
-      .orderBy(length(col(textCol)).desc, col(tsCol).asc, col(idCol).asc)
+      .orderBy(length(col("text")).desc, col("warc_ts").asc, col("id").asc)
     clustered.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")

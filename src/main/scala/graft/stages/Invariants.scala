@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   */
 object Invariants {
 
-  /** Invariant counters for (docs ⊲ assignments), one row per invariant:
+  /** Invariant counters for (docs(id, text) ⊲ assignments(id, cluster_id)),
+    * one row per invariant:
     *
     *  - `identical_text_pairs_total`: pairs of docs sharing a text —
     *    what the exact closure requires to co-cluster (> 0 when callers
@@ -41,12 +42,11 @@ object Invariants {
     * the returned counters. A monitoring caller invoking this periodically
     * in a long session without clearing accumulates two cached frames per
     * invocation. */
-  def dedupInvariants(docs: DataFrame, assignments: DataFrame,
-                      idCol: String = "id", textCol: String = "text"): DataFrame = {
+  def dedupInvariants(docs: DataFrame, assignments: DataFrame): DataFrame = {
     val assigns = IntermediateCaches.persistTracked(
-      assignments.select(col(idCol).as("__id"), col("cluster_id")))
+      assignments.select(col("id").as("__id"), col("cluster_id")))
     val joined = IntermediateCaches.persistTracked(
-      docs.select(col(idCol).as("__id"), col(textCol).as("__text"))
+      docs.select(col("id").as("__id"), col("text").as("__text"))
         .join(assigns, Seq("__id"), "left"))
 
     // n docs share a text → n*(n-1) div 2 required pairs (integer-exact)

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * per-column cardinality and completeness as a metrics TABLE (the
   * reference renders charts; the engine emits rows a dashboard reads).
   * The skew-detection side of A9 (top-k biggest blocks,
-  * `n_largest_blocks`) is [[PairGen.largestBuckets]].
+  * `n_largest_blocks`) is the oracle-checked top-k group count of query
+  * q09, and [[ScaleStats]] counts the hot buckets PairGen chains.
   */
 object Profiling {
 

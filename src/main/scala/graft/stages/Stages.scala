@@ -30,18 +30,17 @@ object ExactDedup {
     *        drops it (callers returning lazy frames cannot unpersist).
     * @return (survivors, holdouts) — survivors keep all input columns;
     *         holdouts are (id, master_id). */
-  def split(docs: DataFrame, idCol: String = "id", textCol: String = "text",
-            persistRanked: Boolean = false): (DataFrame, DataFrame) = {
-    val w = Window.partitionBy(xxhash64(col(textCol)), col(textCol))
+  def split(docs: DataFrame, persistRanked: Boolean = false): (DataFrame, DataFrame) = {
+    val w = Window.partitionBy(xxhash64(col("text")), col("text"))
     val ranked0 = docs
-      .withColumn("__rn", row_number().over(w.orderBy(col(idCol))))
-      .withColumn("__master", min(col(idCol)).over(w))
+      .withColumn("__rn", row_number().over(w.orderBy(col("id"))))
+      .withColumn("__master", min(col("id")).over(w))
     val ranked = if (persistRanked)
       IntermediateCaches.persistTracked(ranked0)
     else ranked0
     val survivors = ranked.filter(col("__rn") === 1).drop("__rn", "__master")
     val holdouts = ranked.filter(col("__rn") > 1)
-      .select(col(idCol), col("__master").as("master_id"))
+      .select(col("id"), col("__master").as("master_id"))
     (survivors, holdouts)
   }
 
@@ -59,7 +58,7 @@ object ExactDedup {
     * The holdout (id, master) pairs ride the narrow hash table, so the only
     * full-width data movement left is the survivors' own anti-join — text
     * never enters a shuffle key or a window sort. */
-  def splitByHash(docs: DataFrame, idCol: String = "id", textCol: String = "text",
+  def splitByHash(docs: DataFrame, idCol: String = "id",
                   persistHoldouts: Boolean = false): (DataFrame, DataFrame) = {
     // cached (engine-tracked, 25 B/row): keyed feeds BOTH the group
     // aggregate and the holdout join below — uncached, each reference
@@ -67,7 +66,7 @@ object ExactDedup {
     // dominant narrow cost of this stage). At 10^12 docs the cache is
     // narrow-row MEMORY_AND_DISK spill; the alternative is re-hashing the
     // full corpus text per reference (guide §2.4: share one computation).
-    val keyed = IntermediateCaches.persistTracked(contentKeys(docs, idCol, textCol))
+    val keyed = IntermediateCaches.persistTracked(contentKeys(docs, idCol))
     val grp = keyed.groupBy("__h1", "__h2", "__hn")
       .agg(min(col(idCol)).as("master_id"), count(lit(1)).as("__n"))
     val holdouts0 = keyed
@@ -81,7 +80,7 @@ object ExactDedup {
     (survivors, holdouts)
   }
 
-  /** (`idCol`, `__h1`, `__h2`, `__hn`): the content key of every row.
+  /** (`idCol`, `__h1`, `__h2`, `__hn`): the content key of every row's `text`.
     * Two independent 64-bit hashes: the salt literal goes FIRST, so the
     * second hash runs over the text with a genuinely different seed
     * (xxhash64 folds columns left-to-right with the running hash as seed
@@ -90,12 +89,12 @@ object ExactDedup {
     * __hn marker column, so null-text duplicates group together, join
     * with plain equality (no null-rejecting key), and stay distinct from
     * empty-string text — exactly the window plan's partition semantics. */
-  private def contentKeys(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+  private def contentKeys(docs: DataFrame, idCol: String): DataFrame =
     docs.select(
       col(idCol),
-      xxhash64(coalesce(col(textCol), lit(""))).as("__h1"),
-      xxhash64(lit(0x9e3779b9L), coalesce(col(textCol), lit(""))).as("__h2"),
-      isnull(col(textCol)).as("__hn"))
+      xxhash64(coalesce(col("text"), lit(""))).as("__h1"),
+      xxhash64(lit(0x9e3779b9L), coalesce(col("text"), lit(""))).as("__h2"),
+      isnull(col("text")).as("__hn"))
 
   /** Order-insensitive fingerprint of a doc table's (id, text) rows: the
     * XOR of one 64-bit hash per (id, content key) row, plus the row count,
@@ -103,9 +102,9 @@ object ExactDedup {
     * any partitioning or row order. One Spark job: per-partition partials
     * combined on the driver (a DataFrame aggregate runs its exchange as a
     * second job), and exact under task retries, unlike an observed metric. */
-  def inputFingerprint(docs: DataFrame, idCol: String = "id", textCol: String = "text"): String = {
-    val (hash, rows) = contentKeys(docs, idCol, textCol)
-      .select(xxhash64(col(idCol), col("__h1"), col("__h2"), col("__hn")))
+  def inputFingerprint(docs: DataFrame): String = {
+    val (hash, rows) = contentKeys(docs, "id")
+      .select(xxhash64(col("id"), col("__h1"), col("__h2"), col("__hn")))
       .rdd
       .aggregate((0L, 0L))((acc, r) => (acc._1 ^ r.getLong(0), acc._2 + 1),
                            (a, b) => (a._1 ^ b._1, a._2 + b._2))
@@ -144,11 +143,12 @@ object ExactDedup {
   }
 }
 
-/** Signature stage (SURVEY §7.2 module 5): Dataset[doc] → doc + minhash +
-  * simhash + nShingles. Narrow — no shuffle; signatures computed in one
-  * pass per document via the custom Catalyst expressions. */
+/** Signature stage (SURVEY §7.2 module 5): Dataset[doc] → doc + minhash
+  * (null for an unlinkable doc: fewer than `shingleK` tokens) + simhash.
+  * Narrow — no shuffle; signatures computed in one pass per document via
+  * the custom Catalyst expressions. */
 object Signatures {
-  def withSignatures(docs: DataFrame, cfg: EngineConfig, textCol: String = "text"): DataFrame =
+  def withSignatures(docs: DataFrame, cfg: EngineConfig): DataFrame =
     docs
       // fused kernel: ONE tokenization yields both signatures (separate
       // minhash and simhash expressions each re-scanned and re-hashed the
@@ -157,16 +157,9 @@ object Signatures {
       // extracted in a SECOND projection: CollapseProject declines to merge
       // a multi-referenced non-cheap alias, so doc_sigs evaluates once per
       // row (PlanQualitySpec pins one doc_sigs call in the optimized plan).
-      .withColumn("__sig", GraftFunctions.docSigs(col(textCol), cfg))
+      .withColumn("__sig", GraftFunctions.docSigs(col("text"), cfg))
       .withColumn("minhash", col("__sig").getField("minhash"))
       .withColumn("simhash", col("__sig").getField("simhash"))
-      // real shingle count (0 marks an unlinkable doc), not a constant: the
-      // extra shingle pass is column-pruned away in the pipeline hot path
-      // (which selects only id/minhash/simhash) and only paid by consumers
-      // that actually read the count
-      .withColumn("n_shingles",
-        when(col("minhash").isNull, lit(0))
-          .otherwise(size(GraftFunctions.shingleHashes(col(textCol), cfg.shingleK))))
       .drop("__sig")
 }
 
@@ -191,7 +184,6 @@ object Signatures {
   * key-partitioned, sorted rows decides and emits every bucket.
   */
 object PairGen {
-  val AllPairsCap = 64
 
   /** @param buckets columns: key:long, id:long, sort:long (non-null)
     * @param dropHotAbove if set, buckets larger than this are excluded
@@ -213,7 +205,7 @@ object PairGen {
     * way — the key exchange already puts all its rows in one partition.
     * Each chained bucket adds 1 to a LongAccumulator that feeds
     * [[ScaleStats.maxBigKeysCollected]] as the pass's tasks finish. */
-  def pairs(buckets: DataFrame, allPairsCap: Int = AllPairsCap,
+  def pairs(buckets: DataFrame, allPairsCap: Int = EngineConfig.default.allPairsCap,
             dropHotAbove: Option[Int] = None, chainWidth: Int = 1): DataFrame = {
     require(allPairsCap >= 0 && dropHotAbove.forall(_ >= 0) && chainWidth >= 1,
       s"bad PairGen bounds: allPairsCap=$allPairsCap dropHotAbove=$dropHotAbove chainWidth=$chainWidth")
@@ -319,11 +311,6 @@ object PairGen {
       (out(outI - 3), out(outI - 2), out(outI - 1))
     }
   }
-
-  /** Bucket-size skew report (≙ Splink n_largest_blocks,
-    * `person_1/link_model_per.py:531-538`). */
-  def largestBuckets(buckets: DataFrame, n: Int): DataFrame =
-    buckets.groupBy("key").count().orderBy(desc("count"), col("key")).limit(n)
 }
 
 /** LSH blocking (SURVEY §7.2 module 6) — replaces Splink's blocking rules
@@ -356,11 +343,13 @@ object Blocking {
   /** One row per (signed doc, band): the bucket `key`, `id`, then the
     * `carry` columns. The key holds the band index in its top 8 bits
     * ([[bandOf]]) and the band hash's top 56 bits below it. Batch blocking
-    * and the streaming detector both bucket docs through it.
+    * and the streaming detector both bucket docs through it. An unsigned
+    * doc (null minhash) gets no row: `posexplode` of its null band-hash
+    * array emits nothing. A `minhash IS NOT NULL` filter would be pushed
+    * below the signature projection with a second `doc_sigs` in it.
     * @param sigs columns: id, minhash and what `carry` reads */
   def bandRows(sigs: DataFrame, cfg: EngineConfig, carry: Column*): DataFrame = {
     val exploded = sigs
-      .filter(col("minhash").isNotNull)
       .select((col("id") +: carry) :+
         posexplode(GraftFunctions.bandHashes(col("minhash"), cfg)).as(Seq("band_idx", "band_hash")): _*)
     exploded.select((shiftleft(col("band_idx").cast("long"), 56)
@@ -417,31 +406,31 @@ object Scoring {
     * relative to the corpus), so the exact pass costs O(candidates), not
     * O(corpus). Level-2 pairs whose exact Jaccard misses the threshold are
     * demoted (to 1 if SimHash still matches, else 0) — engine edges then
-    * agree exactly with the all-pairs oracle definition. */
-  def exactVerify(scored0: DataFrame, docs: DataFrame, cfg: EngineConfig,
-                  idCol: String = "id", textCol: String = "text"): DataFrame = {
-    // cached (engine-tracked, narrow ~60 B/row): the scored input is
-    // referenced THREE times below (cand → ids, cand → the exact join,
-    // and the below-threshold union) — uncached, the two-sided signature
-    // join behind it re-executed per reference (exchange reuse does not
-    // collapse the composed copies; same rationale as runLite's candidate
-    // persist). The cache is bounded by candidate-pair volume.
-    val scored = IntermediateCaches.persistTracked(scored0)
-    val cand = scored.filter(col("level") >= 1)
+    * agree exactly with the all-pairs oracle definition. Returns the rows
+    * of `scored0` the estimate passed (level ≥ 1, a demoted one at its
+    * new level) with `jaccard_exact` and `jaccard_tf` (null unless
+    * `tfWeighting`); `docs` has columns id, text. */
+  def exactVerify(scored0: DataFrame, docs: DataFrame, cfg: EngineConfig): DataFrame = {
+    // cached (engine-tracked, narrow ~60 B/row): the candidates are
+    // referenced twice below (→ ids, → the exact join; three times with
+    // tfWeighting) — uncached, the two-sided signature join behind them
+    // re-executed per reference (exchange reuse does not collapse the
+    // composed copies). The cache is bounded by candidate-pair volume.
+    val cand = IntermediateCaches.persistTracked(scored0.filter(col("level") >= 1))
     // no explicit broadcast hints: the candidate id set is usually tiny
     // (AQE will broadcast it), but at high duplicate rates it can approach
     // corpus size — the plan must stay valid either way
-    val ids = cand.select(explode(array(col("id_l"), col("id_r"))).as(idCol)).distinct()
+    val ids = cand.select(explode(array(col("id_l"), col("id_r"))).as("id")).distinct()
     // cached (engine-tracked): touched feeds BOTH sides of the exact join —
     // uncached, every candidate doc was re-shingled twice (shingleHashes is
     // the expensive narrow kernel here). Bounded by candidate-doc volume ×
     // shingle arrays — the same data the join shuffles anyway.
-    val touched = IntermediateCaches.persistTracked(docs.join(ids, Seq(idCol), "left_semi")
-      .select(col(idCol),
-        GraftFunctions.shingleHashes(col(textCol), cfg.shingleK).as("__sh")))
+    val touched = IntermediateCaches.persistTracked(docs.join(ids, Seq("id"), "left_semi")
+      .select(col("id"),
+        GraftFunctions.shingleHashes(col("text"), cfg.shingleK).as("__sh")))
     val withExact = cand
-      .join(touched.select(col(idCol).as("id_l"), col("__sh").as("__sh_l")), "id_l")
-      .join(touched.select(col(idCol).as("id_r"), col("__sh").as("__sh_r")), "id_r")
+      .join(touched.select(col("id").as("id_l"), col("__sh").as("__sh_l")), "id_l")
+      .join(touched.select(col("id").as("id_r"), col("__sh").as("__sh_r")), "id_r")
       .withColumn("jaccard_exact", GraftFunctions.jaccardArrays(col("__sh_l"), col("__sh_r")))
       .drop("__sh_l", "__sh_r")
     // optional df-weighted gate (A1 full analog of the reference's
@@ -451,12 +440,12 @@ object Scoring {
     val gated =
       if (cfg.tfWeighting)
         withExact.join(
-          tfWeightedScores(cand.select("id_l", "id_r"), docs, cfg, idCol, textCol),
+          tfWeightedScores(cand.select("id_l", "id_r"), docs, cfg),
           Seq("id_l", "id_r"), "left")
       else withExact.withColumn("jaccard_tf", lit(null).cast("double"))
     val gate = if (cfg.tfWeighting) col("jaccard_tf") else col("jaccard_exact")
     val demoted = col("level") === 2 && gate < cfg.jaccardThreshold
-    val verified = gated
+    gated
       // reason must follow the level on demotion — a stale
       // "minhash-band=N" on a SimHash-level (or dropped) edge
       // misattributes provenance in lineage and debugging output
@@ -469,10 +458,6 @@ object Scoring {
         when(demoted,
           when(col("hamming") <= cfg.hammingThreshold, 1).otherwise(0))
           .otherwise(col("level")))
-    verified.unionByName(
-      scored.filter(col("level") < 1)
-        .withColumn("jaccard_exact", lit(null).cast("double"))
-        .withColumn("jaccard_tf", lit(null).cast("double")))
   }
 
   /** df-weighted Jaccard per candidate pair (A1 full analog, ≙
@@ -485,16 +470,15 @@ object Scoring {
     * Plan shape: the df table is a full-corpus groupBy (map-side
     * combinable — the TF-table aggregate A1); per-pair sums touch only
     * candidate docs (semi-join restriction, same staging as exactVerify). */
-  def tfWeightedScores(pairs: DataFrame, docs: DataFrame, cfg: EngineConfig,
-                       idCol: String = "id", textCol: String = "text"): DataFrame = {
+  def tfWeightedScores(pairs: DataFrame, docs: DataFrame, cfg: EngineConfig): DataFrame = {
     // nDocs rides the plan as a one-row aggregate broadcast into the idf
     // table: an eager docs.count() here launched a full-corpus serial job
     // at PLAN-CONSTRUCTION time on every exactVerify call with tfWeighting
     // on — a size-independent Amdahl term the lazy form avoids
     val nDocs = docs.agg(count(lit(1)).cast("double").as("__n"))
     // shingleHashes emits distinct hashes per doc, so (doc, sh) is distinct
-    val sh = docs.select(col(idCol).as("__id"),
-      explode(GraftFunctions.shingleHashes(col(textCol), cfg.shingleK)).as("sh"))
+    val sh = docs.select(col("id").as("__id"),
+      explode(GraftFunctions.shingleHashes(col("text"), cfg.shingleK)).as("sh"))
     val idf = sh.groupBy("sh").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
       .withColumn("idf", log((col("__n") + 1.0) / col("df")))
@@ -526,16 +510,15 @@ object Scoring {
   * reason "substring". */
 object Substring {
 
-  def edges(docs: DataFrame, cfg: EngineConfig,
-            idCol: String = "id", textCol: String = "text"): DataFrame = {
+  def edges(docs: DataFrame, cfg: EngineConfig): DataFrame = {
     // winnowing is the most expensive narrow kernel in the pipeline
     // (char-gram FNV over the full text + sliding-window min) and BOTH
     // consumers below need it — compute it once per doc, cache the compact
     // array form (~100 longs/doc, far smaller than the text), and derive
     // the exploded bucket table and the per-doc counts from the cache
     val withFps = IntermediateCaches.persistTracked(docs.select(
-        col(idCol).as("id"),
-        GraftFunctions.winnowFps(col(textCol), cfg.winnowK, cfg.winnowWindow).as("__fps")))
+        col("id"),
+        GraftFunctions.winnowFps(col("text"), cfg.winnowK, cfg.winnowWindow).as("__fps")))
     // NOTE: no "low-fp docs can't form edges" pre-filter here — removing a
     // doc from the bucket table changes bucket cardinalities (df-cap
     // pruning decisions) and chain adjacency for the REMAINING docs, so

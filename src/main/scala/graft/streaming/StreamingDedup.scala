@@ -75,7 +75,7 @@ object StreamingDedup {
     import spark.implicits._
     val hamThr = cfg.hammingThreshold
     // the batch signatures and band rows (PlanQualitySpec pins one
-    // projected doc_sigs and a pruned n_shingles); the watermark goes on
+    // doc_sigs in the micro-batch plan); the watermark goes on
     // the band rows, which carry the event times of exactly the signed docs
     val buckets = Blocking
       .bandRows(Signatures.withSignatures(docs, cfg), cfg, col("warc_ts"), col("simhash"))

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   *
   *   - how many hot buckets PairGen chained (no driver bound: the pass
   *     chains them in place);
-  *   - CC fast-path edge collect vs DriverFastPathMaxEdges (4M) / the
+  *   - CC fast-path edge collect vs `EngineConfig.ccFastPathMaxEdges` (4M) / the
   *     distributed path's edge count;
   *
   * so BENCH.md can report measured headroom instead of an argument.

@@ -30,6 +30,21 @@ class PipelineSpec extends SparkSpec {
     assert(mism == 0)
   }
 
+  test("fromPages: extracted text, id = xxhash64(url), verifyUnique keeps every row") {
+    val pages = corpus.select("url", "warc_ts", "html", "lang")
+    val docs = Pipeline.fromPages(pages)
+    assert(docs.columns.toSeq == Seq("id", "url", "warc_ts", "text", "lang"))
+    val joined = docs.join(corpus.select(col("url"), col("text").as("want")), "url")
+    val bad = joined.filter(!(col("text") <=> col("want")) || col("id") =!= xxhash64(col("url")))
+    assert(joined.count() == N && bad.count() == 0, s"${bad.count()} rows differ")
+    // a page listed twice under one url is not an id collision
+    val twice = pages.unionByName(pages.orderBy("url").limit(1))
+    def rows(verify: Boolean) = Pipeline.fromPages(twice, verifyUnique = verify)
+      .as[(Long, String, java.sql.Timestamp, String, String)].collect().sortBy(r => (r._1, r._2))
+    val (plain, verified) = (rows(verify = false), rows(verify = true))
+    assert(plain.length == N + 1 && plain.toSeq == verified.toSeq)
+  }
+
   test("dup-pair recall >= 0.99 and precision = 1.0 vs planted truth") {
     val truth = Corpus.truthPairs(corpus)
     val a = result.assignments

@@ -52,7 +52,7 @@ class PlanQualitySpec extends SparkSpec {
     assert(n == 1, s"expected exactly one doc_sigs call in the optimized plan, got $n:\n$o")
   }
 
-  test("streaming near-dup detector: doc_sigs projected once, n_shingles pruned") {
+  test("streaming near-dup detector: doc_sigs evaluated once, no null-filter copy") {
     import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -67,16 +67,27 @@ class PlanQualitySpec extends SparkSpec {
       // LocalRelation, so nothing is constant-folded away
       val o = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
         .lastExecution.optimizedPlan.toString
-      // one projected struct; the only other copy is the null filter that
-      // the optimizer pushes below it, as in batch blocking (q22)
+      // one projected struct and no other copy (such as a pushed-down
+      // minhash null filter)
       val projected = "doc_sigs\\([^)]*\\) AS __sig".r.findAllIn(o).length
-      val filtered = "isnotnull\\(doc_sigs\\([^)]*\\)\\.minhash\\)".r.findAllIn(o).length
       val n = "doc_sigs".r.findAllIn(o).length
-      assert(projected == 1 && filtered <= 1 && n == projected + filtered,
-        s"expected one projected doc_sigs (+ at most its null filter), got $n:\n$o")
-      for (pruned <- Seq("shingle_hashes", "n_shingles"))
-        assert(!o.contains(pruned), s"unexpected $pruned in the streaming plan:\n$o")
+      assert(projected == 1 && n == 1, s"expected one projected doc_sigs and no other, got $n:\n$o")
     } finally q.stop()
+  }
+
+  test("q22 and q38: each signatures reference evaluates doc_sigs once, no null-filter copy") {
+    // the signatures feed blocking and both sides of the scoring join, so
+    // the optimized plan holds one projected doc_sigs per reference (the
+    // executed plan reuses one broadcast for both join sides). A minhash
+    // null filter pushed below a projection would add a second doc_sigs
+    // there and tokenize and hash every text of that branch twice.
+    for (q <- Seq("q22_minhash_lsh", "q38_threshold_tuned")) {
+      val o = queries.Queries.queries(q)(spark, dir).queryExecution.optimizedPlan.toString
+      val projected = "doc_sigs\\([^)]*\\) AS __sig".r.findAllIn(o).length
+      val n = "doc_sigs".r.findAllIn(o).length
+      assert(projected >= 1 && n == projected,
+        s"$q: expected only projected doc_sigs, got $n calls for $projected projections:\n$o")
+    }
   }
 
   test("whole-stage codegen covers the scalar metric expressions") {
@@ -136,6 +147,26 @@ class PlanQualitySpec extends SparkSpec {
       // aggregate to the lite call's jobs; survivors, signatures and
       // lineage are no longer written
       assert(commit <= lite + 5, s"fresh runResumable ran $commit jobs, runLite $lite")
+    } finally {
+      docs.unpersist()
+      Pipeline.clearIntermediateCaches(spark)
+    }
+  }
+
+  test("a lite call leaves one cache per stage output some later job reads again") {
+    val docs = fixtures.Corpus.generate(spark, 400)
+      .select("id", "url", "warc_ts", "text", "lang").persist()
+    docs.count()
+    val sc = spark.sparkContext
+    try {
+      val before = sc.getPersistentRDDs.keySet
+      Pipeline.runLite(spark, docs).collect()
+      val added = sc.getPersistentRDDs.keySet -- before
+      // content keys and holdouts (exact-dup split), signatures, the
+      // level ≥ 1 scored pairs and their docs' shingles (exactVerify), the
+      // winnow fingerprints (substring) and the survivor assignments
+      // (reattach); the candidate pairs have one reader and are not cached
+      assert(added.size == 7, s"lite call left ${added.size} new caches: $added")
     } finally {
       docs.unpersist()
       Pipeline.clearIntermediateCaches(spark)

@@ -32,12 +32,4 @@ class EngineConfigSpec extends AnyFunSuite {
       bands = 8, rowsPerBand = 8))
     assert(c.bands * c.rowsPerBand == 64)
   }
-
-  test("CC fast-path default and the ConnectedComponents constant agree") {
-    // Two diverging "defaults" once made the scale-probe telemetry report
-    // a 2M limit while the pipeline honored 4M — the gauge must describe
-    // the bound that actually gates the plan choice.
-    assert(EngineConfig.default.ccFastPathMaxEdges ==
-      graft.stages.ConnectedComponents.DriverFastPathMaxEdges)
-  }
 }

@@ -120,7 +120,7 @@ class ConnectedComponentsPropertySpec extends SparkSpec {
       finally graft.Pipeline.clearIntermediateCaches(spark)
     }
     val want = CcOracle.components(c.edges)
-    val driver = cc(ConnectedComponents.DriverFastPathMaxEdges)
+    val driver = cc(graft.model.EngineConfig.default.ccFastPathMaxEdges)
     val distributed = cc(0L)
     // past the fast-path bound: the loop starts from the limit-collect's cache
     val overBound = cc(1L)

@@ -11,7 +11,7 @@ import org.scalacheck.util.Pretty
   * otherwise each member in (sort, id) order pairs with its next
   * `chainWidth` members. Returns the sorted (id_l, id_r, key) multiset. */
 object PairGenOracle {
-  def pairs(rows: Seq[(Long, Long, Long)], allPairsCap: Int = PairGen.AllPairsCap,
+  def pairs(rows: Seq[(Long, Long, Long)], allPairsCap: Int = graft.model.EngineConfig.default.allPairsCap,
             dropHotAbove: Option[Int] = None,
             chainWidth: Int = 1): Seq[(Long, Long, Long)] =
     rows.groupBy(_._1).toSeq.flatMap { case (key, members) =>

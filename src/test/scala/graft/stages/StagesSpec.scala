@@ -182,31 +182,19 @@ class StagesSpec extends SparkSpec {
     assert(got2.forall(_._3 == 40L) && got2.size == 69)
   }
 
-  test("withSignatures: n_shingles is the document's real shingle count") {
-    val cfg = EngineConfig.default
-    val text = (1 to 40).map(i => s"w$i").mkString(" ")
-    val docs = Seq((1L, text), (2L, "tiny")).toDF("id", "text")
-    val got = Signatures.withSignatures(docs, cfg)
-      .select("id", "n_shingles").as[(Long, Int)].collect().toMap
-    // the field is the shingle COUNT, not the signature length; 0 still
-    // marks unlinkable docs
-    val real = docs.filter(col("id") === 1L)
-      .select(size(graft.expr.GraftFunctions.shingleHashes(col("text"), cfg.shingleK)))
-      .as[Int].head()
-    assert(real > 0 && real != cfg.numPerms)
-    assert(got(1L) == real)
-    assert(got(2L) == 0)
-  }
-
   test("Blocking: identical docs collide in all bands, candidates dedup across bands") {
     val cfg = EngineConfig.default
     val text = (1 to 200).map(i => s"tok$i").mkString(" ")
-    val docs = Seq((1L, text), (2L, text), (3L, (1 to 200).map(i => s"zz$i").mkString(" ")))
-      .toDF("id", "text")
+    // docs 4 and 5 hold one token each: fewer than shingleK, so unlinkable
+    val docs = Seq((1L, text), (2L, text), (3L, (1 to 200).map(i => s"zz$i").mkString(" ")),
+      (4L, "tiny"), (5L, "tiny")).toDF("id", "text")
     val sigs = Signatures.withSignatures(docs, cfg).select("id", "minhash", "simhash")
+    assert(sigs.filter(col("minhash").isNull).select("id").as[Long].collect().sorted
+      .sameElements(Array(4L, 5L)))
     val cand = Blocking.candidatePairs(sigs, cfg).as[(Long, Long, Int)].collect()
     assert(cand.count(c => c._1 == 1L && c._2 == 2L) == 1) // deduped across 16 bands
-    assert(cand.forall(c => !(c._1 == 3L || c._2 == 3L)))
+    // an unsigned doc has no band rows, so it is in no candidate pair
+    assert(cand.forall(c => Seq(c._1, c._2).forall(id => id == 1L || id == 2L)))
     assert(cand.head._3 == 0) // lowest band index kept as match_key
   }
 
@@ -261,14 +249,23 @@ class StagesSpec extends SparkSpec {
   }
 
   test("clearIntermediateCaches releases engine-tracked blocks, never the caller's") {
-    val callerCache = Seq((1L, "caller")).toDF("id", "text").persist()
+    val sc = spark.sparkContext
+    def cached = sc.getPersistentRDDs.keySet
+    val words = (1 to 200).map(i => s"w$i")
+    val callerCache = Seq((1L, words.mkString(" ")), (2L, words.slice(40, 160).mkString(" ")))
+      .toDF("id", "text").persist()
+    val beforeCaller = cached
     callerCache.count()
-    val buckets = ((1L to 40L).map(i => (1L, i, i)) ++ Seq((2L, 100L, 1L), (2L, 101L, 2L)))
-      .toDF("key", "id", "sort")
-    // tracks `grouped` internally (PairGen single-shuffle plan)
-    assert(PairGen.pairs(buckets, allPairsCap = 64).count() > 0)
+    val callerRdds = cached -- beforeCaller
+    // the caller's cache feeds an operator that tracks its own: the
+    // substring pass caches the winnow fingerprints
+    assert(Substring.edges(callerCache, EngineConfig.default).count() == 1)
+    val engineRdds = cached -- beforeCaller -- callerRdds
+    assert(callerRdds.size == 1 && engineRdds.nonEmpty, s"caller $callerRdds, engine $engineRdds")
     graft.Pipeline.clearIntermediateCaches(spark)
-    assert(callerCache.storageLevel.useMemory, "caller cache must survive the engine clear")
+    assert((cached & engineRdds).isEmpty, s"engine caches ${cached & engineRdds} survived the clear")
+    assert(callerRdds.subsetOf(cached) && callerCache.storageLevel.useMemory,
+      "caller cache must survive the engine clear")
     // idempotent: a second clear with nothing tracked is a no-op
     graft.Pipeline.clearIntermediateCaches(spark)
     callerCache.unpersist()
