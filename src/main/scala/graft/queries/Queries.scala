@@ -162,7 +162,7 @@ object Queries {
 
     // F9 NULL-aware exact-match gamma on candidate pairs (≙ §2.11 levels)
     "q14_gamma_exact" -> ((s, dir) => {
-      val pairs = trigramPairs(s, dir)
+      val pairs = trigramPairsFull(s, dir)
       val d = t(s, dir, "documents").select(col("doc_id"), col("lang"))
       pairs
         .join(d.select(col("doc_id").as("doc_id_l"), col("lang").as("lang_l")), "doc_id_l")
@@ -450,27 +450,25 @@ object Queries {
     // trigram edges over survivors → CC → holdout re-attach → lineage; the
     // DuckDB oracle reproduces all four match_type classes independently.
     "q37_exact_lineage" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = t(s, dir, "documents").select(col("doc_id").as("id"), col("text"))
       val aug = docs
-        .unionByName(docs.filter(col("doc_id") % 20 === 0)
-          .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
-        .unionByName(docs.filter(col("doc_id") % 40 === 0)
-          .select((col("doc_id") + 20000000L).as("doc_id"), headFrac(0.9).as("text")))
-        .unionByName(docs.filter(col("doc_id") % 40 === 0)
-          .select((col("doc_id") + 30000000L).as("doc_id"), headFrac(0.76).as("text")))
-      val (survivors, holdouts) =
-        graft.stages.ExactDedup.splitByHash(aug, idCol = "doc_id")
+        .unionByName(docs.filter(col("id") % 20 === 0)
+          .select((col("id") + 10000000L).as("id"), col("text")))
+        .unionByName(docs.filter(col("id") % 40 === 0)
+          .select((col("id") + 20000000L).as("id"), headFrac(0.9).as("text")))
+        .unionByName(docs.filter(col("id") % 40 === 0)
+          .select((col("id") + 30000000L).as("id"), headFrac(0.76).as("text")))
+      val (survivors, holdouts) = graft.stages.ExactDedup.splitByHash(aug)
       val pairs = trigramPairsOf(survivors)
       val strong = col("inter") * 10 >= (col("size_l") + col("size_r") - col("inter")) * 9
       val edges = pairs.select(
         col("doc_id_l").as("id_l"), col("doc_id_r").as("id_r"),
         col("inter"), when(strong, 2).otherwise(1).as("level"))
-      val survAssign = ConnectedComponents.assign(
-        s, survivors.select(col("doc_id").as("id")),
+      val survAssign = ConnectedComponents.assign(s, survivors.select(col("id")),
         pairs.select(col("doc_id_l").as("src"), col("doc_id_r").as("dst")))
-      val assignments = graft.stages.ExactDedup.reattach(survAssign, holdouts, idCol = "doc_id")
+      val assignments = graft.stages.ExactDedup.reattach(survAssign, holdouts)
       graft.stages.Lineage.clusterRows(assignments, edges,
-          holdouts.select(col("doc_id").as("id")), gammaCols = Seq("inter", "level"))
+          holdouts.select(col("id")), gammaCols = Seq("inter", "level"))
         .select(col("id").as("doc_id"), col("cluster_id"),
           coalesce(col("inter"), lit(-1L)).as("direct_inter"),
           coalesce(col("level"), lit(-1)).as("gamma"),
@@ -496,28 +494,27 @@ object Queries {
     // independently (entity-partitioned dedup + closure + dense ranks +
     // arg-max fill).
     "q39_multi_entity" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      val docs = t(s, dir, "documents").select(col("doc_id").as("id"), col("text"))
       val aug = docs
-        .unionByName(docs.filter(col("doc_id") % 20 === 0)
-          .select((col("doc_id") + 30000000L).as("doc_id"), col("text")))
-        .unionByName(docs.filter(col("doc_id") % 20 === 0)
-          .select((col("doc_id") + 60000000L).as("doc_id"), headFrac(0.9).as("text")))
-      val payload = aug.select(col("doc_id").as("id"),
-        when(col("doc_id") >= 30000000L, col("doc_id")).as("cni"))
+        .unionByName(docs.filter(col("id") % 20 === 0)
+          .select((col("id") + 30000000L).as("id"), col("text")))
+        .unionByName(docs.filter(col("id") % 20 === 0)
+          .select((col("id") + 60000000L).as("id"), headFrac(0.9).as("text")))
+      val payload = aug.select(col("id"), when(col("id") >= 30000000L, col("id")).as("cni"))
 
       // one reference-shaped entity pipeline: exact-dup pre-pass →
       // candidate pairs at the entity's threshold → CC → holdout re-attach
       def entityDedup(num: Int, den: Int)(slice: DataFrame): DataFrame = {
-        val (surv, hold) = graft.stages.ExactDedup.splitByHash(slice, idCol = "doc_id")
+        val (surv, hold) = graft.stages.ExactDedup.splitByHash(slice)
         val pairs = trigramPairsOf(surv, num, den)
-        val sa = ConnectedComponents.assign(s, surv.select(col("doc_id").as("id")),
+        val sa = ConnectedComponents.assign(s, surv.select(col("id")),
           pairs.select(col("doc_id_l").as("src"), col("doc_id_r").as("dst")))
-        graft.stages.ExactDedup.reattach(sa, hold, idCol = "doc_id")
+        graft.stages.ExactDedup.reattach(sa, hold)
       }
       val thresholds = Seq((4, 5), (7, 10), (17, 20)) // J >= 0.8 / 0.7 / 0.85
       val models = thresholds.zipWithIndex.map { case ((num, den), e) =>
         (graft.MultiEntity.EntityModel(s"e$e", (e + 1) * 1000000L, entityDedup(num, den)),
-          aug.filter(col("doc_id") % 3 === e))
+          aug.filter(col("id") % 3 === e))
       }
       val lookup = graft.MultiEntity.unifiedLookup(models)
       val masters = graft.MultiEntity.unifiedMasters(lookup, payload, Seq("cni"), col("id"))
@@ -583,7 +580,7 @@ object Queries {
   )
 
   /** Grams occurring in more documents than this carry no pair evidence
-    * (boilerplate): the self-join on a hot gram is quadratic in its df, so
+    * (boilerplate): pairing a hot gram's docs is quadratic in its df, so
     * an uncapped gram at web scale is the "michael b" block all over again.
     * 100 is well above the testdata maximum (7 at sf0.01, 25 at sf0.1), so
     * the cap binds nothing at oracle scale — the DuckDB CTE applies the
@@ -601,50 +598,32 @@ object Queries {
   /** Exact token-trigram candidate pairs at Jaccard ≥ 0.8 (integer-exact
     * filter: 5*inter >= 4*union). Shared by q14/q20/q21/q32. */
   private def trigramPairsFull(s: SparkSession, dir: String): DataFrame =
-    trigramPairsOf(t(s, dir, "documents"))
+    trigramPairsOf(t(s, dir, "documents").select(col("doc_id").as("id"), col("text")))
 
-  /** [[trigramPairsFull]] over an arbitrary (doc_id, text) frame —
-    * q37 runs it over exact-dedup survivors of an augmented corpus; q39's
-    * per-entity models retune only the Jaccard threshold `num/den`
-    * (integer-exact, mirrored in the oracle) the way the reference's five
-    * models retune only threshold_match_weight (SURVEY §2.9). */
+  /** [[trigramPairsFull]] over an arbitrary (id, text) frame — q37 runs it
+    * over exact-dedup survivors of an augmented corpus; q39's per-entity
+    * models retune only the Jaccard threshold `num/den` (integer-exact,
+    * mirrored in the oracle) the way the reference's five models retune
+    * only threshold_match_weight (SURVEY §2.9).
+    *
+    * A doc's grams are its distinct trigram hashes (`xxhash64` of the
+    * trigram string); [[graft.stages.PairGen.sharedKeys]] counts the ones
+    * two docs share, with all pairs for a gram in ≤ [[TrigramDfCap]] docs
+    * and none for a hotter one, as the oracle's `NOT IN` does. Hashing
+    * equals distinct strings unless two trigrams collide in 64 bits: the
+    * testdata has 27,213 distinct trigrams at sf0.1 (16,245 at sf0.01), so
+    * the expected number of colliding pairs is about 27,213² / 2⁶⁵ ≈ 2·10⁻¹¹. */
   private def trigramPairsOf(docs: DataFrame, num: Int = 4, den: Int = 5): DataFrame = {
-    // cached (engine-tracked): sizes, hotGrams, and both self-join sides
-    // consume `grams` — without the cache the explode+distinct shuffle
-    // re-executes per consumer (exchange reuse across composed references
-    // is not guaranteed)
-    val grams = graft.stages.IntermediateCaches.persistTracked(docs
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+    val grams = docs
+      .select(col("id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(toks)-3), i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))"))
-        .as("g"))
-      .distinct())
-    val sizes = grams.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val hotGrams = grams.groupBy("g").agg(count(lit(1)).as("df"))
-      .filter(col("df") > TrigramDfCap).select("g")
-    // also cached: the anti-join output feeds BOTH sides of the self-join.
-    // Cached PRE-PARTITIONED on the join key: the broadcast anti-join
-    // preserves the distinct()'s (doc_id, g) partitioning, so without the
-    // explicit repartition the self-join exchanges the cache by g TWICE
-    // (once per side); partitioning the cache by g once makes both join
-    // reads exchange-free (InMemoryRelation reports the cached plan's
-    // hash partitioning) — guide §2.4 "two operations keyed the same way
-    // share one exchange".
-    val kept = graft.stages.IntermediateCaches.persistTracked(
-      grams.join(hotGrams, Seq("g"), "left_anti").repartition(col("g")))
-    val l = kept.select(col("doc_id").as("doc_id_l"), col("g"))
-    val r = kept.select(col("doc_id").as("doc_id_r"), col("g"))
-    l.join(r, Seq("g")).filter(col("doc_id_l") < col("doc_id_r"))
-      .groupBy("doc_id_l", "doc_id_r").agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("doc_id_l"), col("n").as("size_l")), "doc_id_l")
-      .join(sizes.select(col("doc_id").as("doc_id_r"), col("n").as("size_r")), "doc_id_r")
+      .select(col("id"), array_distinct(expr("transform(sequence(0, size(toks)-3), " +
+        "i -> xxhash64(concat(toks[i], ' ', toks[i+1], ' ', toks[i+2])))")).as("keys"))
+    graft.stages.PairGen.sharedKeys(grams, TrigramDfCap, TrigramDfCap)
+      .select(col("id_l").as("doc_id_l"), col("id_r").as("doc_id_r"), col("shared").as("inter"),
+        col("n_l").cast("long").as("size_l"), col("n_r").cast("long").as("size_r"))
       .filter(col("inter") * den >= (col("size_l") + col("size_r") - col("inter")) * num)
-      .select("doc_id_l", "doc_id_r", "inter", "size_l", "size_r")
   }
-
-  private def trigramPairs(s: SparkSession, dir: String): DataFrame =
-    trigramPairsFull(s, dir).select("doc_id_l", "doc_id_r")
 
   // ------------------------------------------------------------ oracle SQL
 

@@ -123,42 +123,17 @@ object Knn {
     * near vectors get near projections, so true neighbours sort adjacently)
     * and each member compares only with the next chainWidth members:
     * O(n·chainWidth) pairs per hot bucket, nothing dropped from coverage.
-    * The chain is [[graft.stages.PairGen.pairs]] with allPairsCap = 0: one
-    * key-partitioned sorted pass, streaming each hot bucket's chain with
-    * `chainWidth` ids held, no per-bucket window. */
+    * Both are one [[graft.stages.PairGen.pairs]] pass with allPairsCap =
+    * bucketCap: one key-partitioned sorted pass, streaming each hot
+    * bucket's chain with `chainWidth` ids held, no per-bucket window. */
   def lshTop1(spark: SparkSession, embeddings: DataFrame, cfg: EngineConfig,
               bits: Int = 8, bucketCap: Int = 256, chainWidth: Int = 4): DataFrame = {
-    val seed = cfg.seed
-    // bits sign planes + 1 extra plane for the hot-bucket ordering; planes
-    // materialize lazily per executor ([[planesFor]]) — no driver dim probe.
-    // One kernel pass yields bucket, multi-probe bucket (flip the sign bit
-    // whose hyperplane dot has the smallest |magnitude| — the vector sits
-    // closest to that boundary, so the flipped bucket is its likeliest
-    // second home) and hot-bucket sort
-    val keysUdf = udf((v: Seq[Float]) => {
-      val ps = planesFor(v.length, bits + 1, seed)
-      val (b, nearest) = signBits(ps, v, 0, bits)
-      (b.toInt, (b ^ (1L << nearest)).toInt, projection(ps(bits), v))
-    })
-    // cached (engine-tracked): the returned plan references this frame
-    // from counts, the cold/singles splits, the hot branch, and the final
-    // vec_id join — without the cache each copy re-runs the (bits+1)×dim
-    // dot products per vector, the most expensive narrow op in the path
-    val bucketed = graft.stages.IntermediateCaches.persistTracked(embeddings
-      .select(col("vec_id"), col("embedding"), keysUdf(col("embedding")).as("__k"))
-      .select(col("vec_id"), col("embedding"), col("__k._1").as("bucket"),
-        col("__k._2").as("probe"), col("__k._3").as("sort")))
+    val bucketed = bucketRows(embeddings, cfg, bits)
     // hot-bucket key set is tiny by construction (each holds > bucketCap
     // members ⇒ ≤ n/bucketCap keys) — broadcast-safe
     val counts = bucketed.groupBy("bucket").agg(count(lit(1)).as("__cnt"))
     val hotBuckets = counts.filter(col("__cnt") > bucketCap).select("bucket")
-
     val cold = bucketed.join(broadcast(hotBuckets), Seq("bucket"), "left_anti")
-    val coldPairs = cold
-      .join(cold.select(col("bucket"), col("vec_id").as("nid"), col("embedding").as("emb_b")),
-        Seq("bucket"))
-      .filter(col("vec_id") =!= col("nid"))
-      .select("vec_id", "embedding", "nid", "emb_b")
 
     // singleton multi-probe: a vector alone in its bucket has NO in-bucket
     // candidate and previously answered nn_id = -1. It probes the flipped
@@ -175,24 +150,44 @@ object Knn {
         Seq("bucket"))
       .select("vec_id", "embedding", "nid", "emb_b")
 
-    // width-k chain over each hot bucket's (projection, id) order: PairGen
-    // with allPairsCap = 0 chains every bucket it sees
-    val hotRows = bucketed.join(broadcast(hotBuckets), Seq("bucket"), "left_semi")
-      .select(col("bucket").as("key"), col("vec_id").as("id"), col("sort"))
-    val hotIdPairs = graft.stages.PairGen.pairs(hotRows, allPairsCap = 0, chainWidth = chainWidth)
-    val hotChain = withVectors(hotIdPairs, embeddings)
+    // all pairs of each cold bucket, the width-k chain over each hot
+    // bucket's (projection, id) order
+    val idPairs = graft.stages.PairGen.pairs(
+      bucketed.select(col("bucket").as("key"), col("vec_id").as("id"), col("sort")),
+      allPairsCap = bucketCap, chainWidth = chainWidth)
+    val inBucket = withVectors(idPairs, embeddings)
       .select(col("id_l").as("vec_id"), col("__el").as("embedding"),
         col("id_r").as("nid"), col("__er").as("emb_b"))
-    // each chained pair is candidate evidence for BOTH endpoints
-    val hotPairs = hotChain.unionByName(hotChain.select(
+    // each pair is candidate evidence for BOTH endpoints
+    val bothWays = inBucket.unionByName(inBucket.select(
       col("nid").as("vec_id"), col("emb_b").as("embedding"),
       col("vec_id").as("nid"), col("embedding").as("emb_b")))
 
-    top1(bucketed, coldPairs.unionByName(hotPairs).unionByName(probePairs))
+    top1(bucketed, bothWays.unionByName(probePairs))
+  }
+
+  /** (vec_id, embedding, bucket, probe, sort) from one kernel pass over
+    * `bits` sign planes + 1 sort plane (lazy per executor, [[planesFor]]):
+    * probe flips the sign bit of the smallest |dot| (the vector sits
+    * closest to that boundary: its likeliest second home). Cached
+    * (engine-tracked): [[lshTop1]] reads it from counts, the cold/singles
+    * splits, the PairGen rows and the final join — uncached, each copy
+    * re-runs the (bits+1)×dim dot products, the path's dearest narrow op. */
+  private[sim] def bucketRows(embeddings: DataFrame, cfg: EngineConfig, bits: Int): DataFrame = {
+    val seed = cfg.seed
+    val keysUdf = udf((v: Seq[Float]) => {
+      val ps = planesFor(v.length, bits + 1, seed)
+      val (b, nearest) = signBits(ps, v, 0, bits)
+      (b.toInt, (b ^ (1L << nearest)).toInt, projection(ps(bits), v))
+    })
+    graft.stages.IntermediateCaches.persistTracked(embeddings
+      .select(col("vec_id"), col("embedding"), keysUdf(col("embedding")).as("__k"))
+      .select(col("vec_id"), col("embedding"), col("__k._1").as("bucket"),
+        col("__k._2").as("probe"), col("__k._3").as("sort")))
   }
 
   /** (id_l, id_r) pairs with both ends' vectors, as `__el` and `__er`. */
-  private def withVectors(pairs: DataFrame, embeddings: DataFrame): DataFrame = {
+  private[sim] def withVectors(pairs: DataFrame, embeddings: DataFrame): DataFrame = {
     val e = embeddings.select(col("vec_id"), col("embedding"))
     pairs.join(e.select(col("vec_id").as("id_l"), col("embedding").as("__el")), "id_l")
       .join(e.select(col("vec_id").as("id_r"), col("embedding").as("__er")), "id_r")
@@ -204,7 +199,7 @@ object Knn {
     * ties to the SMALLEST nid — cosine ties are routine in a dedup corpus
     * (exact-duplicate embeddings) and bare max_by(nid, cos) keeps whichever
     * row the merge visits first, flipping nn_id across partitionings/reruns. */
-  private def top1(ids: DataFrame, candidates: DataFrame): DataFrame = {
+  private[sim] def top1(ids: DataFrame, candidates: DataFrame): DataFrame = {
     val best = candidates
       .withColumn("cos", GraftFunctions.cosineSim(col("embedding"), col("emb_b")))
       .groupBy("vec_id").agg(min_by(col("nid"), struct(negate(col("cos")), col("nid"))).as("nn_id"))

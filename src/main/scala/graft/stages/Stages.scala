@@ -58,29 +58,28 @@ object ExactDedup {
     * The holdout (id, master) pairs ride the narrow hash table, so the only
     * full-width data movement left is the survivors' own anti-join — text
     * never enters a shuffle key or a window sort. */
-  def splitByHash(docs: DataFrame, idCol: String = "id",
-                  persistHoldouts: Boolean = false): (DataFrame, DataFrame) = {
+  def splitByHash(docs: DataFrame, persistHoldouts: Boolean = false): (DataFrame, DataFrame) = {
     // cached (engine-tracked, 25 B/row): keyed feeds BOTH the group
     // aggregate and the holdout join below — uncached, each reference
     // re-ran the two full-text xxhash64 passes over the corpus (the
     // dominant narrow cost of this stage). At 10^12 docs the cache is
     // narrow-row MEMORY_AND_DISK spill; the alternative is re-hashing the
     // full corpus text per reference (guide §2.4: share one computation).
-    val keyed = IntermediateCaches.persistTracked(contentKeys(docs, idCol))
+    val keyed = IntermediateCaches.persistTracked(contentKeys(docs))
     val grp = keyed.groupBy("__h1", "__h2", "__hn")
-      .agg(min(col(idCol)).as("master_id"), count(lit(1)).as("__n"))
+      .agg(min(col("id")).as("master_id"), count(lit(1)).as("__n"))
     val holdouts0 = keyed
       .join(grp.filter(col("__n") > 1), Seq("__h1", "__h2", "__hn"))
-      .filter(col(idCol) =!= col("master_id"))
-      .select(col(idCol), col("master_id"))
+      .filter(col("id") =!= col("master_id"))
+      .select(col("id"), col("master_id"))
     val holdouts = if (persistHoldouts)
       IntermediateCaches.persistTracked(holdouts0)
     else holdouts0
-    val survivors = docs.join(holdouts.select(col(idCol)), Seq(idCol), "left_anti")
+    val survivors = docs.join(holdouts.select(col("id")), Seq("id"), "left_anti")
     (survivors, holdouts)
   }
 
-  /** (`idCol`, `__h1`, `__h2`, `__hn`): the content key of every row's `text`.
+  /** (`id`, `__h1`, `__h2`, `__hn`): the content key of every row's `text`.
     * Two independent 64-bit hashes: the salt literal goes FIRST, so the
     * second hash runs over the text with a genuinely different seed
     * (xxhash64 folds columns left-to-right with the running hash as seed
@@ -89,9 +88,9 @@ object ExactDedup {
     * __hn marker column, so null-text duplicates group together, join
     * with plain equality (no null-rejecting key), and stay distinct from
     * empty-string text — exactly the window plan's partition semantics. */
-  private def contentKeys(docs: DataFrame, idCol: String): DataFrame =
+  private def contentKeys(docs: DataFrame): DataFrame =
     docs.select(
-      col(idCol),
+      col("id"),
       xxhash64(coalesce(col("text"), lit(""))).as("__h1"),
       xxhash64(lit(0x9e3779b9L), coalesce(col("text"), lit(""))).as("__h2"),
       isnull(col("text")).as("__hn"))
@@ -103,7 +102,7 @@ object ExactDedup {
     * combined on the driver (a DataFrame aggregate runs its exchange as a
     * second job), and exact under task retries, unlike an observed metric. */
   def inputFingerprint(docs: DataFrame): String = {
-    val (hash, rows) = contentKeys(docs, "id")
+    val (hash, rows) = contentKeys(docs)
       .select(xxhash64(col("id"), col("__h1"), col("__h2"), col("__hn")))
       .rdd
       .aggregate((0L, 0L))((acc, r) => (acc._1 ^ r.getLong(0), acc._2 + 1),
@@ -124,11 +123,9 @@ object ExactDedup {
     * must not drift per path.
     *
     * @param survivorAssign (id, cluster_id) for every survivor
-    * @param holdouts frame with (`idCol`, master_id)
-    * @param idCol holdout id column name (q37/q39 pass "doc_id")
+    * @param holdouts frame with (id, master_id)
     * @return (id, cluster_id) covering survivors + holdouts */
-  def reattach(survivorAssign0: DataFrame, holdouts: DataFrame,
-               idCol: String = "id"): DataFrame = {
+  def reattach(survivorAssign0: DataFrame, holdouts: DataFrame): DataFrame = {
     // cached (engine-tracked, 16 B/row): the assignment frame is referenced
     // twice (the union branch and the holdout join) — uncached, its
     // docIds-join subtree executed once per reference in the caller's
@@ -137,7 +134,7 @@ object ExactDedup {
     val ha = holdouts
       .join(survivorAssign.withColumnRenamed("id", "__sid"),
         holdouts("master_id") === col("__sid"), "left")
-      .select(holdouts(idCol).as("id"),
+      .select(holdouts("id"),
         coalesce(col("cluster_id"), col("master_id")).as("cluster_id"))
     survivorAssign.unionByName(ha)
   }
@@ -165,7 +162,8 @@ object Signatures {
 
 /** Skew-aware candidate-pair generation from (key, id, sort) bucket rows.
   *
-  * Shared by LSH blocking, the winnowing substring pass and the ANN paths.
+  * The one within-bucket pairing operator: LSH blocking, [[sharedKeys]]
+  * (the winnowing substring pass and the n-gram queries) and the ANN paths.
   * This is the engine's answer to the reference's skew problem ("michael
   * b" block = 793,881 comparisons, `person_1/link_model_per.py:526-529`) —
   * required explicitly by the north_rule ("hot LSH buckets").
@@ -187,9 +185,9 @@ object PairGen {
 
   /** @param buckets columns: key:long, id:long, sort:long (non-null)
     * @param dropHotAbove if set, buckets larger than this are excluded
-    *        entirely (document-frequency pruning — used by the substring
-    *        pass where a high-df fingerprint is boilerplate, not evidence;
-    *        the LSH path never drops)
+    *        entirely (document-frequency pruning — used by [[sharedKeys]],
+    *        where a high-df key is boilerplate, not evidence; the LSH
+    *        paths never drop)
     * @param chainWidth how many following members each member of a hot
     *        bucket pairs with (1 = the consecutive chain)
     * @return pairs (id_l, id_r, key) with id_l < id_r.
@@ -225,6 +223,24 @@ object PairGen {
       .mapPartitions(rows => new BucketPairs(rows, allUpTo, decideAt, drops, chainWidth, chained))
       .toDF("id_l", "id_r", "key")
       .filter(col("id_l") =!= col("id_r"))
+  }
+
+  /** (id_l, id_r, shared, n_l, n_r): the keys two docs share, from (id,
+    * keys) rows whose `keys: array<long>` are distinct per doc; n = a
+    * doc's array size. Pairing is [[pairs]] over the exploded (key, id,
+    * sort = id) rows, so a key in > dropHotAbove docs counts for no pair.
+    * Cached (engine-tracked): the key arrays are each caller's expensive
+    * narrow kernel (winnowing, trigram hashing), read three times (the
+    * exploded rows and both ends' sizes). */
+  def sharedKeys(docKeys: DataFrame, allPairsCap: Int, dropHotAbove: Int): DataFrame = {
+    val keyed = IntermediateCaches.persistTracked(docKeys.select(col("id"), col("keys")))
+    val rows = keyed.select(col("id"), explode(col("keys")).as("key")).withColumn("sort", col("id"))
+    val n = keyed.select(col("id"), size(col("keys")).as("n"))
+    pairs(rows, allPairsCap, Some(dropHotAbove))
+      .groupBy("id_l", "id_r").agg(count(lit(1)).as("shared"))
+      .join(n.select(col("id").as("id_l"), col("n").as("n_l")), "id_l")
+      .join(n.select(col("id").as("id_r"), col("n").as("n_r")), "id_r")
+      .select("id_l", "id_r", "shared", "n_l", "n_r")
   }
 
   /** The per-partition pass of [[pairs]] over (key, sort, id) rows sorted
@@ -510,33 +526,16 @@ object Scoring {
   * reason "substring". */
 object Substring {
 
-  def edges(docs: DataFrame, cfg: EngineConfig): DataFrame = {
-    // winnowing is the most expensive narrow kernel in the pipeline
-    // (char-gram FNV over the full text + sliding-window min) and BOTH
-    // consumers below need it — compute it once per doc, cache the compact
-    // array form (~100 longs/doc, far smaller than the text), and derive
-    // the exploded bucket table and the per-doc counts from the cache
-    val withFps = IntermediateCaches.persistTracked(docs.select(
-        col("id"),
-        GraftFunctions.winnowFps(col("text"), cfg.winnowK, cfg.winnowWindow).as("__fps")))
+  def edges(docs: DataFrame, cfg: EngineConfig): DataFrame =
     // NOTE: no "low-fp docs can't form edges" pre-filter here — removing a
     // doc from the bucket table changes bucket cardinalities (df-cap
     // pruning decisions) and chain adjacency for the REMAINING docs, so
-    // the filter is not output-neutral at boundary corpora.
-    val fps = withFps.select(col("id"), explode(col("__fps")).as("key"))
-      // (id, key) is distinct by construction: winnow de-dups per doc
-      .withColumn("sort", col("id"))
-    // per-doc fingerprint counts for the containment-ratio test — computed
-    // narrowly from the array length (winnow emits distinct fps), not via a
-    // groupBy over the exploded table
-    val nFps = withFps.select(col("id"), size(col("__fps")).as("n_fps"))
-    val shared = PairGen.pairs(fps, cfg.allPairsCap, dropHotAbove = Some(cfg.substringDfCap))
-      .groupBy("id_l", "id_r").agg(count(lit(1)).as("shared_fps"))
-      .filter(col("shared_fps") >= cfg.substringMinFps)
-    shared
-      .join(nFps.select(col("id").as("id_l"), col("n_fps").as("n_l")), "id_l")
-      .join(nFps.select(col("id").as("id_r"), col("n_fps").as("n_r")), "id_r")
-      .filter(col("shared_fps") >= lit(cfg.substringMinRatio) * least(col("n_l"), col("n_r")))
-      .select(col("id_l").as("src"), col("id_r").as("dst"), col("shared_fps"))
-  }
+    // the filter is not output-neutral at boundary corpora. Winnowing
+    // emits distinct fingerprints per doc, as sharedKeys needs.
+    PairGen.sharedKeys(docs.select(col("id"),
+        GraftFunctions.winnowFps(col("text"), cfg.winnowK, cfg.winnowWindow).as("keys")),
+        cfg.allPairsCap, cfg.substringDfCap)
+      .filter(col("shared") >= cfg.substringMinFps)
+      .filter(col("shared") >= lit(cfg.substringMinRatio) * least(col("n_l"), col("n_r")))
+      .select(col("id_l").as("src"), col("id_r").as("dst"), col("shared").as("shared_fps"))
 }

@@ -120,6 +120,31 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  test("trigram pairs go through PairGen: no join or repartition on the gram string") {
+    val q = queries.Queries.queries("q20_ngram_jaccard")(spark, dir)
+    val o = q.queryExecution.optimizedPlan.toString
+    // the old plan self-joined the distinct (doc_id, g) grams on g after a
+    // repartition(g); the grams are now hashed keys inside PairGen
+    assert("\\bg#\\d+".r.findFirstIn(o).isEmpty, s"gram string column in the optimized plan:\n$o")
+    assert(!o.contains("RepartitionByExpression [g#"), s"repartition on the gram:\n$o")
+    val p = plan(q)
+    val onKey = "Exchange hashpartitioning\\(key#\\d+".r.findAllIn(p).length
+    assert(onKey == 1, s"expected one PairGen hash exchange on the key, got $onKey:\n$p")
+    Pipeline.clearIntermediateCaches(spark)
+  }
+
+  test("Substring.edges keeps its exchange and join counts") {
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id").as("id"), col("text"))
+    val p = plan(stages.Substring.edges(docs, model.EngineConfig.default))
+    // PairGen's key exchange and the pair count's; both per-doc count
+    // joins broadcast at this size
+    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
+    val joins = "(SortMerge|BroadcastHash|ShuffledHash|BroadcastNestedLoop)Join".r.findAllIn(p).length
+    assert((exchanges, joins) == ((2, 2)), s"got $exchanges hash exchanges, $joins joins:\n$p")
+    Pipeline.clearIntermediateCaches(spark)
+  }
+
   test("CC loop iteration: one hash exchange per star pass plus the stop test, no window or distinct") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (5L, 4L)).toDF("src", "dst")

@@ -37,6 +37,54 @@ class KnnSpec extends SparkSpec {
       .select("vec_id", "rank", "nid", "cos")
   }
 
+  /** [[Knn.lshTop1]]'s former pairing, the parity reference: a self-join
+    * on `bucket` over the cold buckets (≤ bucketCap members), PairGen's
+    * chain with allPairsCap = 0 over the hot ones, then the same singleton
+    * multi-probe and top-1 tail. */
+  private def lshTop1Reference(embeddings: DataFrame, bucketCap: Int, chainWidth: Int = 4,
+                               bits: Int = 8): DataFrame = {
+    val bucketed = Knn.bucketRows(embeddings, EngineConfig.default, bits)
+    val counts = bucketed.groupBy("bucket").agg(count(lit(1)).as("__cnt"))
+    val hotBuckets = counts.filter(col("__cnt") > bucketCap).select("bucket")
+    val cold = bucketed.join(broadcast(hotBuckets), Seq("bucket"), "left_anti")
+    val coldPairs = cold
+      .join(cold.select(col("bucket"), col("vec_id").as("nid"), col("embedding").as("emb_b")),
+        Seq("bucket"))
+      .filter(col("vec_id") =!= col("nid"))
+      .select("vec_id", "embedding", "nid", "emb_b")
+    val singles = bucketed
+      .join(broadcast(counts.filter(col("__cnt") === 1).select("bucket")),
+        Seq("bucket"), "left_semi")
+      .select(col("vec_id"), col("embedding"), col("probe").as("bucket"))
+    val probePairs = singles
+      .join(cold.select(col("bucket"), col("vec_id").as("nid"), col("embedding").as("emb_b")),
+        Seq("bucket"))
+      .select("vec_id", "embedding", "nid", "emb_b")
+    val hotRows = bucketed.join(broadcast(hotBuckets), Seq("bucket"), "left_semi")
+      .select(col("bucket").as("key"), col("vec_id").as("id"), col("sort"))
+    val hotIdPairs = graft.stages.PairGen.pairs(hotRows, allPairsCap = 0, chainWidth = chainWidth)
+    val hotChain = Knn.withVectors(hotIdPairs, embeddings)
+      .select(col("id_l").as("vec_id"), col("__el").as("embedding"),
+        col("id_r").as("nid"), col("__er").as("emb_b"))
+    val hotPairs = hotChain.unionByName(hotChain.select(
+      col("nid").as("vec_id"), col("emb_b").as("embedding"),
+      col("vec_id").as("nid"), col("embedding").as("emb_b")))
+    Knn.top1(bucketed, coldPairs.unionByName(hotPairs).unionByName(probePairs))
+  }
+
+  test("LSH top-1 equals the cold-join + hot-chain reference (all chained, default cap, planted)") {
+    val emb = clustered.select("vec_id", "embedding")
+    // cap 8 chains every 40-member center bucket; the default 256 chains none
+    for ((name, e, cap) <- Seq(("clustered", emb, 8), ("clustered", emb, 256), ("planted", planted, 256))) {
+      val got = Knn.lshTop1(spark, e, EngineConfig.default, bucketCap = cap)
+        .orderBy("vec_id").as[(Long, Long)].collect().toSeq
+      val want = lshTop1Reference(e, cap).orderBy("vec_id").as[(Long, Long)].collect().toSeq
+      assert(got.size == e.count() && got == want,
+        s"$name at bucketCap $cap: ${got.diff(want).take(5)} vs ${want.diff(got).take(5)}")
+    }
+    graft.Pipeline.clearIntermediateCaches(spark)
+  }
+
   test("brute-force topK: neighbours are same-cluster, ranks are dense") {
     val top3 = bruteTopK(clustered.select("vec_id", "embedding"), 3)
     val joined = top3

@@ -25,6 +25,17 @@ object PairGenOracle {
         (math.min(ids(i), ids(j)), math.max(ids(i), ids(j)), key)
       }
     }.filter(p => p._1 != p._2).sorted
+
+  /** Plain-Scala reference for [[PairGen.sharedKeys]] over (id, distinct
+    * keys) docs: [[pairs]] over the (key, id, sort = id) rows, counted per
+    * pair, with both docs' key counts. Sorted (id_l, id_r, shared, n_l, n_r). */
+  def sharedKeys(docs: Seq[(Long, Seq[Long])], allPairsCap: Int,
+                 dropHotAbove: Int): Seq[(Long, Long, Long, Int, Int)] = {
+    val n = docs.map { case (id, keys) => id -> keys.size }.toMap
+    val rows = docs.flatMap { case (id, keys) => keys.map(k => (k, id, id)) }
+    pairs(rows, allPairsCap, Some(dropHotAbove)).groupBy(p => (p._1, p._2)).toSeq
+      .map { case ((l, r), ps) => (l, r, ps.size.toLong, n(l), n(r)) }.sorted
+  }
 }
 
 /** [[PairGen.pairs]] equals [[PairGenOracle]] on random bucket tables:
@@ -70,6 +81,53 @@ class PairGenPropertySpec extends SparkSpec {
         c.cap, c.drop, c.width)
       .as[(Long, Long, Long)].collect().toSeq.sorted
     finally spark.conf.set(key, old)
+  }
+
+  private case class KeysCase(docs: Seq[(Long, Seq[Long])], cap: Int, drop: Int,
+                              inParts: Int, shuffleParts: Int)
+
+  /** Doc-key tables with one doc of no keys, one key held by exactly
+    * `drop` docs and one by `drop + 1`, plus random keys; the cap is mostly
+    * below `drop`, so the chain band runs. */
+  private val genKeysCase: Gen[KeysCase] = for {
+    drop <- Gen.choose(1, 6)
+    cap <- Gen.frequency(3 -> Gen.choose(0, drop - 1), 1 -> Gen.choose(drop, drop + 2))
+    inParts <- Gen.choose(1, 6)
+    shuffleParts <- Gen.choose(1, 6)
+    nDocs <- Gen.choose(drop + 1, drop + 10)
+    nRandom <- Gen.choose(0, 8)
+    // distinct keys; the first two get the `drop` and `drop + 1` holders
+    keys <- Gen.listOfN(nRandom + 2, Gen.oneOf(Gen.long, Gen.choose(-3L, 20L)))
+      .map(ks => (ks ++ Seq(Long.MinValue, Long.MaxValue)).distinct)
+    holders <- Gen.sequence[List[Seq[Int]], Seq[Int]](
+      (Seq(drop, drop + 1) ++ Seq.fill(nRandom)(-1)).map { m =>
+        val size = if (m > 0) Gen.const(m) else Gen.choose(1, nDocs)
+        size.flatMap(k => Gen.pick(k, 0 until nDocs)).map(_.toSeq)
+      })
+    idBase <- Gen.choose(-1000000L, 1000000L)
+  } yield {
+    val held = keys.zip(holders).flatMap { case (k, ds) => ds.map(_ -> k) }.groupMap(_._1)(_._2)
+    // doc nDocs holds no key: an empty array
+    val docs = (0 to nDocs).map(d => (idBase + d, held.getOrElse(d, Seq.empty)))
+    KeysCase(docs, cap, drop, inParts, shuffleParts)
+  }
+
+  test("PairGen.sharedKeys equals the plain-Scala oracle on random doc-key tables") {
+    val seed = new java.util.Random().nextLong()
+    val prop = Prop.forAllNoShrink(genKeysCase) { c =>
+      val key = "spark.sql.shuffle.partitions"
+      val old = spark.conf.get(key)
+      spark.conf.set(key, c.shuffleParts.toLong)
+      val got = try PairGen.sharedKeys(c.docs.toDF("id", "keys").repartition(c.inParts), c.cap, c.drop)
+          .as[(Long, Long, Long, Int, Int)].collect().toSeq.sorted
+        finally { spark.conf.set(key, old); graft.Pipeline.clearIntermediateCaches(spark) }
+      val want = PairGenOracle.sharedKeys(c.docs, c.cap, c.drop)
+      Prop(got == want) :| (s"cap=${c.cap} drop=${c.drop} parts=${c.inParts}/${c.shuffleParts} " +
+        s"docs=${c.docs}: missing ${want.diff(got).take(5)}, extra ${got.diff(want).take(5)}")
+    }
+    val params = Test.Parameters.default.withMinSuccessfulTests(30).withInitialSeed(Seed(seed))
+    val res = Test.check(params, prop)
+    assert(res.passed, s"initial seed ${seed}L: ${Pretty.pretty(res)}")
   }
 
   test("PairGen.pairs equals the plain-Scala oracle on random bucket tables") {
